@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * "would the bench numbers change under [[Sessions.local]]'s tuned
   * session (GraftExtensions, 64 MB broadcast threshold, ObjectHashAgg
   * fallback) instead of Bench's bare one?" — WITHOUT touching the driver
-  * contract surface (Bench.scala is unchanged; this main is additive and
-  * never run by the driver). Same data dir/core env vars, same three-pass
-  * min methodology, same per-query timing action.
+  * contract surface's session (this main is additive and never run by
+  * the driver). Same data dir/core env vars, and the same
+  * three-pass min timing ([[Bench.measure]]).
   */
 object BenchSessionAB {
   def main(args: Array[String]): Unit = {
@@ -18,25 +18,15 @@ object BenchSessionAB {
     val spark: SparkSession = Sessions.local(cpus, appName = "graft-bench-ab")
     Tables(spark, sfDir, "lineitem").count()
     operators.Firehose.metricsFromEvents(spark, sfDir).count()
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     val only = args.headOption.map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val pass1 = ordered.map { case (name, fn) => name -> timeOnce(fn) }.toMap
-    val pass2 = ordered.map { case (name, fn) => name -> timeOnce(fn) }.toMap
-    val results = ordered.map { case (name, fn) =>
-      name -> math.min(pass1(name), math.min(pass2(name), timeOnce(fn)))
-    }
-    def jsonMap(m: Seq[(String, Double)]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val slowest = results.sortBy(-_._2).take(5)
+    val m = Bench.measure(spark, sfDir, ordered)
+    import Bench.{jsonList, jsonMap}
+    val total = m.results.map(_._2).sum
+    val slowest = m.results.sortBy(-_._2).take(5)
     println(
-      s"""{"metric":"total_session_ab","kind":"summary","value":$total,"unit":"sec","sf":"$sfDir","n":${results.size},"slowest":${jsonMap(slowest)},"queries":${jsonMap(results)}}""")
+      s"""{"metric":"total_session_ab","kind":"summary","value":$total,"unit":"sec","sf":"$sfDir","n":${m.results.size},"failed":${jsonList(m.failed)},"slowest":${jsonMap(slowest)},"queries":${jsonMap(m.results)}}""")
     spark.stop()
   }
 }

@@ -244,21 +244,19 @@ object FirehoseApp {
 
     cfg.getOrElse("app.mode", "pull") match {
       case "push" =>
-        val q = Prometheus.pushSink(
+        val q = FirehoseStream.startGaugeQuery(spark, Prometheus.pushSink(
             gauges,
             cfg.getOrElse("prometheus.gateway", "http://localhost:9091"),
             cfg.getOrElse("prometheus.job", "graft"))
-          .option("checkpointLocation", checkpointDir)
-          .start()
+          .option("checkpointLocation", checkpointDir))
         Running(q, None, () => q.stop())
       case _ =>
         val registry = new Prometheus.Registry
         val server = Prometheus.startPullServer(
           registry, cfg.getInt("prometheus.listener.port", 0))
         println(s"[graft] /metrics listening on ${server.getAddress}")
-        val q = Prometheus.pullSink(gauges, registry)
-          .option("checkpointLocation", checkpointDir)
-          .start()
+        val q = FirehoseStream.startGaugeQuery(spark, Prometheus.pullSink(gauges, registry)
+          .option("checkpointLocation", checkpointDir))
         Running(q, Some(registry), () => { q.stop(); server.stop(0) })
     }
   }

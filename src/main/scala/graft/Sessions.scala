@@ -27,7 +27,11 @@ object Sessions {
       // default is sized for space-heavy collect_list buffers. graft's
       // typed buffers are ~100-byte fixed (ts, id, one value), so 64k
       // groups is ~10 MB/task — keeps the latest-per-series aggregations
-      // hash-shaped at real per-task series cardinalities
+      // hash-shaped at real per-task series cardinalities. The threshold
+      // is session-wide: it also governs map and array buffers
+      // (`any_value(labels)`, `collect_list`), whose size grows with the
+      // label set or the list, so a task with many such groups holds up to
+      // 64k of them in memory before it falls back to sorting
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (64 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")

@@ -405,6 +405,10 @@ object PromQlRecord {
       col("name"), col("series"), col("win_start").cast("string"))
     private def stateGk: Column = concat_ws(Sep, lit("S"), col("component"),
       col("name"), col("series"))
+    /** [[winGk]]/[[stateGk]] rendered on the driver: like `concat_ws`, a
+      * null part is skipped.
+      */
+    private def keyOf(parts: Option[String]*): String = parts.flatten.mkString(Sep)
 
     /** The engine's per-sample increase contribution, `prev` being the
       * series' previous value (null = first-ever sample).
@@ -517,8 +521,10 @@ object PromQlRecord {
       * discipline), the Spark aggregation otherwise. The driver fold
       * replicates the Spark spelling exactly: `min(struct(ts, id, net))`
       * compares ts, then id as UTF8 bytes (unsigned lexicographic —
-      * [[PromRegistry.utf8Gt]]), then net; fields are never null in the
-      * netted span (real samples, real group keys).
+      * [[PromRegistry.utf8Gt]]), then net. Timestamp, id and net are never
+      * null in the netted span (real samples); a null group column keys
+      * its own series and is skipped in the rendered state key, as
+      * `concat_ws` skips it.
       */
     private def perSeriesProbes(
         spark: SparkSession, netted: DataFrame, nettedRoot: String): Seq[Probe] =
@@ -536,7 +542,7 @@ object PromQlRecord {
           def lt2(a: (Long, String), b: (Long, String)): Boolean =
             a._1 < b._1 || (a._1 == b._1 && PromRegistry.utf8Gt(b._2, a._2))
           rows.foreach { r =>
-            val key = (r(0).get, r(1).get, r(2).get)
+            val key = (r(0).orNull, r(1).orNull, r(2).orNull)
             val ts = r(3).get.toLong
             val id = r(4).get
             val net = r(5).get.toLong
@@ -555,7 +561,8 @@ object PromQlRecord {
             acc(key) = (bad, first, math.max(max0, net))
           }
           acc.iterator.map { case ((co, na, se), (bad, first, maxNet)) =>
-            Probe(co, na, se, s"S$Sep$co$Sep$na$Sep$se", bad, first, maxNet)
+            Probe(co, na, se, keyOf(Some("S"), Option(co), Option(na), Option(se)),
+              bad, first, maxNet)
           }.toSeq
         case None =>
           netted
@@ -583,9 +590,9 @@ object PromQlRecord {
 
     /** The staged window-delta's rendered win-keys ([[winGk]]) —
       * driver-side from the landed stage files when metadata-sized, the
-      * Spark collect otherwise. The driver rendering mirrors `concat_ws`
-      * over never-null group columns: long `win_start` renders via
-      * toString = `cast(win_start AS string)`.
+      * Spark collect otherwise. The driver rendering mirrors `concat_ws`:
+      * long `win_start` renders via toString = `cast(win_start AS string)`,
+      * and a null group column is skipped.
       */
     private def winKeysOf(
         spark: SparkSession, deltas: DataFrame, deltasRoot: String): Seq[String] =
@@ -593,9 +600,7 @@ object PromQlRecord {
         spark, new java.io.File(deltasRoot, "d").getAbsolutePath,
         Seq("component", "name", "series", "win_start")) match {
         case Some(rows) =>
-          rows.map(r =>
-            s"W$Sep${r(0).get}$Sep${r(1).get}$Sep${r(2).get}$Sep${r(3).get}")
-            .sorted
+          rows.map(r => keyOf(Some("W") +: r: _*)).sorted
         case None =>
           deltas.select(winGk).collect().map(_.getString(0)).toSeq.sorted
       }

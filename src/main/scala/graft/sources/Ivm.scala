@@ -48,6 +48,17 @@ private[graft] object Ivm {
     def dropAll(): Unit = synchronized(roots.toSeq).foreach(graft.Tables.dropStage)
   }
 
+  /** The threads [[inParallel]] runs its second arm on: daemon threads,
+    * so a pending arm never holds the JVM open, and not the common
+    * ForkJoinPool, which blocking Spark actions would share with
+    * unrelated work.
+    */
+  private lazy val armPool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-ivm-arm")
+    t.setDaemon(true)
+    t
+  }
+
   /** Run two INDEPENDENT pieces of refresh work concurrently (guide §2.6
     * — actions are only sequential because driver code calls them
     * sequentially; submitting the second from another thread lets its
@@ -55,17 +66,35 @@ private[graft] object Ivm {
     * where the two sides share no data dependency and their effects are
     * order-independent (separate stage landings, separate key collects),
     * so the refresh outcome is bit-identical to the sequential order.
+    *
+    * When `a` throws, `b` is awaited before the exception surfaces (its
+    * own failure rides along as a suppressed exception): the owner's
+    * [[Stages.dropAll]] must see every stage `b` lands, and must not
+    * delete one while `b` is still writing it.
     */
   def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-    val fb = java.util.concurrent.CompletableFuture.supplyAsync { () =>
-      session.foreach(org.apache.spark.sql.SparkSession.setActiveSession)
-      b
-    }
-    val ra = a
-    (ra, try fb.join()
-    catch { case e: java.util.concurrent.CompletionException =>
-      throw Option(e.getCause).getOrElse(e) })
+    import org.apache.spark.sql.SparkSession
+    val session = SparkSession.getActiveSession
+    val fb = armPool.submit(new java.util.concurrent.Callable[B] {
+      def call(): B = {
+        session match {
+          case Some(s) => SparkSession.setActiveSession(s)
+          case None => SparkSession.clearActiveSession()
+        }
+        b
+      }
+    })
+    def joinB(): B =
+      try fb.get()
+      catch { case e: java.util.concurrent.ExecutionException =>
+        throw Option(e.getCause).getOrElse(e) }
+    val ra =
+      try a
+      catch { case e: Throwable =>
+        try joinB() catch { case eb: Throwable => e.addSuppressed(eb) }
+        throw e
+      }
+    (ra, joinB())
   }
 
   /** The staged-relation data dir [[graft.Tables.materializeStageOwned]]

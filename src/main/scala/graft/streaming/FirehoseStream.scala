@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.functions.IeeeLanes
 import graft.operators.Firehose
@@ -507,7 +507,10 @@ object SubqueryCore {
   *    batch path uses
   *  - `Gauge.set` per series → `flatMapGroupsWithState` latest-value state
   *  - Guava cache 10-min idle eviction (AbstractPrometheusFirehose.java:19-29)
-  *    → `EventTimeTimeout` on the group state
+  *    → `EventTimeTimeout` on the group state. The gauge query runs one
+  *    micro-batch per input ([[startGaugeQuery]]), so an idle series is
+  *    evicted at the next data batch, lazily, as the Guava cache evicts
+  *    on its next access
   *  - per-poll `endOfSet()` push (PrometheusPusher.java:63-70) → `foreachBatch`
   *    sink rendering/pushing the exposition text
   */
@@ -581,7 +584,11 @@ object FirehoseStream {
     *
     * State per series is one `GaugeState` — bounded by live series
     * cardinality exactly like the reference's gauge registry, and expired by
-    * event-time timeout exactly like its 10-minute idle eviction.
+    * event-time timeout exactly like its 10-minute idle eviction. Started
+    * through [[startGaugeQuery]], the query runs one micro-batch per input:
+    * a timed-out series is removed at the next data batch, not in an extra
+    * watermark-only batch. Eviction emits no rows, so the output is the same
+    * either way.
     */
   def gaugeLatest(
       metrics: DataFrame,
@@ -612,6 +619,38 @@ object FirehoseStream {
           }
       }
   }
+
+  private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val noDataBatchesLock = new Object
+
+  /** Start a [[gaugeLatest]] sink with Spark's no-data micro-batches off
+    * for this query only. A no-data batch runs only because the watermark
+    * moved; in the gauge it can only evict idle series and emits nothing,
+    * yet it pays a whole epoch (offset log, state-store commits, commit
+    * log, an empty sink call). Without it each input costs one batch.
+    *
+    * `start()` clones the session's SQL conf, so the setting is scoped to
+    * that one call: the caller's value (or its absence) is restored after
+    * `start()`, also when it throws. The lock serialises the
+    * set–start–restore window, so concurrent gauge starts never see or
+    * restore each other's value; a stream started elsewhere on the same
+    * session during that window (one `start()` long) would read it too.
+    * Every other streaming query keeps its no-data batches: the
+    * closed-window operators emit on a watermark advance without new
+    * traffic.
+    */
+  def startGaugeQuery(
+      spark: SparkSession, writer: DataStreamWriter[GaugeOut]): StreamingQuery =
+    noDataBatchesLock.synchronized {
+      val conf = spark.conf
+      val old = conf.getAll.get(NoDataBatchesKey)
+      conf.set(NoDataBatchesKey, "false")
+      try writer.start()
+      finally old match {
+        case Some(v) => conf.set(NoDataBatchesKey, v)
+        case None => conf.unset(NoDataBatchesKey)
+      }
+    }
 
   /** Streaming counter increase — the incremental sibling of the batch
     * [[graft.operators.Firehose.counterIncrease]] (Prometheus `increase()`).

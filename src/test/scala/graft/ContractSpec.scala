@@ -32,6 +32,20 @@ class ContractSpec extends SparkSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("a failing bench query is listed as failed and left out of the timings") {
+    var runs = 0
+    val ordered = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "ok" -> ((s, _) => s.range(3).toDF()),
+      "broken" -> ((_, _) => { runs += 1; throw new IllegalStateException("boom") }))
+    val m = Bench.measure(spark, sfDir, ordered)
+    assert(m.failed === Seq("broken"))
+    assert(m.results.map(_._1) === Seq("ok"))
+    assert(m.pass1.map(_._1) === Seq("ok"))
+    assert(runs === 1, "a failed query is not run again")
+    assert(Bench.jsonList(m.failed) === "[\"broken\"]")
+  }
+
   test("the flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -5,6 +5,10 @@ import java.net.http.{HttpClient, HttpRequest}
 import java.net.http.HttpResponse.BodyHandlers
 import java.nio.file.Files
 
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
+
+import graft.streaming.{FirehoseStream, Prometheus}
+
 class FirehoseAppSpec extends SparkSuite {
 
   test("CLI args layer into config with reference semantics (-j seeds group id)") {
@@ -229,5 +233,135 @@ class FirehoseAppSpec extends SparkSuite {
       assert(running.registry.get.render
         .contains("app_bytes_total{user=\"u9\"} 3.5 1000000"))
     } finally running.stop()
+  }
+
+  private def metricJson(id: String, name: String, ts: Long, user: String, value: Double): String =
+    s"""{"id":"$id","name":"$name","timestamp":$ts,"component":"app",""" +
+      s""""tags":{"user":"$user","unit":"bytes"},"value":$value,""" +
+      s""""window":{"from":${ts - 60},"to":$ts,"interval":60}}"""
+
+  /** Three inputs under a 30 s watermark and a 60 s TTL. After file 2 the
+    * watermark (1070 s) passes u1's timeout (1060 s; u1 is idle from file
+    * 2 on). Both files after the first carry a late row inside the
+    * watermark, and file 2 one beyond it (dropped).
+    */
+  private val gaugeFiles = {
+    def g(id: String, ts: Long, user: String, value: Double) = metricJson(id, "g", ts, user, value)
+    Seq(
+      Seq(g("1", 1000, "u1", 1.5), g("2", 1000, "u2", 2.5)),
+      Seq(g("3", 1100, "u2", 3.5), g("4", 975, "u2", 9.5),
+        g("5", 900, "u2", 99.5), g("6", 1090, "u3", 5.5)),
+      Seq(g("7", 1200, "u2", 4.5), g("8", 1080, "u2", 8.5), g("9", 1150, "u3", 6.5)))
+  }
+
+  /** The progress of the micro-batches a query ran (idle progress
+    * reports, which run no batch, have no `addBatch` phase).
+    */
+  private def batches(q: StreamingQuery) =
+    q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
+
+  /** Feed [[gaugeFiles]] one at a time, draining after each; returns the
+    * scrape body and the query's per-batch progress.
+    */
+  private def runGauge(start: (String, String) => (StreamingQuery, Prometheus.Registry, () => Unit))
+      : (String, Seq[StreamingQueryProgress]) = {
+    val dir = Files.createTempDirectory("graft-gauge1").toFile
+    val chk = Files.createTempDirectory("graft-gauge1chk").toString
+    val (q, registry, stop) = start(dir.getAbsolutePath, chk)
+    try {
+      gaugeFiles.zipWithIndex.foreach { case (lines, i) =>
+        Files.write(dir.toPath.resolve(s"f$i.json"), lines.mkString("\n").getBytes)
+        q.processAllAvailable()
+      }
+      (registry.render, batches(q))
+    } finally stop()
+  }
+
+  private val NoData = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  test("the app's gauge query runs one batch per input and evicts at the next data batch") {
+    val (body, progress) = runGauge { (dir, chk) =>
+      val r = FirehoseApp.start(spark, FirehoseApp.buildConfig(Array(
+        "--mode", "pull", "--source", dir,
+        "-c", "gauge.watermark=30 seconds,gauge.ttl.seconds=60")), chk)
+      (r.query, r.registry.get, r.stop)
+    }
+    assert(progress.map(_.numInputRows) === Seq(2L, 4L, 3L),
+      s"one batch per file: ${progress.map(_.json)}")
+    val state = progress.map(_.stateOperators.head)
+    assert(state.map(_.numRowsRemoved) === Seq(0L, 0L, 1L),
+      "idle u1 is evicted by file 3's data batch")
+    assert(state.last.numRowsTotal === 2L)
+    // the same files with no-data batches on (the plain start): two
+    // batches per file, the same scrape
+    val (bodyOn, progressOn) = runGauge { (dir, chk) =>
+      val registry = new Prometheus.Registry
+      val q = Prometheus.pullSink(
+          FirehoseStream.gaugeLatest(
+            FirehoseStream.fromJsonFiles(spark, dir),
+            watermarkDelay = "30 seconds", ttlMs = 60000L), registry)
+        .option("checkpointLocation", chk).start()
+      (q, registry, () => q.stop())
+    }
+    assert(progressOn.length === 6)
+    assert(progressOn.map(_.stateOperators.head.numRowsRemoved).sum > 0)
+    assert(body === bodyOn)
+    assert(body.contains("app_g{user=\"u1\"} 1.5 1000000"))
+    assert(body.contains("app_g{user=\"u2\"} 4.5 1200000"))
+    assert(body.contains("app_g{user=\"u3\"} 6.5 1150000"))
+  }
+
+  test("the gauge start restores the session's no-data setting, also when start fails") {
+    def gauges = FirehoseStream.gaugeLatest(
+      FirehoseStream.fromJsonFiles(
+        spark, Files.createTempDirectory("graft-gauge2").toString))
+    def startAndStop(): Unit = FirehoseStream.startGaugeQuery(spark,
+      gauges.writeStream.format("memory").queryName("gauge_conf_t").outputMode("update")
+        .option("checkpointLocation", Files.createTempDirectory("graft-gauge2chk").toString))
+      .stop()
+    def failingStart(): Unit = intercept[Exception] {
+      FirehoseStream.startGaugeQuery(spark,
+        gauges.writeStream.format("graft-no-such-sink"))
+    }
+    assert(!spark.conf.getAll.contains(NoData))
+    startAndStop()
+    assert(!spark.conf.getAll.contains(NoData))
+    failingStart()
+    assert(!spark.conf.getAll.contains(NoData))
+    spark.conf.set(NoData, "true")
+    try {
+      startAndStop()
+      assert(spark.conf.get(NoData) === "true")
+      failingStart()
+      assert(spark.conf.get(NoData) === "true")
+    } finally spark.conf.unset(NoData)
+  }
+
+  test("a closed-window query started after the app still closes a window with no new input") {
+    val appDir = Files.createTempDirectory("graft-gauge3").toFile
+    val app = FirehoseApp.start(spark, FirehoseApp.buildConfig(Array(
+      "--mode", "pull", "--source", appDir.getAbsolutePath)),
+      Files.createTempDirectory("graft-gauge3chk").toString)
+    val dir = Files.createTempDirectory("graft-gauge3inc").toFile
+    // width 100 s, 0 s watermark, 1 s TTL: the one file moves the
+    // watermark to 250 s, past u1's timeout (51 s) and window 0's end; only
+    // the watermark-only batch that follows can close window 0
+    Files.write(dir.toPath.resolve("b1.json"), Seq(
+      metricJson("1", "c_total", 10, "u1", 10.0),
+      metricJson("2", "c_total", 50, "u1", 16.0),
+      metricJson("3", "c_total", 250, "u2", 1.0)).mkString("\n").getBytes)
+    val q = FirehoseStream.counterIncreaseClosed(
+        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+        widthSec = 100, watermarkDelay = "0 seconds", ttlMs = 1000L)
+      .writeStream.format("memory").queryName("inc_after_app_t").outputMode("update")
+      .option("checkpointLocation", Files.createTempDirectory("graft-gauge3incchk").toString)
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(batches(q).length === 2)
+      val rows = spark.table("inc_after_app_t").collect()
+        .map(r => (r.getAs[String]("series"), r.getAs[Long]("win_start"), r.getAs[Double]("increase")))
+      assert(rows.toSeq === Seq(("user=u1", 0L, 6.0)))
+    } finally { q.stop(); app.stop() }
   }
 }

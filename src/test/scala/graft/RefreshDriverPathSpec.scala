@@ -16,7 +16,8 @@ import graft.sources.{MaterializedJoinView, MaterializedView, Versioned}
   *  2. the staged-relation DRIVER reads (deltaKeyFlags /
   *     survivorsAndZeroed / the counter probes): forcing the Spark
   *     fallback via `spark.graft.driverCommitScanMaxBytes = 0` must
-  *     produce bit-identical views to the driver fast path;
+  *     produce bit-identical views to the driver fast path, null group
+  *     columns included;
   *  3. an unreadable staging dir is a FALLBACK, not an empty read.
   */
 class RefreshDriverPathSpec extends SparkSuite {
@@ -42,7 +43,8 @@ class RefreshDriverPathSpec extends SparkSuite {
     */
   private def mvLifecycle(): Set[(String, Long, Double, Double, Double)] = {
     val src = tmp("rdp-src"); val view = tmp("rdp-view")
-    val all = (1L to 60L).map(k => (k, s"g${k % 7}", k * 1.5))
+    // group g6 is a null key
+    val all = (1L to 60L).map(k => (k, if (k % 7 == 6) null else s"g${k % 7}", k * 1.5))
     Versioned.appendCommit(
       all.filter(_._1 % 3 != 0).toDF("k", "g", "x").coalesce(2), src,
       bloomCols = Seq("k"))
@@ -64,7 +66,7 @@ class RefreshDriverPathSpec extends SparkSuite {
   private def mvjLifecycle(): Set[(String, Long, Double)] = {
     val fact = tmp("rdp-fact"); val dim = tmp("rdp-dim"); val view = tmp("rdp-mvj")
     val facts = (1L to 50L).map(k => (k, k % 11, k * 2.0))
-    val dims = (0L to 10L).map(j => (j, s"s${j % 4}"))
+    val dims = (0L to 10L).map(j => (j, if (j == 10) null else s"s${j % 4}"))
     Versioned.appendCommit(facts.filter(_._1 % 2 == 1).toDF("fk", "jk", "p")
       .coalesce(2), fact, bloomCols = Seq("jk", "fk"))
     Versioned.appendCommit(dims.toDF("jk", "seg").coalesce(1), dim,
@@ -87,8 +89,11 @@ class RefreshDriverPathSpec extends SparkSuite {
 
   private def counterLifecycle(): Set[(String, Long, Double)] = {
     val src = tmp("rdp-csrc"); val view = tmp("rdp-cview")
+    // null group columns: u3's samples have no labels (a null series),
+    // u4's no component
     def m(range: Seq[Long]) = range.map(t =>
-      ("app", "view_total", Map("user" -> s"u${t % 5}"), t, s"e$t",
+      (if (t % 5 == 4) null else "app", "view_total",
+        if (t % 5 == 3) null else Map("user" -> s"u${t % 5}"), t, s"e$t",
         (t % 17).toDouble))
       .toDF("component", "name", "labels", "timestamp", "id", "value")
     Versioned.appendCommit(m(1L to 40L).coalesce(2), src)
