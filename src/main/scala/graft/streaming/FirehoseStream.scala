@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -229,9 +229,10 @@ case class SubqueryOut(
     n_points: Long, min_rate: Double, max_rate: Double, avg_rate: Double)
 
 /** The pure per-series counter-increase fold, shared by the
-  * `flatMapGroupsWithState` and `transformWithState` operators and
-  * property-tested directly (random sample streams, random batch splits,
-  * random in-watermark lateness — no streaming query needed).
+  * `flatMapGroupsWithState` operators here and the closed-window
+  * `transformWithState` operators of [[FirehoseTws]], and property-tested
+  * directly (random sample streams, random batch splits, random
+  * in-watermark lateness — no streaming query needed).
   */
 object IncreaseCore {
 
@@ -318,7 +319,7 @@ object IncreaseCore {
   /** Flush at true stream end: everything still buffered or finalized
     * becomes closed output (no more data can arrive for this series). NOT
     * safe mid-stream — a series that resumes after a force-close would
-    * re-emit the same window; [[FirehoseStream.counterIncreaseClosed]]
+    * re-emit the same window; [[FirehoseTws.counterIncreaseClosed]]
     * instead keeps open windows in state until the watermark closes them.
     */
   def flush(st: IncreaseState, widthSec: Long): Seq[(Long, Double)] =
@@ -416,11 +417,11 @@ object ResetsCore {
   }
 }
 
-/** Pure emit/prune step for the multiwindow ratio alert, shared by the
-  * `flatMapGroupsWithState` and `transformWithState` ports so the two can
-  * never diverge: given the parked closed-short-window totals per counter
-  * and the watermark, emit every ratio row of long windows the watermark
-  * has closed and keep the rest parked.
+/** Pure emit/prune step for the multiwindow ratio alert
+  * ([[FirehoseStream.ratioAlertClosed]]): given the parked
+  * closed-short-window totals per counter and the watermark, emit every
+  * ratio row of long windows the watermark has closed and keep the rest
+  * parked.
   */
 object RatioCore {
   def longWinOf(shortWin: Long, longSec: Long): Long =
@@ -458,10 +459,11 @@ object RatioCore {
 }
 
 /** Pure emit/prune step for the streaming subquery, shared by the
-  * `flatMapGroupsWithState` sibling and the `transformWithState` port so
-  * the two cannot diverge: emit the aggregate of every outer window the
-  * watermark has closed (batch arithmetic: quantized-decimal numerator in
-  * window order, one divide), keep the rest parked.
+  * Update-mode [[FirehoseStream.subqueryOverTimeClosed]] and the chainable
+  * [[FirehoseTws.subqueryOverTimeChained]] so the two cannot diverge: emit
+  * the aggregate of every outer window the watermark has closed (batch
+  * arithmetic: quantized-decimal numerator in window order, one divide),
+  * keep the rest parked.
   */
 object SubqueryCore {
   def emitAndPrune(
@@ -513,6 +515,11 @@ object SubqueryCore {
   *    on its next access
   *  - per-poll `endOfSet()` push (PrometheusPusher.java:63-70) → `foreachBatch`
   *    sink rendering/pushing the exposition text
+  *
+  * Each stateful operator has one spelling. The per-series operators here
+  * use `flatMapGroupsWithState`, which needs no RocksDB provider; only the
+  * operators that a second stateful operator chains after live on
+  * `transformWithState`, in [[FirehoseTws]].
   */
 object FirehoseStream {
 
@@ -580,6 +587,49 @@ object FirehoseStream {
       .withWatermark("eventTime", watermarkDelay)
   }
 
+  /** [[keyedPoints]] grouped per series: the input of every per-series
+    * stateful operator.
+    */
+  private[streaming] def bySeries(metrics: DataFrame, watermarkDelay: String)
+      : KeyValueGroupedDataset[(String, String, String), GaugePoint] = {
+    val spark = metrics.sparkSession
+    import spark.implicits._
+    keyedPoints(metrics, watermarkDelay).groupByKey(p => (p.component, p.name, p.series))
+  }
+
+  /** The idle-eviction timeout: `ttlMs` past the watermark, or past the
+    * series' last sample (`lastTs`, seconds) before the first watermark.
+    */
+  private def armTimeout(state: GroupState[_], lastTs: Long, ttlMs: Long): Unit =
+    if (state.getCurrentWatermarkMs() > 0)
+      state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
+    else state.setTimeoutTimestamp(lastTs * 1000L + ttlMs)
+
+  /** The per-series fold of [[gaugeLatest]] and [[gaugeLatestBootstrapped]]:
+    * the latest sample by (timestamp, id) wins, and the series is dropped
+    * silently on timeout (registry eviction parity).
+    */
+  private def gaugeStep(ttlMs: Long)(
+      key: (String, String, String), points: Iterator[GaugePoint],
+      state: GroupState[GaugeState]): Iterator[GaugeOut] = {
+    val (component, name, series) = key
+    if (state.hasTimedOut) {
+      state.remove()
+      Iterator.empty
+    } else if (!points.hasNext) {
+      // a series only in the bootstrap snapshot, on the first batch:
+      // nothing new to publish, only its eviction to arm
+      state.getOption.foreach(s => armTimeout(state, s.lastTs, ttlMs))
+      Iterator.empty
+    } else {
+      val candidates = points.map(p => GaugeState(p.timestamp, p.id, p.value)) ++ state.getOption
+      val best = candidates.maxBy(s => (s.lastTs, s.lastId))
+      state.update(best)
+      armTimeout(state, best.lastTs, ttlMs)
+      Iterator.single(GaugeOut(component, name, series, best.lastValue, best.lastTs))
+    }
+  }
+
   /** Streaming latest-gauge state with TTL expiry.
     *
     * State per series is one `GaugeState` — bounded by live series
@@ -596,28 +646,40 @@ object FirehoseStream {
       ttlMs: Long = 10 * 60 * 1000L): Dataset[GaugeOut] = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
+    bySeries(metrics, watermarkDelay)
       .flatMapGroupsWithState[GaugeState, GaugeOut](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        case ((component, name, series), points, state: GroupState[GaugeState]) =>
-          if (state.hasTimedOut) {
-            // registry eviction parity: drop the series silently
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption
-            val candidates = points.map(p => GaugeState(p.timestamp, p.id, p.value)) ++ prev.iterator
-            val best = candidates.maxBy(s => (s.lastTs, s.lastId))
-            state.update(best)
-            if (state.getCurrentWatermarkMs() > 0) {
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
-            } else {
-              state.setTimeoutTimestamp(best.lastTs * 1000L + ttlMs)
-            }
-            Iterator.single(GaugeOut(component, name, series, best.lastValue, best.lastTs))
-          }
-      }
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(gaugeStep(ttlMs))
+  }
+
+  /** [[gaugeLatest]] warm-started from a landed batch gauge snapshot
+    * (e.g. `Firehose.gaugeLatest` over the landing table, or the PromQL
+    * registry's heads) — the bootstrap path a fresh deployment takes so the
+    * registry does not start empty and a stale first sample cannot regress
+    * below the landed state. Snapshot columns: (component, name, series,
+    * last_value, last_ts), one row per series.
+    *
+    * The snapshot seeds `GaugeState(last_ts, "", last_value)`: it carries
+    * no sample id, so a live sample with the same timestamp outranks it —
+    * bootstrap never beats real data it ties with. Spark applies the
+    * snapshot on the query's first batch only (a restart resumes from the
+    * checkpoint); a series only in the snapshot emits nothing and is
+    * evicted once the watermark passes `last_ts + ttl`.
+    */
+  def gaugeLatestBootstrapped(
+      metrics: DataFrame,
+      snapshot: DataFrame,
+      watermarkDelay: String = "10 minutes",
+      ttlMs: Long = 10 * 60 * 1000L): Dataset[GaugeOut] = {
+    val spark = metrics.sparkSession
+    import spark.implicits._
+    val init = snapshot
+      .select("component", "name", "series", "last_value", "last_ts")
+      .as[GaugeOut]
+      .groupByKey(g => (g.component, g.name, g.series))
+      .mapValues(g => GaugeState(g.last_ts, "", g.last_value))
+    bySeries(metrics, watermarkDelay)
+      .flatMapGroupsWithState[GaugeState, GaugeOut](
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout, init)(gaugeStep(ttlMs))
   }
 
   private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -676,8 +738,7 @@ object FirehoseStream {
       ttlMs: Long = 10 * 60 * 1000L): Dataset[IncreaseOut] = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
+    bySeries(metrics, watermarkDelay)
       .flatMapGroupsWithState[IncreaseState, IncreaseOut](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         case ((component, name, series), points, state: GroupState[IncreaseState]) =>
@@ -690,12 +751,7 @@ object FirehoseStream {
             val r = IncreaseCore.step(
               st, incoming, state.getCurrentWatermarkMs() / 1000L, widthSec)
             state.update(r.state)
-            val lastTs = (r.state.buffer.map(_.ts) :+ r.state.anchorTs).max
-            if (state.getCurrentWatermarkMs() > 0) {
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
-            } else {
-              state.setTimeoutTimestamp(lastTs * 1000L + ttlMs)
-            }
+            armTimeout(state, (r.state.buffer.map(_.ts) :+ r.state.anchorTs).max, ttlMs)
             r.running.iterator.map { case (win, acc) =>
               IncreaseOut(component, name, series, win, acc)
             }
@@ -717,8 +773,7 @@ object FirehoseStream {
       ttlMs: Long = 10 * 60 * 1000L): Dataset[ResetsOut] = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
+    bySeries(metrics, watermarkDelay)
       .flatMapGroupsWithState[ResetsState, ResetsOut](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         case ((component, name, series), points, state: GroupState[ResetsState]) =>
@@ -730,76 +785,9 @@ object FirehoseStream {
             val incoming = points.map(p => CounterSample(p.timestamp, p.id, p.value)).toSeq
             val r = ResetsCore.step(st, incoming, state.getCurrentWatermarkMs() / 1000L)
             state.update(r.state)
-            val lastTs = (r.state.buffer.map(_.ts) :+ r.state.anchorTs).max
-            if (state.getCurrentWatermarkMs() > 0) {
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
-            } else {
-              state.setTimeoutTimestamp(lastTs * 1000L + ttlMs)
-            }
+            armTimeout(state, (r.state.buffer.map(_.ts) :+ r.state.anchorTs).max, ttlMs)
             Iterator.single(
               ResetsOut(component, name, series, r.out.resets, r.out.changes, r.out.n))
-          }
-      }
-  }
-
-  /** Closed-window counter increase: emits each (series, window) total
-    * exactly once, when the watermark guarantees the window can no longer
-    * change — the emission contract a downstream ledger or alerting rule
-    * wants (the Update-mode [[counterIncrease]] re-emits running totals).
-    * When an idle series' TTL fires, only watermark-closed windows are
-    * emitted; still-open windows stay in state until the watermark passes
-    * their end (the series may resume INSIDE an open window, and a
-    * force-close would emit that window twice — once partial, once after
-    * the resume). The residual state is bounded (an anchor plus open-window
-    * sums within the watermark horizon) and is removed as soon as its last
-    * window closes, so the TTL still bounds the registry. An evicted
-    * series that later resumes restarts its delta chain (first sample
-    * contributes 0), mirroring the reference's idle-eviction semantics.
-    */
-  def counterIncreaseClosed(
-      metrics: DataFrame,
-      widthSec: Long = 3600,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[IncreaseOut] = {
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .flatMapGroupsWithState[IncreaseState, IncreaseOut](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        case ((component, name, series), points, state: GroupState[IncreaseState]) =>
-          if (state.hasTimedOut) {
-            val wmSec = state.getCurrentWatermarkMs() / 1000L
-            val st = state.getOption.getOrElse(IncreaseCore.empty)
-            val r = IncreaseCore.step(st, Nil, wmSec, widthSec)
-            val openWins = (r.state.finalized.keys ++
-              r.state.buffer.map(s => s.ts - math.floorMod(s.ts, widthSec))).toSeq
-            if (openWins.isEmpty) state.remove()
-            else {
-              // open windows survive the TTL; wake when the earliest one's
-              // end passes the watermark (openWins.min + width > wmSec by
-              // construction, so this timestamp is legal)
-              state.update(r.state)
-              state.setTimeoutTimestamp((openWins.min + widthSec) * 1000L)
-            }
-            r.closed.iterator.map { case (win, acc) =>
-              IncreaseOut(component, name, series, win, acc)
-            }
-          } else {
-            val st = state.getOption.getOrElse(IncreaseCore.empty)
-            val incoming = points.map(p => CounterSample(p.timestamp, p.id, p.value)).toSeq
-            val r = IncreaseCore.step(
-              st, incoming, state.getCurrentWatermarkMs() / 1000L, widthSec)
-            state.update(r.state)
-            val lastTs = (r.state.buffer.map(_.ts) :+ r.state.anchorTs).max
-            if (state.getCurrentWatermarkMs() > 0) {
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
-            } else {
-              state.setTimeoutTimestamp(lastTs * 1000L + ttlMs)
-            }
-            r.closed.iterator.map { case (win, acc) =>
-              IncreaseOut(component, name, series, win, acc)
-            }
           }
       }
   }
@@ -824,8 +812,7 @@ object FirehoseStream {
       ttlMs: Long = 10 * 60 * 1000L): Dataset[AbsentOut] = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
+    bySeries(metrics, watermarkDelay)
       .flatMapGroupsWithState[AbsentState, AbsentOut](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         case ((component, name, series), points, state: GroupState[AbsentState]) =>
@@ -867,8 +854,8 @@ object FirehoseStream {
     *
     * One stateful operator keyed by (component, series): each counter name
     * runs its own [[IncreaseCore]] fold (the same late-data-correct shared
-    * fold as [[counterIncreaseClosed]], so closure is watermark-synchronous
-    * across the two names), and the closed short-window totals are parked
+    * fold as [[FirehoseTws.counterIncreaseClosed]], so closure is
+    * watermark-synchronous across the two names), and the closed short-window totals are parked
     * until the watermark passes the END of their enclosing long window — at
     * which point every short ratio AND the long ratio are final, and the
     * long window's rows emit exactly once. Mirrors the batch semantics
@@ -969,8 +956,7 @@ object FirehoseStream {
     require(outerSec % innerSec == 0, "inner step must tile the outer range")
     val spark = metrics.sparkSession
     import spark.implicits._
-    keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
+    bySeries(metrics, watermarkDelay)
       .flatMapGroupsWithState[SubqueryState, SubqueryOut](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         case ((component, name, series), points, state: GroupState[SubqueryState]) =>

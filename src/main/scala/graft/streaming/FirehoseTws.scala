@@ -1,23 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
+import java.sql.Timestamp
 
-/** Spark 4 `transformWithState` ports of the gauge and counter-increase
-  * operators — the arbitrary-state API that replaces
-  * `flatMapGroupsWithState` (typed composite state: value/list/map per key,
-  * explicit event-time timers, state-schema evolution, RocksDB-only).
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorHandle, TTLConfig, TimeMode, TimerValues, ValueState}
+
+/** The stateful operators that run on Spark 4's `transformWithState`
+  * (TWS) API.
   *
-  * Same semantics as [[FirehoseStream.gaugeLatest]] /
-  * [[FirehoseStream.counterIncrease]] (both spec'd against each other), but
-  * the per-window increase accumulators become a native `MapState[win, acc]`
-  * and the in-watermark sample buffer a native `ListState` — the state
-  * store sees per-window/per-sample point updates instead of one re-written
-  * blob per series per batch, which is the difference that matters when
-  * state ≫ heap on RocksDB.
+  * Each stateful operator has one spelling. [[FirehoseStream]]'s
+  * `flatMapGroupsWithState` runs every operator whose callers use Update
+  * mode or do not chain: it needs no RocksDB provider, and `FirehoseApp`
+  * runs it. TWS stays only where Spark requires it: a second stateful
+  * operator may follow the first only on a declared event-time column
+  * (the `eventTimeColumnName` overload), which `flatMapGroupsWithState`
+  * lacks. So this object holds the `PromQlStream.compileAlert` chain —
+  * [[counterIncreaseClosed]], [[subqueryOverTimeChained]],
+  * [[forDurationAlert]] and the `forStreak*` streaks — plus [[gapFill]],
+  * which has no other spelling. Every operator here requires the RocksDB
+  * state store provider (an API constraint).
   *
-  * Reference mapping unchanged: per-series latest value =
-  * AbstractPrometheusFirehose.java:40-51, 10-min idle eviction =
+  * The folds are the shared pure cores ([[IncreaseCore]],
+  * [[SubqueryCore]], [[GapFillCore]], [[KeepStreakCore]]); state is
+  * decomposed into typed handles (value/list/map per key) with explicit
+  * event-time timers. Reference mapping: 10-min idle eviction =
   * AbstractPrometheusFirehose.java:19-29 (event-time timers here).
   */
 object FirehoseTws {
@@ -25,460 +32,293 @@ object FirehoseTws {
   /** Series key: (component, name, series). */
   type SeriesKey = (String, String, String)
 
-  /** Latest-gauge processor: one `ValueState[GaugeState]` per series plus
-    * one live eviction timer (re-registered on update, so state carries at
-    * most one timer per series). Extends the initial-state base so the
-    * bootstrapped variant shares all row-handling logic; plain
-    * `transformWithState` without an initial relation simply never calls
-    * [[handleInitialState]].
+  /** A key's one event-time timer, tracked in a `ValueState` so a re-arm
+    * replaces it: state carries at most one timer per key.
     */
-  class GaugeProcessor(ttlMs: Long)
-      extends StatefulProcessorWithInitialState[SeriesKey, GaugePoint, GaugeOut, GaugeOut] {
-    @transient private var state: ValueState[GaugeState] = _
-    @transient private var timerTs: ValueState[Long] = _
+  private[streaming] final class KeyTimer(handle: StatefulProcessorHandle) {
+    private val at = handle.getValueState[Long]("timer", Encoders.scalaLong, TTLConfig.NONE)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      state = getHandle.getValueState[GaugeState](
-        "gauge", Encoders.product[GaugeState], TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timer", Encoders.scalaLong, TTLConfig.NONE)
+    def arm(whenMs: Long): Unit = {
+      if (at.exists()) handle.deleteTimer(at.get())
+      handle.registerTimer(whenMs)
+      at.update(whenMs)
     }
 
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    /** Warm-start from a landed batch snapshot (the recovery path a fresh
-      * deployment takes: the registry resumes from the landed gauge table
-      * instead of empty). The snapshot carries no sample id, so a live
-      * sample with the same timestamp outranks the bootstrapped value —
-      * bootstrap never beats real data it ties with.
+    /** The idle-eviction timer: `ttlMs` past the watermark, or past
+      * `fallbackMs` before the first watermark exists.
       */
-    override def handleInitialState(
-        key: SeriesKey, initial: GaugeOut, timers: TimerValues): Unit = {
-      state.update(GaugeState(initial.last_ts, "", initial.last_value))
-      armTimer(initial.last_ts * 1000L + ttlMs)
+    def armIdle(timers: TimerValues, fallbackMs: Long, ttlMs: Long): Unit = {
+      val wm = timers.getCurrentWatermarkInMs()
+      arm((if (wm > 0) wm else fallbackMs) + ttlMs)
     }
 
-    override def handleInputRows(
-        key: SeriesKey,
-        rows: Iterator[GaugePoint],
-        timers: TimerValues): Iterator[GaugeOut] = {
-      val prev = if (state.exists()) Some(state.get()) else None
-      val candidates =
-        rows.map(p => GaugeState(p.timestamp, p.id, p.value)).toSeq ++ prev
-      if (candidates.isEmpty) Iterator.empty
-      else {
-        val best = candidates.maxBy(s => (s.lastTs, s.lastId))
-        state.update(best)
-        val wm = timers.getCurrentWatermarkInMs()
-        armTimer((if (wm > 0) wm else best.lastTs * 1000L) + ttlMs)
-        Iterator.single(GaugeOut(key._1, key._2, key._3, best.lastValue, best.lastTs))
-      }
-    }
+    /** Forget the timer that just fired. */
+    def fired(): Unit = at.clear()
 
-    override def handleExpiredTimer(
-        key: SeriesKey,
-        timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[GaugeOut] = {
-      // registry eviction parity: drop the idle series silently
-      state.clear()
-      timerTs.clear()
-      Iterator.empty
-    }
+    def cancel(): Unit = if (at.exists()) { handle.deleteTimer(at.get()); at.clear() }
   }
 
-  /** Counter-increase processor — the same watermark-split algorithm as
-    * [[FirehoseStream.counterIncrease]] (buffer the mutable region, re-fold
-    * each batch, freeze deltas once the watermark passes), but with the
-    * state decomposed into native typed handles: the in-watermark samples
-    * are a `ListState` (append-only per batch until a freeze), the
-    * finalized per-window sums a `MapState` keyed by window start (point
-    * reads/writes, pruned key-by-key once a window can no longer change),
-    * and the anchor a `ValueState`.
-    */
-  class IncreaseProcessor(widthSec: Long, ttlMs: Long)
-      extends StatefulProcessor[SeriesKey, GaugePoint, IncreaseOut] {
-    @transient private var anchor: ValueState[CounterSample] = _
-    @transient private var buffer: ListState[CounterSample] = _
-    @transient private var finalized: MapState[Long, Double] = _
-    @transient private var timerTs: ValueState[Long] = _
+  private def mapOf(ms: MapState[Long, Double]): Map[Long, Double] =
+    if (ms.exists()) ms.iterator().map(t => t._1 -> t._2).toMap else Map.empty
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      anchor = getHandle.getValueState[CounterSample](
-        "anchor", Encoders.product[CounterSample], TTLConfig.NONE)
-      buffer = getHandle.getListState[CounterSample](
-        "buffer", Encoders.product[CounterSample], TTLConfig.NONE)
-      finalized = getHandle.getMapState[Long, Double](
-        "finalized", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    override def handleInputRows(
-        key: SeriesKey,
-        rows: Iterator[GaugePoint],
-        timers: TimerValues): Iterator[IncreaseOut] = {
-      // assemble the logical state from the typed handles, run the shared
-      // fold, then write back only what changed (point updates for the
-      // MapState, which is the RocksDB advantage of this port)
-      val oldFinalized =
-        if (finalized.exists()) finalized.iterator().map(t => t._1 -> t._2).toMap
-        else Map.empty[Long, Double]
-      val anchorOpt = if (anchor.exists()) Some(anchor.get()) else None
-      val st = IncreaseState(
-        hasAnchor = anchorOpt.isDefined,
-        anchorTs = anchorOpt.map(_.ts).getOrElse(0L),
-        anchorId = anchorOpt.map(_.id).getOrElse(""),
-        anchorValue = anchorOpt.map(_.value).getOrElse(0.0),
-        buffer = if (buffer.exists()) buffer.get().toSeq else Nil,
-        finalized = oldFinalized)
-      val incoming = rows.map(p => CounterSample(p.timestamp, p.id, p.value)).toSeq
-      if (incoming.isEmpty && st.buffer.isEmpty) Iterator.empty
-      else {
-        val wmSec = timers.getCurrentWatermarkInMs() / 1000L
-        val r = IncreaseCore.step(st, incoming, wmSec, widthSec)
-        val ns = r.state
-        val out = r.running
-        ns.finalized.foreach { case (win, v) =>
-          if (!oldFinalized.get(win).contains(v)) finalized.updateValue(win, v)
-        }
-        oldFinalized.keys.filterNot(ns.finalized.contains).foreach(finalized.removeKey)
-        if (ns.hasAnchor) {
-          anchor.update(CounterSample(ns.anchorTs, ns.anchorId, ns.anchorValue))
-        }
-        buffer.clear()
-        if (ns.buffer.nonEmpty) buffer.put(ns.buffer.toArray)
-        val wm = timers.getCurrentWatermarkInMs()
-        val lastTs = (ns.buffer.map(_.ts) :+ ns.anchorTs).max
-        armTimer((if (wm > 0) wm else lastTs * 1000L) + ttlMs)
-        out.iterator.map { case (win, acc) =>
-          IncreaseOut(key._1, key._2, key._3, win, acc)
-        }
-      }
-    }
-
-    override def handleExpiredTimer(
-        key: SeriesKey,
-        timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[IncreaseOut] = {
-      anchor.clear()
-      buffer.clear()
-      finalized.clear()
-      timerTs.clear()
-      Iterator.empty
-    }
+  /** Point updates: write only the changed entries, remove the dropped. */
+  private def writeMap(
+      ms: MapState[Long, Double], old: Map[Long, Double], next: Map[Long, Double]): Unit = {
+    next.foreach { case (w, v) => if (!old.get(w).contains(v)) ms.updateValue(w, v) }
+    old.keys.filterNot(next.contains).foreach(ms.removeKey)
   }
 
-  /** Ratio-alert processor — [[FirehoseStream.ratioAlertClosed]]'s exact
-    * semantics ([[IncreaseCore]] fold per counter name + the shared
-    * [[RatioCore]] emit/prune) on the arbitrary-state API. Each counter's
-    * increase state decomposes into native handles (anchor ValueState,
-    * in-watermark ListState buffer, finalized MapState) and the parked
-    * closed-short totals are two more MapStates — per-window point
-    * updates throughout, the RocksDB-native shape. The timer re-arms to
-    * the earliest open long window's end so parked totals emit without
-    * new traffic.
+  /** The typed handles behind one series' [[IncreaseState]]: the anchor
+    * (`ValueState`), the in-watermark sample buffer (`ListState`) and the
+    * finalized per-window sums (`MapState`, point updates per window).
     */
-  class RatioProcessor(numName: String, denName: String, shortSec: Long,
-      longSec: Long, threshold: Double, ttlMs: Long)
-      extends StatefulProcessor[(String, String), GaugePoint, RatioOut] {
+  private[streaming] final class IncHandles(handle: StatefulProcessorHandle) {
+    private val anchor = handle.getValueState[CounterSample](
+      "anchor", Encoders.product[CounterSample], TTLConfig.NONE)
+    private val buffer = handle.getListState[CounterSample](
+      "buffer", Encoders.product[CounterSample], TTLConfig.NONE)
+    private val finalized = handle.getMapState[Long, Double](
+      "finalized", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
 
-    /** The three typed handles backing one counter's IncreaseState. */
-    private class IncHandles(prefix: String) {
-      var anchor: ValueState[CounterSample] = _
-      var buffer: ListState[CounterSample] = _
-      var finalized: MapState[Long, Double] = _
-      def init(): Unit = {
-        anchor = getHandle.getValueState[CounterSample](
-          s"$prefix-anchor", Encoders.product[CounterSample], TTLConfig.NONE)
-        buffer = getHandle.getListState[CounterSample](
-          s"$prefix-buffer", Encoders.product[CounterSample], TTLConfig.NONE)
-        finalized = getHandle.getMapState[Long, Double](
-          s"$prefix-finalized", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      }
-      def assembled: IncreaseState = {
-        val a = if (anchor.exists()) Some(anchor.get()) else None
-        IncreaseState(
-          hasAnchor = a.isDefined,
-          anchorTs = a.map(_.ts).getOrElse(0L),
-          anchorId = a.map(_.id).getOrElse(""),
-          anchorValue = a.map(_.value).getOrElse(0.0),
-          buffer = if (buffer.exists()) buffer.get().toSeq else Nil,
-          finalized =
-            if (finalized.exists()) finalized.iterator().map(t => t._1 -> t._2).toMap
-            else Map.empty)
-      }
-      def writeBack(old: Map[Long, Double], ns: IncreaseState): Unit = {
-        ns.finalized.foreach { case (w, v) =>
-          if (!old.get(w).contains(v)) finalized.updateValue(w, v)
-        }
-        old.keys.filterNot(ns.finalized.contains).foreach(finalized.removeKey)
-        if (ns.hasAnchor) anchor.update(CounterSample(ns.anchorTs, ns.anchorId, ns.anchorValue))
-        buffer.clear()
-        if (ns.buffer.nonEmpty) buffer.put(ns.buffer.toArray)
-      }
-      def clear(): Unit = { anchor.clear(); buffer.clear(); finalized.clear() }
-    }
-
-    @transient private var num: IncHandles = _
-    @transient private var den: IncHandles = _
-    @transient private var pendingNum: MapState[Long, Double] = _
-    @transient private var pendingDen: MapState[Long, Double] = _
-    @transient private var timerTs: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      num = new IncHandles("num"); num.init()
-      den = new IncHandles("den"); den.init()
-      pendingNum = getHandle.getMapState[Long, Double](
-        "pending-num", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      pendingDen = getHandle.getMapState[Long, Double](
-        "pending-den", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long]("timer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    private def pendingOf(ms: MapState[Long, Double]): Map[Long, Double] =
-      if (ms.exists()) ms.iterator().map(t => t._1 -> t._2).toMap else Map.empty
-
-    private def writePending(
-        ms: MapState[Long, Double], old: Map[Long, Double],
-        next: Map[Long, Double]): Unit = {
-      next.foreach { case (w, v) => if (!old.get(w).contains(v)) ms.updateValue(w, v) }
-      old.keys.filterNot(next.contains).foreach(ms.removeKey)
-    }
-
-    private def stepAndEmit(
-        key: (String, String), incoming: Seq[GaugePoint], timers: TimerValues,
-        evictWhenIdle: Boolean): Iterator[RatioOut] = {
-      val (component, series) = key
-      val wmSec = timers.getCurrentWatermarkInMs() / 1000L
-      val stNum = num.assembled
-      val stDen = den.assembled
-      val (numIn, denIn) = incoming.partition(_.name == numName)
-      def samples(ps: Seq[GaugePoint]) = ps.map(p => CounterSample(p.timestamp, p.id, p.value))
-      val rn = IncreaseCore.step(stNum, samples(numIn), wmSec, shortSec)
-      val rd = IncreaseCore.step(stDen, samples(denIn), wmSec, shortSec)
-      val oldPn = pendingOf(pendingNum)
-      val oldPd = pendingOf(pendingDen)
-      val (rows, keepN, keepD) = RatioCore.emitAndPrune(
-        component, series, oldPn ++ rn.closed, oldPd ++ rd.closed,
-        wmSec, shortSec, longSec, threshold)
-      val idle = rn.state.buffer.isEmpty && rd.state.buffer.isEmpty &&
-        rn.state.finalized.isEmpty && rd.state.finalized.isEmpty &&
-        keepN.isEmpty && keepD.isEmpty
-      if (evictWhenIdle && idle) {
-        num.clear(); den.clear(); pendingNum.clear(); pendingDen.clear(); timerTs.clear()
-      } else {
-        num.writeBack(stNum.finalized, rn.state)
-        den.writeBack(stDen.finalized, rd.state)
-        writePending(pendingNum, oldPn, keepN)
-        writePending(pendingDen, oldPd, keepD)
-        val pendingEnds =
-          (keepN.keys ++ keepD.keys ++
-            rn.state.finalized.keys ++ rd.state.finalized.keys)
-            .map(sw => (RatioCore.longWinOf(sw, longSec) + longSec) * 1000L)
-        if (pendingEnds.nonEmpty) armTimer(pendingEnds.min)
-        else {
-          val wm = timers.getCurrentWatermarkInMs()
-          if (wm > 0) armTimer(wm + ttlMs)
-          else {
-            val lastTs =
-              (rn.state.buffer.map(_.ts) ++ rd.state.buffer.map(_.ts) :+ 0L).max
-            armTimer(math.max(lastTs * 1000L, 1L) + ttlMs)
-          }
-        }
-      }
-      rows.iterator
-    }
-
-    override def handleInputRows(
-        key: (String, String),
-        rows: Iterator[GaugePoint],
-        timers: TimerValues): Iterator[RatioOut] =
-      stepAndEmit(key, rows.toSeq, timers, evictWhenIdle = false)
-
-    override def handleExpiredTimer(
-        key: (String, String),
-        timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[RatioOut] = {
-      timerTs.clear()
-      stepAndEmit(key, Nil, timers, evictWhenIdle = true)
-    }
-  }
-
-  /** [[FirehoseStream.ratioAlertClosed]] on the `transformWithState` API.
-    * Requires the RocksDB state store provider (an API constraint).
-    */
-  def ratioAlertClosed(
-      metrics: DataFrame,
-      numName: String = "error_total",
-      denName: String = "view_total",
-      shortSec: Long = 3600,
-      longSec: Long = 21600,
-      threshold: Double = 1.0,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[RatioOut] = {
-    require(longSec % shortSec == 0, "short windows must tile the long window")
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    FirehoseStream.keyedPoints(
-        metrics.filter(org.apache.spark.sql.functions.col("name").isin(numName, denName)),
-        watermarkDelay)
-      .groupByKey(p => (p.component, p.series))
-      .transformWithState(
-        new RatioProcessor(numName, denName, shortSec, longSec, threshold, ttlMs),
-        TimeMode.EventTime(), OutputMode.Update())
-  }
-
-  /** Subquery processor — [[FirehoseStream.subqueryOverTimeClosed]] on the
-    * arbitrary-state API: the inner increase fold's state decomposes into
-    * native handles (anchor `ValueState`, in-watermark `ListState` buffer,
-    * finalized `MapState`) plus the parked closed-inner-window totals as
-    * one more `MapState`; emit/prune is the shared [[SubqueryCore]], so
-    * the two ports cannot diverge.
-    */
-  class SubqueryProcessor(innerSec: Long, outerSec: Long, ttlMs: Long)
-      extends StatefulProcessor[SeriesKey, GaugePoint, SubqueryOut] {
-
-    @transient private var anchor: ValueState[CounterSample] = _
-    @transient private var buffer: ListState[CounterSample] = _
-    @transient private var finalized: MapState[Long, Double] = _
-    @transient private var parked: MapState[Long, Double] = _
-    @transient private var timerTs: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      anchor = getHandle.getValueState[CounterSample](
-        "anchor", Encoders.product[CounterSample], TTLConfig.NONE)
-      buffer = getHandle.getListState[CounterSample](
-        "buffer", Encoders.product[CounterSample], TTLConfig.NONE)
-      finalized = getHandle.getMapState[Long, Double](
-        "finalized", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      parked = getHandle.getMapState[Long, Double](
-        "parked", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long]("timer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    private def mapOf(ms: MapState[Long, Double]): Map[Long, Double] =
-      if (ms.exists()) ms.iterator().map(t => t._1 -> t._2).toMap else Map.empty
-
-    private def writeMap(
-        ms: MapState[Long, Double], old: Map[Long, Double],
-        next: Map[Long, Double]): Unit = {
-      next.foreach { case (w, v) => if (!old.get(w).contains(v)) ms.updateValue(w, v) }
-      old.keys.filterNot(next.contains).foreach(ms.removeKey)
-    }
-
-    private def stepAndEmit(
-        key: SeriesKey, incoming: Seq[GaugePoint], timers: TimerValues,
-        evictWhenIdle: Boolean): Iterator[SubqueryOut] = {
-      val (component, name, series) = key
-      val wmSec = timers.getCurrentWatermarkInMs() / 1000L
+    def assembled: IncreaseState = {
       val a = if (anchor.exists()) Some(anchor.get()) else None
-      val st = IncreaseState(
+      IncreaseState(
         hasAnchor = a.isDefined,
         anchorTs = a.map(_.ts).getOrElse(0L),
         anchorId = a.map(_.id).getOrElse(""),
         anchorValue = a.map(_.value).getOrElse(0.0),
         buffer = if (buffer.exists()) buffer.get().toSeq else Nil,
         finalized = mapOf(finalized))
+    }
+
+    /** Store `ns`; `old` is the state [[assembled]] returned this step. */
+    def writeBack(old: IncreaseState, ns: IncreaseState): Unit = {
+      writeMap(finalized, old.finalized, ns.finalized)
+      if (ns.hasAnchor) anchor.update(CounterSample(ns.anchorTs, ns.anchorId, ns.anchorValue))
+      buffer.clear()
+      if (ns.buffer.nonEmpty) buffer.put(ns.buffer.toArray)
+    }
+
+    def clear(): Unit = { anchor.clear(); buffer.clear(); finalized.clear() }
+  }
+
+  private def samples(points: Seq[GaugePoint]): Seq[CounterSample] =
+    points.map(p => CounterSample(p.timestamp, p.id, p.value))
+
+  /** The declared event-time tag of a row for a window ending at `endSec`.
+    * It must not lag the CURRENT watermark (Spark's chaining contract,
+    * EMITTING_ROWS_OLDER_THAN_WATERMARK_NOT_ALLOWED), yet a window closes
+    * exactly BECAUSE the watermark passed its end. So the tag is
+    * max(window end, watermark + 1 ms): plumbing for the downstream
+    * operator's late-row bound, while the real window rides the plain
+    * `win_start` column the streak folds on.
+    */
+  private def eventTag(endSec: Long, timers: TimerValues): Timestamp =
+    new Timestamp(math.max(endSec * 1000L, math.max(timers.getCurrentWatermarkInMs() + 1L, 1L)))
+
+  /** One step of the for-duration streak: the count of consecutive
+    * breaching windows once `win` breaches, given the previous breaching
+    * window and its count. A gap in the `stepSec` grid — a window with no
+    * row, or one that did not breach — restarts the count at 1: the batch
+    * rule evaluator's `lag(k-1)` presence rule.
+    */
+  private def streakAfter(lastWin: Long, streak: Int, win: Long, stepSec: Long): Int =
+    if (lastWin == win - stepSec && streak > 0) streak + 1 else 1
+
+  /** Before a series' first breach. */
+  private val NoStreak: (Long, Int) = (Long.MinValue, 0)
+
+  /** Fold breaching windows through [[streakAfter]] in ascending order;
+    * fires every window whose count reaches `k`. Returns the new
+    * `(lastWin, streak)` pair and the fired `(window, value)` rows.
+    */
+  private def foldStreak(
+      st: (Long, Int), breaches: Seq[(Long, Double)], stepSec: Long,
+      k: Int): ((Long, Int), Seq[(Long, Double)]) = {
+    var (lastWin, s) = st
+    val fires = breaches.sortBy(_._1).flatMap { case (win, v) =>
+      s = streakAfter(lastWin, s, win, stepSec)
+      lastWin = win
+      if (s >= k) Some((win, v)) else None
+    }
+    ((lastWin, s), fires)
+  }
+
+  private def streakState(handle: StatefulProcessorHandle): ValueState[(Long, Int)] =
+    handle.getValueState[(Long, Int)](
+      "streak", Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt), TTLConfig.NONE)
+
+  /** The closed-window counter increase on typed state ([[IncHandles]]):
+    * the same [[IncreaseCore]] step as every counter operator, of which
+    * only each window's FINAL total (`closed`, exactly once, ascending)
+    * leaves the processor. The timer re-arms to the earliest open
+    * window's end, so a quiet series still closes its windows while other
+    * series advance the watermark; a series with nothing open evicts after
+    * `ttlMs` (registry semantics: a series that resumes after eviction
+    * restarts its delta chain). Subclasses turn closed windows into rows.
+    */
+  abstract class ClosedIncreaseProcessor[O](widthSec: Long, ttlMs: Long)
+      extends StatefulProcessor[SeriesKey, GaugePoint, O] {
+    @transient private var inc: IncHandles = _
+    @transient private var timer: KeyTimer = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      inc = new IncHandles(getHandle)
+      initExtra()
+      timer = new KeyTimer(getHandle)
+    }
+
+    /** Register a subclass's own state (before the timer, the order its
+      * checkpoints were written in).
+      */
+    protected def initExtra(): Unit = ()
+
+    /** Drop a subclass's own state when the series is evicted. */
+    protected def clearExtra(): Unit = ()
+
+    protected def emit(key: SeriesKey, closed: Seq[(Long, Double)], timers: TimerValues): Seq[O]
+
+    private def stepAndEmit(
+        key: SeriesKey, incoming: Seq[GaugePoint], timers: TimerValues,
+        evictWhenIdle: Boolean): Iterator[O] = {
+      val st = inc.assembled
       val r = IncreaseCore.step(
-        st, incoming.map(p => CounterSample(p.timestamp, p.id, p.value)), wmSec, innerSec)
-      val oldParked = mapOf(parked)
-      val (rows, keep) = SubqueryCore.emitAndPrune(
-        component, name, series, oldParked ++ r.closed, wmSec, innerSec, outerSec)
-      val idle = r.state.buffer.isEmpty && r.state.finalized.isEmpty && keep.isEmpty
-      if (evictWhenIdle && idle) {
-        anchor.clear(); buffer.clear(); finalized.clear(); parked.clear(); timerTs.clear()
+        st, samples(incoming), timers.getCurrentWatermarkInMs() / 1000L, widthSec)
+      val ns = r.state
+      val out = emit(key, r.closed, timers)
+      if (evictWhenIdle && ns.buffer.isEmpty && ns.finalized.isEmpty) {
+        inc.clear(); clearExtra()
       } else {
-        writeMap(finalized, st.finalized, r.state.finalized)
-        if (r.state.hasAnchor)
-          anchor.update(CounterSample(r.state.anchorTs, r.state.anchorId, r.state.anchorValue))
-        buffer.clear()
-        if (r.state.buffer.nonEmpty) buffer.put(r.state.buffer.toArray)
-        writeMap(parked, oldParked, keep)
-        val pendingEnds = (keep.keys ++ r.state.finalized.keys)
-          .map(sw => (RatioCore.longWinOf(sw, outerSec) + outerSec) * 1000L)
-        if (pendingEnds.nonEmpty) armTimer(pendingEnds.min)
-        else {
-          val wm = timers.getCurrentWatermarkInMs()
-          if (wm > 0) armTimer(wm + ttlMs)
-          else {
-            val lastTs = (r.state.buffer.map(_.ts) :+ 0L).max
-            armTimer(math.max(lastTs * 1000L, 1L) + ttlMs)
-          }
-        }
+        inc.writeBack(st, ns)
+        // open windows: finalized keys await closure, and buffered
+        // samples imply their windows too
+        val openEnds =
+          (ns.finalized.keys ++ ns.buffer.map(c => c.ts - math.floorMod(c.ts, widthSec)))
+            .map(win => (win + widthSec) * 1000L)
+        if (openEnds.nonEmpty) timer.arm(openEnds.min)
+        else timer.armIdle(timers, math.max(ns.anchorTs, 1L) * 1000L, ttlMs)
       }
-      rows.iterator
+      out.iterator
     }
 
     override def handleInputRows(
         key: SeriesKey,
         rows: Iterator[GaugePoint],
-        timers: TimerValues): Iterator[SubqueryOut] =
+        timers: TimerValues): Iterator[O] =
       stepAndEmit(key, rows.toSeq, timers, evictWhenIdle = false)
 
     override def handleExpiredTimer(
         key: SeriesKey,
         timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[SubqueryOut] = {
-      timerTs.clear()
+        expired: ExpiredTimerInfo): Iterator[O] = {
+      timer.fired()
       stepAndEmit(key, Nil, timers, evictWhenIdle = true)
     }
   }
 
-  /** [[FirehoseStream.subqueryOverTimeClosed]] on the `transformWithState`
-    * API. Requires the RocksDB state store provider (an API constraint).
+  /** CLOSED-window counter increase with the output's `event_time`
+    * declared as its EVENT-TIME column: each (series, window) total emits
+    * exactly once when the watermark proves it final, which is what lets
+    * a DOWNSTREAM stateful operator (the general for-duration streak)
+    * legally consume rate/increase under arbitrary scalar wrappers.
     */
-  def subqueryOverTimeClosed(
-      metrics: DataFrame,
-      innerSec: Long = 3600,
-      outerSec: Long = 21600,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[SubqueryOut] = {
-    require(outerSec % innerSec == 0, "inner step must tile the outer range")
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .transformWithState(
-        new SubqueryProcessor(innerSec, outerSec, ttlMs),
-        TimeMode.EventTime(), OutputMode.Update())
+  class IncreaseClosedProcessor(widthSec: Long, ttlMs: Long)
+      extends ClosedIncreaseProcessor[ClosedIncrease](widthSec, ttlMs) {
+    override protected def emit(
+        key: SeriesKey, closed: Seq[(Long, Double)],
+        timers: TimerValues): Seq[ClosedIncrease] =
+      closed.map { case (win, inc) =>
+        ClosedIncrease(key._1, key._2, key._3, win, inc, eventTag(win + widthSec, timers))
+      }
   }
 
-  /** [[SubqueryProcessor]] emitting the CHAINABLE closed shape — one
-    * selected aggregate (`min_rate`/`max_rate`/`avg_rate`) per closed
-    * (series, outer window) as a [[ClosedIncrease]] row with the
-    * `event_time` tag (max(outer window end, watermark + 1 ms) — the
-    * chaining contract's no-older-than-watermark demand), so the
-    * for-duration streak — a second `transformWithState` — can legally
-    * follow a subquery lowering. Wraps the Update-mode processor's own
-    * fold verbatim (the two cannot diverge); the rows are exactly-once
-    * by construction, so Append mode is sound.
+  /** Closed-window counter increase: per-(series, window) FINAL increases
+    * in append mode, `event_time` declared as the event-time column so
+    * downstream stateful operators (the for-duration streak) can chain.
+    * When an idle series' TTL fires, still-open windows stay in state
+    * until the watermark passes their end (the series may resume INSIDE
+    * an open window, and a force-close would emit that window twice).
+    */
+  def counterIncreaseClosed(
+      metrics: DataFrame,
+      widthSec: Long = 3600,
+      watermarkDelay: String = "10 minutes",
+      ttlMs: Long = 10 * 60 * 1000L): Dataset[ClosedIncrease] = {
+    val spark = metrics.sparkSession
+    import spark.implicits._
+    FirehoseStream.bySeries(metrics, watermarkDelay)
+      .transformWithState(
+        new IncreaseClosedProcessor(widthSec, ttlMs), "event_time", OutputMode.Append())
+  }
+
+  /** For-duration alert processor — the streaming sibling of
+    * [[graft.operators.Firehose.forDurationAlert]] (Prometheus `for:`
+    * quantized to windows): the windowed increase must breach
+    * `minIncrease` in `k` CONSECUTIVE windows before the alert fires.
+    * The streak is decided ONLY on CLOSED windows, in ascending order (a
+    * running window's total can still grow — firing on it could
+    * fire-then-retract, which an alert must never do), and closed windows
+    * each fire at most once. Consecutiveness state is one
+    * `(lastWin, streak)` ValueState ([[streakAfter]]): a non-breaching
+    * window, or a wholly-absent one (never closed because it had no
+    * samples), breaks the streak — the exact semantics of the batch
+    * operator's `lag(k-1)` formulation. After `ttlMs` of emptiness the
+    * series is evicted and its streak restarts.
+    */
+  class ForDurationProcessor(
+      widthSec: Long, minIncrease: Double, k: Int, ttlMs: Long)
+      extends ClosedIncreaseProcessor[ForDurationOut](widthSec, ttlMs) {
+    @transient private var streak: ValueState[(Long, Int)] = _
+
+    override protected def initExtra(): Unit = streak = streakState(getHandle)
+
+    override protected def clearExtra(): Unit = streak.clear()
+
+    override protected def emit(
+        key: SeriesKey, closed: Seq[(Long, Double)],
+        timers: TimerValues): Seq[ForDurationOut] = {
+      val st = if (streak.exists()) streak.get() else NoStreak
+      val (next, fires) = foldStreak(st, closed.filter(_._2 > minIncrease), widthSec, k)
+      streak.update(next)
+      fires.map { case (win, inc) => ForDurationOut(key._1, key._2, key._3, win, inc) }
+    }
+  }
+
+  /** [[graft.operators.Firehose.forDurationAlert]] on the
+    * `transformWithState` API.
+    */
+  def forDurationAlert(
+      metrics: DataFrame,
+      widthSec: Long = 3600,
+      minIncrease: Double = 50.0,
+      k: Int = 3,
+      watermarkDelay: String = "10 minutes",
+      ttlMs: Long = 10 * 60 * 1000L): Dataset[ForDurationOut] = {
+    require(k >= 2, "for-duration needs at least 2 consecutive windows")
+    val spark = metrics.sparkSession
+    import spark.implicits._
+    FirehoseStream.bySeries(metrics, watermarkDelay)
+      .transformWithState(
+        new ForDurationProcessor(widthSec, minIncrease, k, ttlMs),
+        TimeMode.EventTime(), OutputMode.Append())
+  }
+
+  /** The streaming rate subquery in its CHAINABLE closed shape:
+    * `agg_over_time(rate(x[inner])[outer:inner])` as one selected
+    * aggregate (`min_rate`/`max_rate`/`avg_rate`) per closed (series,
+    * outer window), a [[ClosedIncrease]] row with the `event_time` tag, so
+    * the for-duration streak — a second `transformWithState` — can
+    * legally follow. The inner increase fold's state lives in
+    * [[IncHandles]], the closed inner-window totals park in one more
+    * `MapState` until their outer window closes, and emit/prune is the
+    * shared [[SubqueryCore]] (the same fold as
+    * [[FirehoseStream.subqueryOverTimeClosed]]). Rows are exactly-once by
+    * construction, so Append mode is sound; the timer re-arms at the
+    * earliest open outer window's end so quiet series still emit.
     */
   class SubqueryClosedChainedProcessor(
       innerSec: Long, outerSec: Long, ttlMs: Long, field: String)
       extends StatefulProcessor[SeriesKey, GaugePoint, ClosedIncrease] {
-    private val inner = new SubqueryProcessor(innerSec, outerSec, ttlMs)
     private val sel: SubqueryOut => Double = field match {
       case "min_rate" => _.min_rate
       case "max_rate" => _.max_rate
@@ -486,19 +326,44 @@ object FirehoseTws {
       case other => throw new IllegalArgumentException(
         s"unknown subquery aggregate '$other'")
     }
+    @transient private var inc: IncHandles = _
+    @transient private var parked: MapState[Long, Double] = _
+    @transient private var timer: KeyTimer = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      inner.setHandle(getHandle)
-      inner.init(outputMode, timeMode)
+      inc = new IncHandles(getHandle)
+      parked = getHandle.getMapState[Long, Double](
+        "parked", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
+      timer = new KeyTimer(getHandle)
     }
 
-    private def tag(
-        rows: Iterator[SubqueryOut],
-        timers: TimerValues): Iterator[ClosedIncrease] = {
-      val tagMs = math.max(timers.getCurrentWatermarkInMs() + 1L, 1L)
-      rows.map { o =>
-        ClosedIncrease(o.component, o.name, o.series, o.outer_win, sel(o),
-          new java.sql.Timestamp(math.max((o.outer_win + outerSec) * 1000L, tagMs)))
+    private def stepAndEmit(
+        key: SeriesKey, incoming: Seq[GaugePoint], timers: TimerValues,
+        evictWhenIdle: Boolean): Iterator[ClosedIncrease] = {
+      val (component, name, series) = key
+      val wmSec = timers.getCurrentWatermarkInMs() / 1000L
+      val st = inc.assembled
+      val r = IncreaseCore.step(st, samples(incoming), wmSec, innerSec)
+      val oldParked = mapOf(parked)
+      val (rows, keep) = SubqueryCore.emitAndPrune(
+        component, name, series, oldParked ++ r.closed, wmSec, innerSec, outerSec)
+      val idle = r.state.buffer.isEmpty && r.state.finalized.isEmpty && keep.isEmpty
+      if (evictWhenIdle && idle) {
+        inc.clear(); parked.clear()
+      } else {
+        inc.writeBack(st, r.state)
+        writeMap(parked, oldParked, keep)
+        val pendingEnds = (keep.keys ++ r.state.finalized.keys)
+          .map(sw => (RatioCore.longWinOf(sw, outerSec) + outerSec) * 1000L)
+        if (pendingEnds.nonEmpty) timer.arm(pendingEnds.min)
+        else {
+          val lastTs = (r.state.buffer.map(_.ts) :+ 0L).max
+          timer.armIdle(timers, math.max(lastTs * 1000L, 1L), ttlMs)
+        }
+      }
+      rows.iterator.map { o =>
+        ClosedIncrease(component, name, series, o.outer_win, sel(o),
+          eventTag(o.outer_win + outerSec, timers))
       }
     }
 
@@ -506,16 +371,18 @@ object FirehoseTws {
         key: SeriesKey,
         rows: Iterator[GaugePoint],
         timers: TimerValues): Iterator[ClosedIncrease] =
-      tag(inner.handleInputRows(key, rows, timers), timers)
+      stepAndEmit(key, rows.toSeq, timers, evictWhenIdle = false)
 
     override def handleExpiredTimer(
         key: SeriesKey,
         timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[ClosedIncrease] =
-      tag(inner.handleExpiredTimer(key, timers, expired), timers)
+        expired: ExpiredTimerInfo): Iterator[ClosedIncrease] = {
+      timer.fired()
+      stepAndEmit(key, Nil, timers, evictWhenIdle = true)
+    }
   }
 
-  /** [[subqueryOverTimeClosed]] with the output's window tagged as its
+  /** The closed rate subquery with the output's window tagged as its
     * event-time column — the chainable form the general for-duration
     * streak consumes (`agg_over_time(rate(x[inner])[outer:inner]) … for
     * d` streams by chaining [[forStreakChained]]/[[forStreakKeep]] after
@@ -532,280 +399,10 @@ object FirehoseTws {
     require(outerSec % innerSec == 0, "inner step must tile the outer range")
     val spark = metrics.sparkSession
     import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
+    FirehoseStream.bySeries(metrics, watermarkDelay)
       .transformWithState(
         new SubqueryClosedChainedProcessor(innerSec, outerSec, ttlMs, field),
         "event_time", OutputMode.Append())
-  }
-
-  /** Absent-alert processor — [[FirehoseStream.absentAlert]]'s fold
-    * ([[AbsentCore]], shared verbatim) on the arbitrary-state API: the
-    * decided (anchor, gapEmitted) pair is a `ValueState`, the undecided
-    * live windows a `ListState` (point appends as traffic lands), and the
-    * silence decision the same event-time-timer discipline — a stale
-    * series needs no traffic of its own to alert.
-    */
-  class AbsentProcessor(widthSec: Long, ttlMs: Long)
-      extends StatefulProcessor[SeriesKey, GaugePoint, AbsentOut] {
-    @transient private var decided: ValueState[(Long, Boolean)] = _
-    @transient private var live: ListState[Long] = _
-    @transient private var timerTs: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      decided = getHandle.getValueState[(Long, Boolean)](
-        "decided", Encoders.tuple(Encoders.scalaLong, Encoders.scalaBoolean),
-        TTLConfig.NONE)
-      live = getHandle.getListState[Long]("live", Encoders.scalaLong, TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long]("timer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    private def assembled: AbsentState = {
-      val (a, g) = if (decided.exists()) decided.get() else (-1L, false)
-      AbsentState(a, g, if (live.exists()) live.get().toSeq else Nil)
-    }
-
-    private def stepAndEmit(
-        key: SeriesKey, wins: Seq[Long], timers: TimerValues,
-        evictWhenIdle: Boolean): Iterator[AbsentOut] = {
-      val wmSec = timers.getCurrentWatermarkInMs() / 1000L
-      val r = AbsentCore.step(assembled, wins, wmSec, widthSec)
-      val idle = r.state.live.isEmpty && (r.state.gapEmitted || r.state.anchor < 0)
-      if (evictWhenIdle && idle) {
-        decided.clear(); live.clear(); timerTs.clear()
-      } else {
-        decided.update((r.state.anchor, r.state.gapEmitted))
-        live.clear()
-        if (r.state.live.nonEmpty) live.put(r.state.live.toArray)
-        val decisionPoint =
-          if (r.state.anchor >= 0 && !r.state.gapEmitted)
-            Some((r.state.anchor + 2 * widthSec) * 1000L)
-          else r.state.live.minOption.map(w => (w + 2 * widthSec) * 1000L)
-        decisionPoint match {
-          case Some(t) => armTimer(t)
-          case None =>
-            val wm = timers.getCurrentWatermarkInMs()
-            armTimer((if (wm > 0) wm else 0L) + ttlMs)
-        }
-      }
-      r.emitted.iterator.map(w => AbsentOut(key._1, key._2, key._3, w))
-    }
-
-    override def handleInputRows(
-        key: SeriesKey,
-        rows: Iterator[GaugePoint],
-        timers: TimerValues): Iterator[AbsentOut] = {
-      val wins = rows.map(p => p.timestamp - math.floorMod(p.timestamp, widthSec)).toSeq
-      stepAndEmit(key, wins, timers, evictWhenIdle = false)
-    }
-
-    override def handleExpiredTimer(
-        key: SeriesKey,
-        timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[AbsentOut] = {
-      timerTs.clear()
-      stepAndEmit(key, Nil, timers, evictWhenIdle = true)
-    }
-  }
-
-  /** [[FirehoseStream.absentAlert]] on the `transformWithState` API.
-    * Requires the RocksDB state store provider (an API constraint).
-    */
-  def absentAlert(
-      metrics: DataFrame,
-      widthSec: Long = 60,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[AbsentOut] = {
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .transformWithState(
-        new AbsentProcessor(widthSec, ttlMs), TimeMode.EventTime(), OutputMode.Update())
-  }
-
-  /** [[FirehoseStream.gaugeLatest]] on the `transformWithState` API.
-    * Requires the RocksDB state store provider (an API constraint).
-    */
-  def gaugeLatest(
-      metrics: DataFrame,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[GaugeOut] = {
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .transformWithState(
-        new GaugeProcessor(ttlMs), TimeMode.EventTime(), OutputMode.Update())
-  }
-
-  /** [[gaugeLatest]] warm-started from a landed batch gauge snapshot
-    * (e.g. `Firehose.gaugeLatest` over the landing table) — the bootstrap
-    * path a fresh deployment takes so the registry does not start empty and
-    * a stale first sample cannot regress below the landed state. Snapshot
-    * columns: (component, name, series, last_value, last_ts).
-    */
-  def gaugeLatestBootstrapped(
-      metrics: DataFrame,
-      snapshot: DataFrame,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[GaugeOut] = {
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    val init = snapshot
-      .select("component", "name", "series", "last_value", "last_ts")
-      .as[GaugeOut]
-      .groupByKey(g => (g.component, g.name, g.series))
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .transformWithState(
-        new GaugeProcessor(ttlMs), TimeMode.EventTime(), OutputMode.Update(), init)
-  }
-
-  /** For-duration alert processor — the streaming sibling of
-    * [[graft.operators.Firehose.forDurationAlert]] (Prometheus `for:`
-    * quantized to windows): the windowed increase must breach
-    * `minIncrease` in `k` CONSECUTIVE windows before the alert fires.
-    * Window totals come from the same [[IncreaseCore]] fold as every other
-    * counter port; the streak is decided ONLY on CLOSED windows, in
-    * ascending order (a running window's total can still grow — firing on
-    * it could fire-then-retract, which an alert must never do), and closed
-    * windows each fire at most once. Consecutiveness state is one
-    * `(lastWin, streak)` ValueState: a closed non-breaching window resets
-    * the streak, and a wholly-absent window (never closed because it had
-    * no samples) breaks it via the lastWin spacing check — the exact
-    * semantics of the batch operator's `lag(k-1)` formulation. The timer
-    * re-arms to the earliest open window's end so closure (and firing)
-    * does not require new traffic on this series; after `ttlMs` of
-    * emptiness the series is evicted (registry semantics — the streak
-    * restarts for a series that went silent past the TTL).
-    */
-  class ForDurationProcessor(
-      widthSec: Long, minIncrease: Double, k: Int, ttlMs: Long)
-      extends StatefulProcessor[SeriesKey, GaugePoint, ForDurationOut] {
-    @transient private var anchor: ValueState[CounterSample] = _
-    @transient private var buffer: ListState[CounterSample] = _
-    @transient private var finalized: MapState[Long, Double] = _
-    @transient private var streak: ValueState[(Long, Int)] = _
-    @transient private var timerTs: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      anchor = getHandle.getValueState[CounterSample](
-        "anchor", Encoders.product[CounterSample], TTLConfig.NONE)
-      buffer = getHandle.getListState[CounterSample](
-        "buffer", Encoders.product[CounterSample], TTLConfig.NONE)
-      finalized = getHandle.getMapState[Long, Double](
-        "finalized", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      streak = getHandle.getValueState[(Long, Int)](
-        "streak", Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt), TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    private def stepAndEmit(
-        key: SeriesKey, incoming: Seq[GaugePoint], timers: TimerValues,
-        evictWhenIdle: Boolean): Iterator[ForDurationOut] = {
-      val anchorOpt = if (anchor.exists()) Some(anchor.get()) else None
-      val st = IncreaseState(
-        hasAnchor = anchorOpt.isDefined,
-        anchorTs = anchorOpt.map(_.ts).getOrElse(0L),
-        anchorId = anchorOpt.map(_.id).getOrElse(""),
-        anchorValue = anchorOpt.map(_.value).getOrElse(0.0),
-        buffer = if (buffer.exists()) buffer.get().toSeq else Nil,
-        finalized =
-          if (finalized.exists()) finalized.iterator().map(t => t._1 -> t._2).toMap
-          else Map.empty)
-      val wmSec = timers.getCurrentWatermarkInMs() / 1000L
-      val samples = incoming.map(p => CounterSample(p.timestamp, p.id, p.value))
-      val r = IncreaseCore.step(st, samples, wmSec, widthSec)
-      val ns = r.state
-      // streak over the just-closed windows, ascending (closed is sorted)
-      var (lastWin, s) = if (streak.exists()) streak.get() else (Long.MinValue, 0)
-      val fires = r.closed.flatMap { case (win, inc) =>
-        val breach = inc > minIncrease
-        s = if (!breach) 0
-        else if (lastWin == win - widthSec && s > 0) s + 1
-        else 1
-        lastWin = win
-        if (breach && s >= k)
-          Some(ForDurationOut(key._1, key._2, key._3, win, inc))
-        else None
-      }
-      val idle = ns.buffer.isEmpty && ns.finalized.isEmpty
-      if (evictWhenIdle && idle) {
-        anchor.clear(); buffer.clear(); finalized.clear(); streak.clear(); timerTs.clear()
-      } else {
-        ns.finalized.foreach { case (win, v) =>
-          if (!st.finalized.get(win).contains(v)) finalized.updateValue(win, v)
-        }
-        st.finalized.keys.filterNot(ns.finalized.contains).foreach(finalized.removeKey)
-        if (ns.hasAnchor)
-          anchor.update(CounterSample(ns.anchorTs, ns.anchorId, ns.anchorValue))
-        buffer.clear()
-        if (ns.buffer.nonEmpty) buffer.put(ns.buffer.toArray)
-        streak.update((lastWin, s))
-        // open windows: anything still accumulating (finalized keys await
-        // closure; buffered samples imply their windows too)
-        val openEnds =
-          (ns.finalized.keys ++
-            ns.buffer.map(c => c.ts - math.floorMod(c.ts, widthSec)))
-            .map(win => (win + widthSec) * 1000L)
-        if (openEnds.nonEmpty) armTimer(openEnds.min)
-        else {
-          val wm = timers.getCurrentWatermarkInMs()
-          if (wm > 0) armTimer(wm + ttlMs)
-          else armTimer(math.max(ns.anchorTs, 1L) * 1000L + ttlMs)
-        }
-      }
-      fires.iterator
-    }
-
-    override def handleInputRows(
-        key: SeriesKey,
-        rows: Iterator[GaugePoint],
-        timers: TimerValues): Iterator[ForDurationOut] =
-      stepAndEmit(key, rows.toSeq, timers, evictWhenIdle = false)
-
-    override def handleExpiredTimer(
-        key: SeriesKey,
-        timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[ForDurationOut] = {
-      timerTs.clear()
-      stepAndEmit(key, Nil, timers, evictWhenIdle = true)
-    }
-  }
-
-  /** [[graft.operators.Firehose.forDurationAlert]] on the
-    * `transformWithState` API. Requires the RocksDB state store provider
-    * (an API constraint).
-    */
-  def forDurationAlert(
-      metrics: DataFrame,
-      widthSec: Long = 3600,
-      minIncrease: Double = 50.0,
-      k: Int = 3,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[ForDurationOut] = {
-    require(k >= 2, "for-duration needs at least 2 consecutive windows")
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .transformWithState(
-        new ForDurationProcessor(widthSec, minIncrease, k, ttlMs),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Gap-fill processor — the streaming sibling of
@@ -822,7 +419,7 @@ object FirehoseTws {
       extends StatefulProcessor[SeriesKey, GaugePoint, GapFillOut] {
     @transient private var frontier: ValueState[(Boolean, Long, Double, Long)] = _
     @transient private var buffer: ListState[CounterSample] = _
-    @transient private var timerTs: ValueState[Long] = _
+    @transient private var timer: KeyTimer = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       frontier = getHandle.getValueState[(Boolean, Long, Double, Long)](
@@ -832,14 +429,7 @@ object FirehoseTws {
         TTLConfig.NONE)
       buffer = getHandle.getListState[CounterSample](
         "buffer", Encoders.product[CounterSample], TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
+      timer = new KeyTimer(getHandle)
     }
 
     private def stepAndEmit(
@@ -851,13 +441,12 @@ object FirehoseTws {
       val st = GapFillState(hasLast, lastSlot, lastValue, maxSeen,
         if (buffer.exists()) buffer.get().toSeq else Nil)
       val wmSec = timers.getCurrentWatermarkInMs() / 1000L
-      val samples = incoming.map(p => CounterSample(p.timestamp, p.id, p.value))
-      val r = GapFillCore.step(st, samples, wmSec, stepSec)
+      val r = GapFillCore.step(st, samples(incoming), wmSec, stepSec)
       val ns = r.state
       val idle = ns.buffer.isEmpty &&
         (ns.maxSeen == Long.MinValue || (ns.hasLast && ns.lastSlot >= ns.maxSeen))
       if (evictWhenIdle && idle) {
-        frontier.clear(); buffer.clear(); timerTs.clear()
+        frontier.clear(); buffer.clear()
       } else {
         frontier.update((ns.hasLast, ns.lastSlot, ns.lastValue, ns.maxSeen))
         buffer.clear()
@@ -868,10 +457,8 @@ object FirehoseTws {
             Some(ns.buffer.map(s => GapFillCore.slotOf(s.ts, stepSec)).min)
           else None
         nextSlot match {
-          case Some(s) => armTimer((s + stepSec) * 1000L)
-          case None =>
-            val wm = timers.getCurrentWatermarkInMs()
-            armTimer((if (wm > 0) wm else math.max(ns.lastSlot, 1L) * 1000L) + ttlMs)
+          case Some(s) => timer.arm((s + stepSec) * 1000L)
+          case None => timer.armIdle(timers, math.max(ns.lastSlot, 1L) * 1000L, ttlMs)
         }
       }
       r.emitted.iterator.map { case (slot, value, filled) =>
@@ -889,14 +476,12 @@ object FirehoseTws {
         key: SeriesKey,
         timers: TimerValues,
         expired: ExpiredTimerInfo): Iterator[GapFillOut] = {
-      timerTs.clear()
+      timer.fired()
       stepAndEmit(key, Nil, timers, evictWhenIdle = true)
     }
   }
 
-  /** [[graft.operators.Firehose.gapFill]] on the `transformWithState` API.
-    * Requires the RocksDB state store provider (an API constraint).
-    */
+  /** [[graft.operators.Firehose.gapFill]] on the `transformWithState` API. */
   def gapFill(
       metrics: DataFrame,
       stepSec: Long = 60,
@@ -904,31 +489,14 @@ object FirehoseTws {
       ttlMs: Long = 10 * 60 * 1000L): Dataset[GapFillOut] = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
+    FirehoseStream.bySeries(metrics, watermarkDelay)
       .transformWithState(
         new GapFillProcessor(stepSec, ttlMs),
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** [[FirehoseStream.counterIncrease]] on the `transformWithState` API.
-    * Requires the RocksDB state store provider (an API constraint).
-    */
-  def counterIncrease(
-      metrics: DataFrame,
-      widthSec: Long = 3600,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[IncreaseOut] = {
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .transformWithState(
-        new IncreaseProcessor(widthSec, ttlMs), TimeMode.EventTime(), OutputMode.Update())
-  }
-
   /** The GENERAL for-duration streak — [[ForDurationProcessor]]'s
-    * `(lastWin, streak)` consecutiveness core lifted off the raw-sample
+    * `(lastWin, streak)` consecutiveness fold lifted off the raw-sample
     * increase fold and onto ALREADY-CLOSED breach windows: the input is
     * any single-valued windowed relation in APPEND mode (a window row
     * arrives exactly once, when the watermark closes it), so the
@@ -942,38 +510,31 @@ object FirehoseTws {
     * keep `window.start` as their event-time column, so no watermark is
     * re-declared — the re-declared-watermark stall stays avoided).
     *
-    * In-batch rows sort ascending per key (several windows of one
-    * series can close in one micro-batch); across batches the watermark
-    * is monotone, so closed windows arrive in order. A non-breaching
-    * window produces NO row upstream (the threshold filter dropped it),
-    * so streaks break via the lastWin SPACING check — exactly the batch
-    * rule evaluator's `lag(k-1)` presence formulation, spec-pinned
-    * against it.
+    * `window` reads a row's (epoch-second window, value): [[WinRow]]s
+    * carry a timestamp `win_start`, [[ClosedIncrease]] rows an
+    * epoch-second one. In-batch rows sort ascending per key (several
+    * windows of one series can close in one micro-batch); across batches
+    * the watermark is monotone, so closed windows arrive in order. A
+    * non-breaching window produces NO row upstream (the threshold filter
+    * dropped it), so streaks break via the lastWin SPACING check —
+    * exactly the batch rule evaluator's `lag(k-1)` presence formulation,
+    * spec-pinned against it.
     */
-  class ForStreakProcessor(stepSec: Long, k: Int)
-      extends StatefulProcessor[SeriesKey, WinRow, ForDurationOut] {
+  class ForStreakProcessor[I](stepSec: Long, k: Int, window: I => (Long, Double))
+      extends StatefulProcessor[SeriesKey, I, ForDurationOut] {
     @transient private var streak: ValueState[(Long, Int)] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      streak = getHandle.getValueState[(Long, Int)](
-        "streak", Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt),
-        TTLConfig.NONE)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      streak = streakState(getHandle)
 
     override def handleInputRows(
         key: SeriesKey,
-        rows: Iterator[WinRow],
+        rows: Iterator[I],
         timers: TimerValues): Iterator[ForDurationOut] = {
-      var (lastWin, s) = if (streak.exists()) streak.get() else (Long.MinValue, 0)
-      val fires = rows.toSeq.sortBy(r => r.win_start.getTime).flatMap { r =>
-        val win = r.win_start.getTime / 1000L
-        s = if (lastWin == win - stepSec && s > 0) s + 1 else 1
-        lastWin = win
-        if (s >= k) Some(ForDurationOut(key._1, key._2, key._3, win, r.value))
-        else None
-      }
-      streak.update((lastWin, s))
-      fires.iterator
+      val st = if (streak.exists()) streak.get() else NoStreak
+      val (next, fires) = foldStreak(st, rows.map(window).toSeq, stepSec, k)
+      streak.update(next)
+      fires.iterator.map { case (win, v) => ForDurationOut(key._1, key._2, key._3, win, v) }
     }
   }
 
@@ -1029,7 +590,7 @@ object FirehoseTws {
         }
       breaches.sortBy(_._1).foreach { case (w, v) =>
         tails(w - stepSec) // everything before an arrived window is decided
-        val s2 = if (st.lastWin == w - stepSec && st.streak > 0) st.streak + 1 else 1
+        val s2 = streakAfter(st.lastWin, st.streak, w, stepSec)
         st = st.copy(lastWin = w, streak = s2)
         if (st.firing || s2 >= k) {
           out += ((w, v))
@@ -1047,36 +608,27 @@ object FirehoseTws {
     * them, re-armed at the next tail's decision time so a quiet series
     * keeps its tail flowing while OTHER series advance the watermark.
     */
-  class ForStreakKeepProcessor(stepSec: Long, k: Int, keepSec: Long)
-      extends StatefulProcessor[SeriesKey, WinRow, ForDurationOut] {
+  class ForStreakKeepProcessor[I](
+      stepSec: Long, k: Int, keepSec: Long, window: I => (Long, Double))
+      extends StatefulProcessor[SeriesKey, I, ForDurationOut] {
     @transient private var state: ValueState[KeepStreakState] = _
-    @transient private var timerTs: ValueState[Long] = _
+    @transient private var timer: KeyTimer = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       state = getHandle.getValueState[KeepStreakState](
         "keepstreak", Encoders.product[KeepStreakState], TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timer", Encoders.scalaLong, TTLConfig.NONE)
+      timer = new KeyTimer(getHandle)
     }
 
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    private[streaming] def stepAndEmit(
+    private def stepAndEmit(
         key: SeriesKey, wins: Seq[(Long, Double)],
         timers: TimerValues): Iterator[ForDurationOut] = {
       val st0 = if (state.exists()) state.get() else KeepStreakCore.empty
       val wmSec = timers.getCurrentWatermarkInMs() / 1000L
       val r = KeepStreakCore.step(st0, wins, wmSec, stepSec, k, keepSec)
       state.update(r.state)
-      if (r.state.firing)
-        armTimer((r.state.emitted + 2 * stepSec) * 1000L)
-      else if (timerTs.exists()) {
-        getHandle.deleteTimer(timerTs.get()); timerTs.clear()
-      }
+      if (r.state.firing) timer.arm((r.state.emitted + 2 * stepSec) * 1000L)
+      else timer.cancel()
       r.emits.iterator.map { case (w, v) =>
         ForDurationOut(key._1, key._2, key._3, w, v)
       }
@@ -1084,43 +636,62 @@ object FirehoseTws {
 
     override def handleInputRows(
         key: SeriesKey,
-        rows: Iterator[WinRow],
+        rows: Iterator[I],
         timers: TimerValues): Iterator[ForDurationOut] =
-      stepAndEmit(key,
-        rows.toSeq.map(r => (r.win_start.getTime / 1000L, r.value)), timers)
+      stepAndEmit(key, rows.map(window).toSeq, timers)
 
     override def handleExpiredTimer(
         key: SeriesKey,
         timers: TimerValues,
         expired: ExpiredTimerInfo): Iterator[ForDurationOut] = {
-      timerTs.clear()
+      timer.fired()
       stepAndEmit(key, Nil, timers)
     }
   }
 
-  /** [[ForStreakKeepProcessor]] over [[ClosedIncrease]] rows — the
-    * chained-closed input shape.
+  private val winRowWindow: WinRow => (Long, Double) =
+    r => (r.win_start.getTime / 1000L, r.value)
+  private val closedWindow: ClosedIncrease => (Long, Double) = r => (r.win_start, r.value)
+
+  /** A breach relation's streak columns; `tagged` keeps the chained
+    * shape's `event_time` tag.
     */
-  class ForStreakKeepClosedProcessor(stepSec: Long, k: Int, keepSec: Long)
-      extends StatefulProcessor[SeriesKey, ClosedIncrease, ForDurationOut] {
-    private val inner = new ForStreakKeepProcessor(stepSec, k, keepSec)
+  private def breachColumns(breaches: DataFrame, tagged: Boolean): DataFrame =
+    breaches.select(Seq(col("component"), col("name"), col("series"), col("win_start"),
+      col("value").cast("double").as("value")) ++
+      (if (tagged) Seq(col("event_time")) else Nil): _*)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      inner.setHandle(getHandle)
-      inner.init(outputMode, timeMode)
-    }
+  /** Chain the general streak after a closed-window breach relation
+    * `(component, name, series, win_start: timestamp, value)` — fires
+    * (as [[ForDurationOut]], epoch-second `fire_win`) from the k-th
+    * consecutive breaching window on.
+    */
+  def forStreak(breaches: DataFrame, stepSec: Long, k: Int): Dataset[ForDurationOut] = {
+    require(k >= 1, "for-duration streak needs k >= 1")
+    val spark = breaches.sparkSession
+    import spark.implicits._
+    breachColumns(breaches, tagged = false).as[WinRow]
+      .groupByKey(r => (r.component, r.name, r.series))
+      .transformWithState(
+        new ForStreakProcessor[WinRow](stepSec, k, winRowWindow),
+        TimeMode.EventTime(), OutputMode.Append())
+  }
 
-    override def handleInputRows(
-        key: SeriesKey,
-        rows: Iterator[ClosedIncrease],
-        timers: TimerValues): Iterator[ForDurationOut] =
-      inner.stepAndEmit(key, rows.toSeq.map(r => (r.win_start, r.value)), timers)
-
-    override def handleExpiredTimer(
-        key: SeriesKey,
-        timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[ForDurationOut] =
-      inner.handleExpiredTimer(key, timers, expired)
+  /** [[forStreak]] for the CLOSED-increase chain: same fold, but the
+    * window identity is the plain epoch-second `win_start` and the
+    * declared `event_time` tag rides through to satisfy the downstream
+    * operator's event-time plumbing.
+    */
+  def forStreakChained(
+      breaches: DataFrame, stepSec: Long, k: Int): Dataset[ForDurationOut] = {
+    require(k >= 1, "for-duration streak needs k >= 1")
+    val spark = breaches.sparkSession
+    import spark.implicits._
+    breachColumns(breaches, tagged = true).as[ClosedIncrease]
+      .groupByKey(r => (r.component, r.name, r.series))
+      .transformWithState(
+        new ForStreakProcessor[ClosedIncrease](stepSec, k, closedWindow),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Chain the keep_firing_for streak after a closed-window breach
@@ -1134,225 +705,18 @@ object FirehoseTws {
     require(k >= 1, "for-duration streak needs k >= 1")
     val spark = breaches.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     if (breaches.columns.contains("event_time"))
-      breaches
-        .select(col("component"), col("name"), col("series"), col("win_start"),
-          col("value").cast("double").as("value"), col("event_time"))
-        .as[ClosedIncrease]
+      breachColumns(breaches, tagged = true).as[ClosedIncrease]
         .groupByKey(r => (r.component, r.name, r.series))
         .transformWithState(
-          new ForStreakKeepClosedProcessor(stepSec, k, keepSec),
+          new ForStreakKeepProcessor[ClosedIncrease](stepSec, k, keepSec, closedWindow),
           TimeMode.EventTime(), OutputMode.Append())
     else
-      breaches
-        .select(col("component"), col("name"), col("series"), col("win_start"),
-          col("value").cast("double").as("value"))
-        .as[WinRow]
+      breachColumns(breaches, tagged = false).as[WinRow]
         .groupByKey(r => (r.component, r.name, r.series))
         .transformWithState(
-          new ForStreakKeepProcessor(stepSec, k, keepSec),
+          new ForStreakKeepProcessor[WinRow](stepSec, k, keepSec, winRowWindow),
           TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** CLOSED-window counter increase in APPEND mode with the output's
-    * `win_start` declared as its EVENT-TIME column (Spark 4's
-    * `eventTimeColumnName` transformWithState overload — the designed
-    * mechanism for chaining stateful operators after a
-    * transformWithState): the same [[IncreaseCore]] fold as
-    * [[IncreaseProcessor]]/[[ForDurationProcessor]], but each (series,
-    * window) total emits exactly once when the watermark proves it
-    * final — which is what lets a DOWNSTREAM stateful operator (the
-    * general for-duration streak) legally consume rate/increase under
-    * arbitrary scalar wrappers, the shape the Update-mode operator
-    * could never chain. Timer re-arms to the earliest open window's end
-    * so quiet series still close; idle series evict after `ttlMs`.
-    */
-  class IncreaseClosedProcessor(widthSec: Long, ttlMs: Long)
-      extends StatefulProcessor[SeriesKey, GaugePoint, ClosedIncrease] {
-    @transient private var anchor: ValueState[CounterSample] = _
-    @transient private var buffer: ListState[CounterSample] = _
-    @transient private var finalized: MapState[Long, Double] = _
-    @transient private var timerTs: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      anchor = getHandle.getValueState[CounterSample](
-        "anchor", Encoders.product[CounterSample], TTLConfig.NONE)
-      buffer = getHandle.getListState[CounterSample](
-        "buffer", Encoders.product[CounterSample], TTLConfig.NONE)
-      finalized = getHandle.getMapState[Long, Double](
-        "finalized", Encoders.scalaLong, Encoders.scalaDouble, TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def armTimer(whenMs: Long): Unit = {
-      if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-      getHandle.registerTimer(whenMs)
-      timerTs.update(whenMs)
-    }
-
-    private def stepAndEmit(
-        key: SeriesKey, incoming: Seq[GaugePoint], timers: TimerValues,
-        evictWhenIdle: Boolean): Iterator[ClosedIncrease] = {
-      val anchorOpt = if (anchor.exists()) Some(anchor.get()) else None
-      val st = IncreaseState(
-        hasAnchor = anchorOpt.isDefined,
-        anchorTs = anchorOpt.map(_.ts).getOrElse(0L),
-        anchorId = anchorOpt.map(_.id).getOrElse(""),
-        anchorValue = anchorOpt.map(_.value).getOrElse(0.0),
-        buffer = if (buffer.exists()) buffer.get().toSeq else Nil,
-        finalized =
-          if (finalized.exists()) finalized.iterator().map(t => t._1 -> t._2).toMap
-          else Map.empty)
-      val wmSec = timers.getCurrentWatermarkInMs() / 1000L
-      val samples = incoming.map(p => CounterSample(p.timestamp, p.id, p.value))
-      val r = IncreaseCore.step(st, samples, wmSec, widthSec)
-      val ns = r.state
-      // the declared event-time column must not lag the CURRENT
-      // watermark (Spark's chaining contract —
-      // EMITTING_ROWS_OLDER_THAN_WATERMARK_NOT_ALLOWED, hit verbatim in
-      // the first cut): a window closes exactly BECAUSE the watermark
-      // passed its end, so its own end is always in the past. The tag
-      // is therefore max(window end, watermark + 1 ms) — pure plumbing
-      // for the downstream operator's late-row bound; the REAL window
-      // rides the plain `win_start` column the streak folds on
-      val tagMs = math.max(timers.getCurrentWatermarkInMs() + 1L, 1L)
-      val out = r.closed.map { case (win, inc) =>
-        ClosedIncrease(key._1, key._2, key._3, win, inc,
-          new java.sql.Timestamp(math.max((win + widthSec) * 1000L, tagMs)))
-      }
-      val idle = ns.buffer.isEmpty && ns.finalized.isEmpty
-      if (evictWhenIdle && idle) {
-        anchor.clear(); buffer.clear(); finalized.clear(); timerTs.clear()
-      } else {
-        ns.finalized.foreach { case (win, v) =>
-          if (!st.finalized.get(win).contains(v)) finalized.updateValue(win, v)
-        }
-        st.finalized.keys.filterNot(ns.finalized.contains).foreach(finalized.removeKey)
-        if (ns.hasAnchor)
-          anchor.update(CounterSample(ns.anchorTs, ns.anchorId, ns.anchorValue))
-        buffer.clear()
-        if (ns.buffer.nonEmpty) buffer.put(ns.buffer.toArray)
-        val openEnds =
-          (ns.finalized.keys ++
-            ns.buffer.map(c => c.ts - math.floorMod(c.ts, widthSec)))
-            .map(win => (win + widthSec) * 1000L)
-        if (openEnds.nonEmpty) armTimer(openEnds.min)
-        else {
-          val wm = timers.getCurrentWatermarkInMs()
-          if (wm > 0) armTimer(wm + ttlMs)
-          else armTimer(math.max(ns.anchorTs, 1L) * 1000L + ttlMs)
-        }
-      }
-      out.iterator
-    }
-
-    override def handleInputRows(
-        key: SeriesKey,
-        rows: Iterator[GaugePoint],
-        timers: TimerValues): Iterator[ClosedIncrease] =
-      stepAndEmit(key, rows.toSeq, timers, evictWhenIdle = false)
-
-    override def handleExpiredTimer(
-        key: SeriesKey,
-        timers: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[ClosedIncrease] = {
-      timerTs.clear()
-      stepAndEmit(key, Nil, timers, evictWhenIdle = true)
-    }
-  }
-
-  /** [[IncreaseClosedProcessor]] wired: per-(series, window) FINAL
-    * increases in append mode, `win_start` tagged as the event-time
-    * column so downstream stateful operators (the for-duration streak)
-    * can chain.
-    */
-  def counterIncreaseClosed(
-      metrics: DataFrame,
-      widthSec: Long = 3600,
-      watermarkDelay: String = "10 minutes",
-      ttlMs: Long = 10 * 60 * 1000L): Dataset[ClosedIncrease] = {
-    val spark = metrics.sparkSession
-    import spark.implicits._
-    FirehoseStream.keyedPoints(metrics, watermarkDelay)
-      .groupByKey(p => (p.component, p.name, p.series))
-      .transformWithState(
-        new IncreaseClosedProcessor(widthSec, ttlMs),
-        "event_time", OutputMode.Append())
-  }
-
-  /** [[forStreak]] for the CLOSED-increase chain: same fold, but the
-    * window identity is the plain epoch-second `win_start` and the
-    * declared `event_time` tag rides through to satisfy the downstream
-    * operator's event-time plumbing.
-    */
-  def forStreakChained(
-      breaches: DataFrame, stepSec: Long, k: Int): Dataset[ForDurationOut] = {
-    require(k >= 1, "for-duration streak needs k >= 1")
-    val spark = breaches.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    breaches
-      .select(col("component"), col("name"), col("series"), col("win_start"),
-        col("value").cast("double").as("value"), col("event_time"))
-      .as[ClosedIncrease]
-      .groupByKey(r => (r.component, r.name, r.series))
-      .transformWithState(
-        new ForStreakClosedProcessor(stepSec, k),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** [[ForStreakProcessor]] over [[ClosedIncrease]] rows (epoch-second
-    * windows) — the chained-closed input shape.
-    */
-  class ForStreakClosedProcessor(stepSec: Long, k: Int)
-      extends StatefulProcessor[SeriesKey, ClosedIncrease, ForDurationOut] {
-    @transient private var streak: ValueState[(Long, Int)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      streak = getHandle.getValueState[(Long, Int)](
-        "streak", Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt),
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: SeriesKey,
-        rows: Iterator[ClosedIncrease],
-        timers: TimerValues): Iterator[ForDurationOut] = {
-      var (lastWin, s) = if (streak.exists()) streak.get() else (Long.MinValue, 0)
-      val fires = rows.toSeq.sortBy(_.win_start).flatMap { r =>
-        s = if (lastWin == r.win_start - stepSec && s > 0) s + 1 else 1
-        lastWin = r.win_start
-        if (s >= k)
-          Some(ForDurationOut(key._1, key._2, key._3, r.win_start, r.value))
-        else None
-      }
-      streak.update((lastWin, s))
-      fires.iterator
-    }
-  }
-
-  /** Chain the general streak after a closed-window breach relation
-    * `(component, name, series, win_start: timestamp, value)` — fires
-    * (as [[ForDurationOut]], epoch-second `fire_win`) from the k-th
-    * consecutive breaching window on.
-    */
-  def forStreak(breaches: DataFrame, stepSec: Long, k: Int): Dataset[ForDurationOut] = {
-    require(k >= 1, "for-duration streak needs k >= 1")
-    val spark = breaches.sparkSession
-    import spark.implicits._
-    breaches
-      .select(org.apache.spark.sql.functions.col("component"),
-        org.apache.spark.sql.functions.col("name"),
-        org.apache.spark.sql.functions.col("series"),
-        org.apache.spark.sql.functions.col("win_start"),
-        org.apache.spark.sql.functions.col("value").cast("double").as("value"))
-      .as[WinRow]
-      .groupByKey(r => (r.component, r.name, r.series))
-      .transformWithState(
-        new ForStreakProcessor(stepSec, k),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 }
 

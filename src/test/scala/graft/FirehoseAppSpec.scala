@@ -344,24 +344,26 @@ class FirehoseAppSpec extends SparkSuite {
       Files.createTempDirectory("graft-gauge3chk").toString)
     val dir = Files.createTempDirectory("graft-gauge3inc").toFile
     // width 100 s, 0 s watermark, 1 s TTL: the one file moves the
-    // watermark to 250 s, past u1's timeout (51 s) and window 0's end; only
-    // the watermark-only batch that follows can close window 0
+    // watermark to 250 s, past u1's timer (window 0's end); only the
+    // watermark-only batch that follows can close window 0
     Files.write(dir.toPath.resolve("b1.json"), Seq(
       metricJson("1", "c_total", 10, "u1", 10.0),
       metricJson("2", "c_total", 50, "u1", 16.0),
       metricJson("3", "c_total", 250, "u2", 1.0)).mkString("\n").getBytes)
-    val q = FirehoseStream.counterIncreaseClosed(
-        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-        widthSec = 100, watermarkDelay = "0 seconds", ttlMs = 1000L)
-      .writeStream.format("memory").queryName("inc_after_app_t").outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("graft-gauge3incchk").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      assert(batches(q).length === 2)
-      val rows = spark.table("inc_after_app_t").collect()
-        .map(r => (r.getAs[String]("series"), r.getAs[Long]("win_start"), r.getAs[Double]("increase")))
-      assert(rows.toSeq === Seq(("user=u1", 0L, 6.0)))
-    } finally { q.stop(); app.stop() }
+    try withRocksDb {
+      val q = graft.streaming.FirehoseTws.counterIncreaseClosed(
+          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+          widthSec = 100, watermarkDelay = "0 seconds", ttlMs = 1000L)
+        .writeStream.format("memory").queryName("inc_after_app_t").outputMode("append")
+        .option("checkpointLocation", Files.createTempDirectory("graft-gauge3incchk").toString)
+        .start()
+      try {
+        q.processAllAvailable()
+        assert(batches(q).length === 2)
+        val rows = spark.table("inc_after_app_t").collect()
+          .map(r => (r.getAs[String]("series"), r.getAs[Long]("win_start"), r.getAs[Double]("value")))
+        assert(rows.toSeq === Seq(("user=u1", 0L, 6.0)))
+      } finally q.stop()
+    } finally app.stop()
   }
 }

@@ -183,18 +183,6 @@ class PromQlStreamSpec extends SparkSuite {
     assert(chk.exists())
   }
 
-  // transformWithState (the lowered for-duration operator) is RocksDB-only
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streaming `for` duration fires after k consecutive windows, batch-identically") { withRocksDb {
     val dir = Files.createTempDirectory("graft-pqs-for").toFile
     val chk = Files.createTempDirectory("graft-pqs-forchk").toFile

@@ -27,16 +27,6 @@ class RefreshDriverPathSpec extends SparkSuite {
   private def tmp(pfx: String): String =
     Files.createTempDirectory(pfx).toFile.getAbsolutePath
 
-  private def withConf(k: String, v: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body
-    finally old match {
-      case Some(o) => spark.conf.set(k, o)
-      case None => spark.conf.unset(k)
-    }
-  }
-
   /** A seeded MV lifecycle (create, append span, delete span) whose
     * refreshes exercise the incremental arm, the recompute arm, zeroed
     * groups, and the knownKeys handoff. Returns the final view rows.

@@ -319,42 +319,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState subquery port matches the fMGWS sibling's scenario") {
-    withRocksDb {
-      val dir = Files.createTempDirectory("graft-tws-subq").toFile
-      val chk = Files.createTempDirectory("graft-tws-subqchk").toFile
-      def b(id: String, ts: Long, v: Double) = metricJson(id, "c_total", ts, "u1", v)
-      // the fMGWS sibling's exact scenario: reset in the second batch,
-      // outer [0,120) closes at wm >= 120
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(b("s1", 10, 10.0), b("s2", 50, 30.0), b("s3", 70, 35.0))
-          .mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.subqueryOverTimeClosed(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          innerSec = 60, outerSec = 120, watermarkDelay = "1 second")
-        .toDF()
-        .writeStream.format("memory").queryName("tws_subq_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        Files.write(dir.toPath.resolve("b2.json"),
-          Seq(b("s4", 100, 20.0), b("s5", 1000, 1.0)).mkString("\n").getBytes)
-        q.processAllAvailable()
-        Files.write(dir.toPath.resolve("b3.json"),
-          Seq(b("s6", 1400, 2.0)).mkString("\n").getBytes)
-        q.processAllAvailable()
-        val rows = spark.table("tws_subq_t").filter(col("outer_win") === 0L).collect()
-        assert(rows.length === 1) // exactly once
-        val s = rows.head
-        assert(s.getAs[Long]("n_points") === 2L)
-        assert(s.getAs[Double]("min_rate") === 20.0 / 60.0)
-        assert(s.getAs[Double]("max_rate") === 25.0 / 60.0)
-        assert(s.getAs[Double]("avg_rate") === 45.0 / 120.0)
-      } finally q.stop()
-    }
-  }
-
   test("streaming gauge state keeps latest value per series across batches") {
     val dir = Files.createTempDirectory("graft-stream").toFile
     val chk = Files.createTempDirectory("graft-chk").toFile
@@ -439,28 +403,21 @@ class StreamingSpec extends SparkSuite {
       Seq(
         metricJson("1", "bytes_total", 1000, "u1", 10.0),
         metricJson("2", "bytes_total", 2000, "u1", 20.0)).mkString("\n").getBytes)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val q = FirehoseStream.gaugeLatest(
-        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-        watermarkDelay = "0 seconds")
-      .writeStream.format("memory").queryName("rocks_t").outputMode("update")
-      .option("checkpointLocation", chk.getAbsolutePath)
-      .start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("rocks_t")
-        .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      assert(out === Map("user=u1" -> 20.0))
-      assert(q.lastProgress.stateOperators.length > 0)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val q = FirehoseStream.gaugeLatest(
+          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+          watermarkDelay = "0 seconds")
+        .writeStream.format("memory").queryName("rocks_t").outputMode("update")
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .start()
+      try {
+        q.processAllAvailable()
+        val out = spark.table("rocks_t")
+          .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+        assert(out === Map("user=u1" -> 20.0))
+        assert(q.lastProgress.stateOperators.length > 0)
+      } finally q.stop()
     }
   }
 
@@ -495,141 +452,107 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  // transformWithState is RocksDB-only; set/restore the provider around a body
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("transformWithState gauge keeps latest value per series and matches the fMGWS port") {
-    withRocksDb {
-      val dir = Files.createTempDirectory("graft-tws-g").toFile
-      val chk = Files.createTempDirectory("graft-tws-gchk").toFile
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(
-          metricJson("1", "bytes_total", 1000, "u1", 10.0),
-          metricJson("2", "bytes_total", 2000, "u1", 20.0),
-          metricJson("3", "bytes_total", 1500, "u2", 15.0)).mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.gaugeLatest(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          watermarkDelay = "1 hour")
-        .writeStream.format("memory").queryName("tws_g_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        // stale sample for u1 must lose to the kept state
-        Files.write(dir.toPath.resolve("b2.json"),
-          Seq(metricJson("4", "bytes_total", 500, "u1", 5.0)).mkString("\n").getBytes)
-        q.processAllAvailable()
-        val out = spark.table("tws_g_t")
-          .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        assert(out === Map("user=u1" -> 20.0, "user=u2" -> 15.0))
-      } finally q.stop()
-    }
-  }
-
   test("transformWithState gauge bootstraps from a landed batch snapshot") {
-    withRocksDb {
-      val dir = Files.createTempDirectory("graft-tws-b").toFile
-      val chk = Files.createTempDirectory("graft-tws-bchk").toFile
-      // landed snapshot says u1 = 20.0 @ ts 2000; the stream's first sample
-      // is STALE (5.0 @ ts 1000) — with an empty registry it would win;
-      // bootstrapped state must hold the landed value
-      val snapshot = spark.createDataFrame(Seq(
-        ("app", "bytes_total", "user=u1", 20.0, 2000L)))
-        .toDF("component", "name", "series", "last_value", "last_ts")
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(metricJson("9", "bytes_total", 1000, "u1", 5.0)).mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.gaugeLatestBootstrapped(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          snapshot, watermarkDelay = "1 hour")
-        .writeStream.format("memory").queryName("tws_b_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        val out = spark.table("tws_b_t")
-          .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        assert(out === Map("user=u1" -> 20.0),
-          s"stale first sample beat the bootstrapped snapshot: $out")
-      } finally q.stop()
-    }
+    // named for the API it first ran on; it now runs flatMapGroupsWithState
+    val dir = Files.createTempDirectory("graft-boot").toFile
+    val chk = Files.createTempDirectory("graft-bootchk").toFile
+    // landed snapshot says u1 = 20.0 @ ts 2000; the stream's first sample
+    // is STALE (5.0 @ ts 1000) — with an empty registry it would win;
+    // bootstrapped state must hold the landed value
+    val snapshot = spark.createDataFrame(Seq(
+      ("app", "bytes_total", "user=u1", 20.0, 2000L)))
+      .toDF("component", "name", "series", "last_value", "last_ts")
+    Files.write(dir.toPath.resolve("b1.json"),
+      Seq(metricJson("9", "bytes_total", 1000, "u1", 5.0)).mkString("\n").getBytes)
+    val q = FirehoseStream.gaugeLatestBootstrapped(
+        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+        snapshot, watermarkDelay = "1 hour")
+      .writeStream.format("memory").queryName("boot_t").outputMode("update")
+      .option("checkpointLocation", chk.getAbsolutePath)
+      .start()
+    try {
+      q.processAllAvailable()
+      val out = spark.table("boot_t")
+        .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(out === Map("user=u1" -> 20.0),
+        s"stale first sample beat the bootstrapped snapshot: $out")
+    } finally q.stop()
+  }
+
+  test("a series only in the bootstrap snapshot emits nothing and is evicted " +
+      "once the watermark passes its last sample plus the TTL") {
+    val dir = Files.createTempDirectory("graft-boot-evict").toFile
+    val chk = Files.createTempDirectory("graft-boot-evictchk").toFile
+    // u1 is in the snapshot and the stream; u9 only in the snapshot, last
+    // seen at 1000 s, so with a 600 s TTL it times out at 1600 s
+    val snapshot = spark.createDataFrame(Seq(
+      ("app", "bytes_total", "user=u1", 20.0, 2000L),
+      ("app", "bytes_total", "user=u9", 99.0, 1000L)))
+      .toDF("component", "name", "series", "last_value", "last_ts")
+    Files.write(dir.toPath.resolve("b1.json"),
+      Seq(metricJson("1", "bytes_total", 1500, "u1", 5.0)).mkString("\n").getBytes)
+    val q = FirehoseStream.gaugeLatestBootstrapped(
+        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+        snapshot, watermarkDelay = "0 seconds", ttlMs = 600 * 1000L)
+      .writeStream.format("memory").queryName("boot_evict_t").outputMode("update")
+      .option("checkpointLocation", chk.getAbsolutePath)
+      .start()
+    // the series held in the operator's state at the last committed batch
+    def stateSeries(): Set[String] =
+      spark.read.format("statestore").load(chk.getAbsolutePath)
+        .select(col("key").getField("_3")).collect().map(_.getString(0)).toSet
+    def emitted(): Seq[String] =
+      spark.table("boot_evict_t").collect().map(_.getAs[String]("series")).toSeq
+    try {
+      q.processAllAvailable()
+      // the first batch runs the fold for u9 with no rows: it emits nothing
+      assert(emitted() === Seq("user=u1"))
+      assert(stateSeries() === Set("user=u1", "user=u9"))
+      // u2's sample moves the watermark to 1700 s, past u9's timeout but
+      // not u1's (2000 s + TTL); the watermark-only batch after it evicts
+      Files.write(dir.toPath.resolve("b2.json"),
+        Seq(metricJson("2", "bytes_total", 1700, "u2", 1.0)).mkString("\n").getBytes)
+      q.processAllAvailable()
+      assert(stateSeries() === Set("user=u1", "user=u2"))
+      assert(!emitted().contains("user=u9"))
+    } finally q.stop()
   }
 
   test("the incremental registry bootstraps the streaming gauge: a fresh " +
       "deployment's stream starts from the landed heads") {
-    withRocksDb {
-      import spark.implicits._
-      graft.promql.PromRegistry.reset()
-      // land two ticks; the registry's head for u1 is 20.0 @ 2000
-      val root = Files.createTempDirectory("graft-tws-reg").toFile.getAbsolutePath
-      graft.promql.PromQlVersioned.land(
-        Seq(("app", "bytes_total", Map("user" -> "u1"), 1500L, "a", 7.0))
-          .toDF("component", "name", "labels", "timestamp", "id", "value"), root)
-      graft.promql.PromQlVersioned.land(
-        Seq(("app", "bytes_total", Map("user" -> "u1"), 2000L, "b", 20.0))
-          .toDF("component", "name", "labels", "timestamp", "id", "value"), root)
-      val snapshot = graft.promql.PromRegistry.frame(spark,
-        graft.promql.PromRegistry.current(spark, root))
-      val dir = Files.createTempDirectory("graft-tws-reg-in").toFile
-      val chk = Files.createTempDirectory("graft-tws-reg-chk").toFile
-      // the stream's first sample is STALE vs the landed head — the
-      // bootstrapped state must hold the registry value
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(metricJson("9", "bytes_total", 1000, "u1", 5.0)).mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.gaugeLatestBootstrapped(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          snapshot, watermarkDelay = "1 hour")
-        .writeStream.format("memory").queryName("tws_reg_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        val out = spark.table("tws_reg_t")
-          .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        assert(out === Map("user=u1" -> 20.0),
-          s"stale first sample beat the registry bootstrap: $out")
-      } finally q.stop()
-    }
-  }
-
-  test("transformWithState counter increase keeps per-window accumulators (late-data parity)") {
-    withRocksDb {
-      val dir = Files.createTempDirectory("graft-tws-i").toFile
-      val chk = Files.createTempDirectory("graft-tws-ichk").toFile
-      // same late-sample scenario as the fMGWS spec: the MapState port must
-      // also re-place 20@200 between 10@100 and 30@300 (window total 20)
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(
-          metricJson("1", "c_total", 100, "u1", 10.0),
-          metricJson("3", "c_total", 300, "u1", 30.0)).mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.counterIncrease(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          widthSec = 3600, watermarkDelay = "1 hour")
-        .writeStream.format("memory").queryName("tws_i_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        Files.write(dir.toPath.resolve("b2.json"),
-          Seq(metricJson("2", "c_total", 200, "u1", 20.0)).mkString("\n").getBytes)
-        q.processAllAvailable()
-        val out = spark.table("tws_i_t")
-          .groupBy("win_start").agg(last(col("increase")).as("v"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        assert(out === Map(0L -> 20.0))
-      } finally q.stop()
-    }
+    import spark.implicits._
+    graft.promql.PromRegistry.reset()
+    // land two ticks; the registry's head for u1 is 20.0 @ 2000
+    val root = Files.createTempDirectory("graft-boot-reg").toFile.getAbsolutePath
+    graft.promql.PromQlVersioned.land(
+      Seq(("app", "bytes_total", Map("user" -> "u1"), 1500L, "a", 7.0))
+        .toDF("component", "name", "labels", "timestamp", "id", "value"), root)
+    graft.promql.PromQlVersioned.land(
+      Seq(("app", "bytes_total", Map("user" -> "u1"), 2000L, "b", 20.0))
+        .toDF("component", "name", "labels", "timestamp", "id", "value"), root)
+    val snapshot = graft.promql.PromRegistry.frame(spark,
+      graft.promql.PromRegistry.current(spark, root))
+    val dir = Files.createTempDirectory("graft-boot-reg-in").toFile
+    val chk = Files.createTempDirectory("graft-boot-reg-chk").toFile
+    // the stream's first sample is STALE vs the landed head — the
+    // bootstrapped state must hold the registry value
+    Files.write(dir.toPath.resolve("b1.json"),
+      Seq(metricJson("9", "bytes_total", 1000, "u1", 5.0)).mkString("\n").getBytes)
+    val q = FirehoseStream.gaugeLatestBootstrapped(
+        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+        snapshot, watermarkDelay = "1 hour")
+      .writeStream.format("memory").queryName("boot_reg_t").outputMode("update")
+      .option("checkpointLocation", chk.getAbsolutePath)
+      .start()
+    try {
+      q.processAllAvailable()
+      val out = spark.table("boot_reg_t")
+        .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(out === Map("user=u1" -> 20.0),
+        s"stale first sample beat the registry bootstrap: $out")
+    } finally q.stop()
   }
 
   test("streaming counter increase handles late-but-in-watermark samples (batch parity)") {
@@ -715,99 +638,103 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("closed-window counter increase emits each window once with its final total") {
-    val dir = Files.createTempDirectory("graft-inc-closed").toFile
-    val chk = Files.createTempDirectory("graft-inc-closedchk").toFile
-    // widthSec 100: window 0 = [0,100), window 100 = [100,200). Batch 1
-    // fills window 0; batch 2's ts 250 pushes the 0-delay watermark past
-    // both windows' ends, closing them
-    Files.write(dir.toPath.resolve("b1.json"),
-      Seq(
-        metricJson("1", "c_total", 10, "u1", 10.0),
-        metricJson("2", "c_total", 50, "u1", 16.0),
-        metricJson("3", "c_total", 150, "u1", 20.0)).mkString("\n").getBytes)
-    val q = FirehoseStream.counterIncreaseClosed(
-        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-        widthSec = 100, watermarkDelay = "0 seconds")
-      .writeStream.format("memory").queryName("inc_closed_t").outputMode("update")
-      .option("checkpointLocation", chk.getAbsolutePath)
-      .start()
-    try {
-      q.processAllAvailable()
-      Files.write(dir.toPath.resolve("b2.json"),
-        Seq(metricJson("4", "c_total", 250, "u1", 25.0)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      // each batch's watermark applies during the NEXT batch, so advance
-      // twice more: b3's arrival closes windows 0/100 (wm 250), b4's
-      // arrival closes window 200 (wm 400)
-      Files.write(dir.toPath.resolve("b3.json"),
-        Seq(metricJson("5", "c_total", 400, "u1", 30.0)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      Files.write(dir.toPath.resolve("b4.json"),
-        Seq(metricJson("6", "c_total", 500, "u1", 31.0)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      val rows = spark.table("inc_closed_t")
-        .collect().map(r => r.getAs[Long]("win_start") -> r.getAs[Double]("increase"))
-      // exactly once per closed window, with the batch totals:
-      // window 0: 0 + 6 = 6; window 100: +4 (16→20); window 200: +5 (20→25)
-      assert(rows.map(_._1).distinct.length === rows.length,
-        s"window emitted twice: ${rows.toSeq}")
-      val byWin = rows.toMap
-      assert(byWin.get(0L) === Some(6.0), s"got $byWin")
-      assert(byWin.get(100L) === Some(4.0), s"got $byWin")
-      assert(byWin.get(200L) === Some(5.0), s"got $byWin")
-    } finally q.stop()
+    withRocksDb {
+      val dir = Files.createTempDirectory("graft-inc-closed").toFile
+      val chk = Files.createTempDirectory("graft-inc-closedchk").toFile
+      // widthSec 100: window 0 = [0,100), window 100 = [100,200). Batch 1
+      // fills window 0; batch 2's ts 250 pushes the 0-delay watermark past
+      // both windows' ends, closing them
+      Files.write(dir.toPath.resolve("b1.json"),
+        Seq(
+          metricJson("1", "c_total", 10, "u1", 10.0),
+          metricJson("2", "c_total", 50, "u1", 16.0),
+          metricJson("3", "c_total", 150, "u1", 20.0)).mkString("\n").getBytes)
+      val q = graft.streaming.FirehoseTws.counterIncreaseClosed(
+          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+          widthSec = 100, watermarkDelay = "0 seconds")
+        .writeStream.format("memory").queryName("inc_closed_t").outputMode("append")
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .start()
+      try {
+        q.processAllAvailable()
+        Files.write(dir.toPath.resolve("b2.json"),
+          Seq(metricJson("4", "c_total", 250, "u1", 25.0)).mkString("\n").getBytes)
+        q.processAllAvailable()
+        // each batch's watermark applies during the NEXT batch, so advance
+        // twice more: b3's arrival closes windows 0/100 (wm 250), b4's
+        // arrival closes window 200 (wm 400)
+        Files.write(dir.toPath.resolve("b3.json"),
+          Seq(metricJson("5", "c_total", 400, "u1", 30.0)).mkString("\n").getBytes)
+        q.processAllAvailable()
+        Files.write(dir.toPath.resolve("b4.json"),
+          Seq(metricJson("6", "c_total", 500, "u1", 31.0)).mkString("\n").getBytes)
+        q.processAllAvailable()
+        val rows = spark.table("inc_closed_t")
+          .collect().map(r => r.getAs[Long]("win_start") -> r.getAs[Double]("value"))
+        // exactly once per closed window, with the batch totals:
+        // window 0: 0 + 6 = 6; window 100: +4 (16→20); window 200: +5 (20→25)
+        assert(rows.map(_._1).distinct.length === rows.length,
+          s"window emitted twice: ${rows.toSeq}")
+        val byWin = rows.toMap
+        assert(byWin.get(0L) === Some(6.0), s"got $byWin")
+        assert(byWin.get(100L) === Some(4.0), s"got $byWin")
+        assert(byWin.get(200L) === Some(5.0), s"got $byWin")
+      } finally q.stop()
+    }
   }
 
   test("closed-window emission stays exactly-once when the TTL fires inside an open window") {
-    // The double-emit trap: a series posts in window 0, goes idle, its TTL
-    // fires while window 0 is still open (other series advance the
-    // watermark), then the series RESUMES inside window 0. A force-close at
-    // TTL time would emit window 0 twice — once partial, once after the
-    // resume. The fix keeps open windows in state past the TTL and closes
-    // them only when the watermark passes their end.
-    val dir = Files.createTempDirectory("graft-inc-ttl").toFile
-    val chk = Files.createTempDirectory("graft-inc-ttlchk").toFile
-    // widthSec 100, 0-delay watermark, 1 s TTL: u1's timer (set from its
-    // own event time on batch 1) expires as soon as u2's traffic pushes the
-    // watermark past it — long before window 0's end
-    Files.write(dir.toPath.resolve("b1.json"),
-      Seq(
-        metricJson("1", "c_total", 10, "u1", 10.0),
-        metricJson("2", "c_total", 50, "u2", 1.0)).mkString("\n").getBytes)
-    val q = FirehoseStream.counterIncreaseClosed(
-        FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-        widthSec = 100, watermarkDelay = "0 seconds", ttlMs = 1000L)
-      .writeStream.format("memory").queryName("inc_ttl_t").outputMode("update")
-      .option("checkpointLocation", chk.getAbsolutePath)
-      .start()
-    try {
-      q.processAllAvailable()
-      // u1's TTL fires here (wm 50 > its 11 s timer) while window 0 is open
-      Files.write(dir.toPath.resolve("b2.json"),
-        Seq(metricJson("3", "c_total", 60, "u2", 2.0)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      // u1 resumes INSIDE window 0 (ts 90 >= wm 60)
-      Files.write(dir.toPath.resolve("b3.json"),
+    withRocksDb {
+      // The double-emit trap: a series posts in window 0, goes idle, its TTL
+      // fires while window 0 is still open (other series advance the
+      // watermark), then the series RESUMES inside window 0. A force-close at
+      // TTL time would emit window 0 twice — once partial, once after the
+      // resume. The fix keeps open windows in state past the TTL and closes
+      // them only when the watermark passes their end.
+      val dir = Files.createTempDirectory("graft-inc-ttl").toFile
+      val chk = Files.createTempDirectory("graft-inc-ttlchk").toFile
+      // widthSec 100, 0-delay watermark, 1 s TTL: u1 idles far past its TTL
+      // while u2's traffic advances the watermark — long before window 0's
+      // end, where u1's timer waits while the window is open
+      Files.write(dir.toPath.resolve("b1.json"),
         Seq(
-          metricJson("4", "c_total", 90, "u1", 17.0),
-          metricJson("5", "c_total", 95, "u2", 3.0)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      // push the watermark past window 0's end (twice: a batch's watermark
-      // applies during the NEXT batch)
-      Files.write(dir.toPath.resolve("b4.json"),
-        Seq(metricJson("6", "c_total", 250, "u2", 4.0)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      Files.write(dir.toPath.resolve("b5.json"),
-        Seq(metricJson("7", "c_total", 400, "u2", 5.0)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      val u1 = spark.table("inc_ttl_t")
-        .filter(col("series").contains("u1"))
-        .collect().map(r => r.getAs[Long]("win_start") -> r.getAs[Double]("increase"))
-      assert(u1.map(_._1).distinct.length === u1.length,
-        s"window emitted twice after TTL + resume: ${u1.toSeq}")
-      // batch semantics over u1's full history: 0 (first) + 7 (10→17)
-      assert(u1.toMap.get(0L) === Some(7.0), s"got ${u1.toSeq}")
-    } finally q.stop()
+          metricJson("1", "c_total", 10, "u1", 10.0),
+          metricJson("2", "c_total", 50, "u2", 1.0)).mkString("\n").getBytes)
+      val q = graft.streaming.FirehoseTws.counterIncreaseClosed(
+          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
+          widthSec = 100, watermarkDelay = "0 seconds", ttlMs = 1000L)
+        .writeStream.format("memory").queryName("inc_ttl_t").outputMode("append")
+        .option("checkpointLocation", chk.getAbsolutePath)
+        .start()
+      try {
+        q.processAllAvailable()
+        // u1 is idle past its TTL here (wm 50) while window 0 is open
+        Files.write(dir.toPath.resolve("b2.json"),
+          Seq(metricJson("3", "c_total", 60, "u2", 2.0)).mkString("\n").getBytes)
+        q.processAllAvailable()
+        // u1 resumes INSIDE window 0 (ts 90 >= wm 60)
+        Files.write(dir.toPath.resolve("b3.json"),
+          Seq(
+            metricJson("4", "c_total", 90, "u1", 17.0),
+            metricJson("5", "c_total", 95, "u2", 3.0)).mkString("\n").getBytes)
+        q.processAllAvailable()
+        // push the watermark past window 0's end (twice: a batch's watermark
+        // applies during the NEXT batch)
+        Files.write(dir.toPath.resolve("b4.json"),
+          Seq(metricJson("6", "c_total", 250, "u2", 4.0)).mkString("\n").getBytes)
+        q.processAllAvailable()
+        Files.write(dir.toPath.resolve("b5.json"),
+          Seq(metricJson("7", "c_total", 400, "u2", 5.0)).mkString("\n").getBytes)
+        q.processAllAvailable()
+        val u1 = spark.table("inc_ttl_t")
+          .filter(col("series").contains("u1"))
+          .collect().map(r => r.getAs[Long]("win_start") -> r.getAs[Double]("value"))
+        assert(u1.map(_._1).distinct.length === u1.length,
+          s"window emitted twice after TTL + resume: ${u1.toSeq}")
+        // batch semantics over u1's full history: 0 (first) + 7 (10→17)
+        assert(u1.toMap.get(0L) === Some(7.0), s"got ${u1.toSeq}")
+      } finally q.stop()
+    }
   }
 
   test("streaming ratio alert emits exactly-once closed long windows with batch parity") {
@@ -1237,53 +1164,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState ratio alert matches the fMGWS port's scenario") {
-    withRocksDb {
-      val dir = Files.createTempDirectory("graft-tws-r").toFile
-      val chk = Files.createTempDirectory("graft-tws-rchk").toFile
-      // same planted scenario as the fMGWS spec: short ratios .5/.5/1.0,
-      // long ratio 0.7, θ=0.6 ⇒ exactly window 200 alerts, each window once
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(
-          metricJson("e1", "error_total", 10, "u1", 0.0),
-          metricJson("e2", "error_total", 50, "u1", 2.0),
-          metricJson("v1", "view_total", 10, "u1", 10.0),
-          metricJson("v2", "view_total", 60, "u1", 14.0)).mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.ratioAlertClosed(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          shortSec = 100, longSec = 300, threshold = 0.6,
-          watermarkDelay = "0 seconds")
-        .writeStream.format("memory").queryName("tws_r_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        Files.write(dir.toPath.resolve("b2.json"),
-          Seq(
-            metricJson("e3", "error_total", 150, "u1", 3.0),
-            metricJson("e4", "error_total", 250, "u1", 7.0),
-            metricJson("v3", "view_total", 160, "u1", 16.0),
-            metricJson("v4", "view_total", 260, "u1", 20.0)).mkString("\n").getBytes)
-        q.processAllAvailable()
-        assert(spark.table("tws_r_t").isEmpty) // long window still open
-        Seq(350L, 400L).zipWithIndex.foreach { case (ts, i) =>
-          Files.write(dir.toPath.resolve(s"adv$i.json"),
-            Seq(metricJson(s"v${5 + i}", "view_total", ts, "u1", 21.0 + i))
-              .mkString("\n").getBytes)
-          q.processAllAvailable()
-        }
-        val streamed = spark.table("tws_r_t").collect()
-          .map(r => r.getAs[Long]("win_start") ->
-            ((r.getAs[Double]("short_ratio"), r.getAs[Double]("long_ratio"),
-              r.getAs[Int]("alert"))))
-        assert(streamed.map(_._1).distinct.length === streamed.length)
-        assert(streamed.toMap === Map(
-          0L -> ((0.5, 0.7, 0)), 100L -> ((0.5, 0.7, 0)), 200L -> ((1.0, 0.7, 1))),
-          s"got ${streamed.toSeq}")
-      } finally q.stop()
-    }
-  }
-
   test("ratio alert emits an idle series' parked long window via its re-armed timer") {
     // u1 posts both counters inside long window [0, 300) then goes silent;
     // only u2's unrelated traffic advances the watermark. u1's rows must
@@ -1320,43 +1200,6 @@ class StreamingSpec extends SparkSuite {
       assert(u1.toMap === Map(0L -> ((0.8, 1))), s"got ${u1.toSeq}")
       assert(u1.length === 1)
     } finally q.stop()
-  }
-
-  test("transformWithState ratio alert emits a parked window via its timer") {
-    withRocksDb {
-      // the tws twin of the idle-series scenario: u1 goes silent after one
-      // long window; u2's unrelated traffic advances the watermark and
-      // u1's parked rows must emit from handleExpiredTimer
-      val dir = Files.createTempDirectory("graft-tws-ridle").toFile
-      val chk = Files.createTempDirectory("graft-tws-ridlechk").toFile
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(
-          metricJson("e1", "error_total", 10, "u1", 0.0),
-          metricJson("e2", "error_total", 50, "u1", 4.0),
-          metricJson("v1", "view_total", 20, "u1", 0.0),
-          metricJson("v2", "view_total", 60, "u1", 5.0)).mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.ratioAlertClosed(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          shortSec = 100, longSec = 300, threshold = 0.6,
-          watermarkDelay = "0 seconds")
-        .writeStream.format("memory").queryName("tws_ridle_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        Seq(500L, 700L, 900L).zipWithIndex.foreach { case (ts, i) =>
-          Files.write(dir.toPath.resolve(s"adv$i.json"),
-            Seq(metricJson(s"a$i", "view_total", ts, "u2", i.toDouble)).mkString("\n").getBytes)
-          q.processAllAvailable()
-        }
-        val u1 = spark.table("tws_ridle_t")
-          .filter(col("series").contains("u1")).collect()
-          .map(r => r.getAs[Long]("win_start") ->
-            ((r.getAs[Double]("short_ratio"), r.getAs[Int]("alert"))))
-        assert(u1.toMap === Map(0L -> ((0.8, 1))), s"got ${u1.toSeq}")
-        assert(u1.length === 1)
-      } finally q.stop()
-    }
   }
 
   test("streaming absent alert flags gaps and silence via timers, late data cancels") {
@@ -1397,39 +1240,6 @@ class StreamingSpec extends SparkSuite {
       // trailing silence flags 400 via the timer
       assert(u1.toSeq === Seq(200L, 400L), s"got ${u1.toSeq}")
     } finally q.stop()
-  }
-
-  test("transformWithState absent alert matches the fMGWS port's scenario") {
-    withRocksDb {
-      val dir = Files.createTempDirectory("graft-tws-a").toFile
-      val chk = Files.createTempDirectory("graft-tws-achk").toFile
-      // identical scenario to the fMGWS absent spec: late fill cancels the
-      // window-100 gap, 200 flags, trailing 400 emits via the timer
-      Files.write(dir.toPath.resolve("b1.json"),
-        Seq(
-          metricJson("1", "c_total", 10, "u1", 1.0),
-          metricJson("2", "c_total", 310, "u1", 2.0)).mkString("\n").getBytes)
-      val q = graft.streaming.FirehoseTws.absentAlert(
-          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          widthSec = 100, watermarkDelay = "200 seconds")
-        .writeStream.format("memory").queryName("tws_a_t").outputMode("update")
-        .option("checkpointLocation", chk.getAbsolutePath)
-        .start()
-      try {
-        q.processAllAvailable()
-        Files.write(dir.toPath.resolve("b2.json"),
-          Seq(metricJson("3", "c_total", 150, "u1", 3.0)).mkString("\n").getBytes)
-        q.processAllAvailable()
-        Seq(800L, 1600L, 2400L).zipWithIndex.foreach { case (ts, i) =>
-          Files.write(dir.toPath.resolve(s"adv$i.json"),
-            Seq(metricJson(s"a$i", "c_total", ts, "u2", 1.0)).mkString("\n").getBytes)
-          q.processAllAvailable()
-        }
-        val u1 = spark.table("tws_a_t").filter(col("series").contains("u1"))
-          .collect().map(_.getAs[Long]("absent_win")).sorted
-        assert(u1.toSeq === Seq(200L, 400L), s"got ${u1.toSeq}")
-      } finally q.stop()
-    }
   }
 
   test("streaming counter increase finalizes windows below the watermark and prunes state") {

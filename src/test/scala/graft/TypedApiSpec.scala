@@ -25,25 +25,6 @@ class TypedApiSpec extends SparkSuite {
     assert(m.labels() === Seq("request_type" -> "ApiVersions", "source" -> "kafka-3"))
   }
 
-  test("typed Aggregator gauge matches the untyped max_by formulation") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val metrics = Firehose.metricsFromEvents(spark, sfDir)
-    val untyped = Firehose.gaugeLatest(metrics)
-      .select(col("component"), col("name"), col("series"), col("last_value"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getDouble(3))
-      .toMap
-    val labeled = Firehose.tagFilter(metrics)
-      .withColumn("series", Firehose.seriesKey(col("labels")))
-      .withColumn("eventTime", timestamp_seconds(col("timestamp")))
-      .select("component", "name", "series", "timestamp", "id", "value", "eventTime")
-      .as[graft.streaming.GaugePoint]
-    val typed = graft.operators.TypedGauge.gaugeLatest(labeled)
-      .collect().toMap
-    assert(typed === untyped)
-    assert(typed.nonEmpty)
-  }
-
   test("typed filters and maps compose with the untyped operator chain") {
     import spark.implicits._
     val ds = MetricJson.parseTyped(
