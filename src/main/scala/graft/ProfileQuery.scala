@@ -2,13 +2,18 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Measurement harness for the optimization rounds (guide §1): runs named
   * `SparkEntry.queries` entries and attributes their wall time — job count,
   * stage count, task count, summed executor task time, shuffle bytes
-  * read/written, bytes spilled. The numbers expose WHERE a query's seconds
-  * go (scheduling overhead vs compute vs shuffle) without the UI.
+  * read/written, bytes spilled, and the Janino compiles it triggered
+  * (count and milliseconds; a compiled class is cached per source text and
+  * class loader, so a warm repetition of the same plan reads 0). The
+  * numbers expose WHERE a query's seconds go (scheduling overhead vs
+  * compute vs shuffle vs code generation) without the UI.
   *
   * Usage: `sbt "runMain graft.ProfileQuery p11_mvj_refresh,p12_record_incremental [sfDir]"`
   * Default data dir: `$SPARK_GRAFT_SF_DIR` or /root/testdata/sf0.1.
@@ -111,6 +116,8 @@ object ProfileQuery {
       Seq(jobs, stages, tasks).foreach(_.set(0))
       Seq(taskTimeMs, shufReadB, shufWriteB, spillB, inputB, jobWallMs).foreach(_.set(0))
       spark.sparkContext.setJobDescription(name)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       sampling.set(true)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case e: Throwable =>
@@ -118,7 +125,9 @@ object ProfileQuery {
       val wall = (System.nanoTime() - t0) / 1e9
       sampling.set(false)
       Thread.sleep(300)
-      println(f"PROFILE $name%-28s r$rep wall=$wall%7.3fs jobs=${jobs.get}%3d jobWall=${jobWallMs.get / 1e3}%7.2fs stages=${stages.get}%4d tasks=${tasks.get}%5d taskTime=${taskTimeMs.get / 1e3}%8.2fs shufR=${shufReadB.get / 1e6}%9.2fMB shufW=${shufWriteB.get / 1e6}%9.2fMB spill=${spillB.get / 1e6}%8.2fMB input=${inputB.get / 1e6}%9.2fMB")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+      println(f"PROFILE $name%-28s r$rep wall=$wall%7.3fs jobs=${jobs.get}%3d jobWall=${jobWallMs.get / 1e3}%7.2fs stages=${stages.get}%4d tasks=${tasks.get}%5d taskTime=${taskTimeMs.get / 1e3}%8.2fs shufR=${shufReadB.get / 1e6}%9.2fMB shufW=${shufWriteB.get / 1e6}%9.2fMB spill=${spillB.get / 1e6}%8.2fMB input=${inputB.get / 1e6}%9.2fMB compiles=$compiles%4d compileMs=$compileMs%8.1f")
       spark.sparkContext.setJobDescription(null)
     } }
     if (sys.env.contains("PROFILE_STACKS")) {

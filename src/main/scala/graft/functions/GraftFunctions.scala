@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{BpeCount, CosineSim, Exp2Bucket, GraftBridge, MaxByTsId, Md5Prefix60, MinHashSig, PolyFingerprint, SimHash64}
+import org.apache.spark.sql.graft.{BpeCount, CosineSim, EvalTime, Exp2Bucket, GraftBridge, MaxByTsId, Md5Prefix60, MinHashSig, PolyFingerprint, SimHash64}
 
 /** Column-API and SQL registration for graft's custom Catalyst expressions. */
 object GraftFunctions {
@@ -36,6 +36,12 @@ object GraftFunctions {
   def bpe_count(text: Column, merges: Seq[(String, String)]): Column =
     GraftBridge.column(BpeCount(
       GraftBridge.expression(text), merges.map(m => Array(m._1, m._2)).toArray))
+
+  /** The long `t` as a column whose generated code reads it by reference
+    * (see [[org.apache.spark.sql.graft.EvalTime]]): a plan that differs
+    * from another only in such a value reuses its compiled code.
+    */
+  def eval_time(t: Long): Column = GraftBridge.column(EvalTime(t))
 
   /** `max_by(value, struct(ts, id))` routed through ObjectHashAggregate
     * instead of SortAggregate — identical semantics (the struct ordering's

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.eval_time
 import graft.operators.Firehose
 
 /** Compile-time error: the expression parsed but the engine cannot (or
@@ -458,7 +460,21 @@ object PromQlCompiler {
     }
   }
 
-  /** @param instantAt INSTANT evaluation mode (Prometheus
+  /** One expression's evaluation in one mode.
+    *
+    * Evaluation-time constants ABOVE the scan go through `eval_time`
+    * ([[org.apache.spark.sql.graft.EvalTime]]), so a new `time=` or
+    * `start=` reuses the compiled classes: the instant `win_start = t`
+    * (selector, range-function window, `timestamp()`, the component
+    * grid) and the point grid's origin, last index and point sequence.
+    * Scan bounds (the lookback and range-window filters,
+    * [[pointSpanFilter]]) stay literals, because Parquet pushdown and the
+    * landing's file pruning need them; so does [[assignWin]]'s instant
+    * window filter, which the optimizer then drops as implied by the
+    * scan's. The scan's filter stage is the one stage that still compiles
+    * per time.
+    *
+    * @param instantAt INSTANT evaluation mode (Prometheus
     *                    `/api/v1/query`): the whole expression evaluates
     *                    AT one point in time t instead of on a window
     *                    grid. Instant selectors take each series' latest
@@ -571,14 +587,15 @@ object PromQlCompiler {
       */
     private def coveringPoints(ts: Column, ext: Long): Column = {
       val (s, e, st) = pointGrid.get
-      val n = (e - s) / st // last grid index
-      val d = ts - lit(s)
+      val origin = eval_time(s)
+      val n = eval_time((e - s) / st) // last grid index
+      val d = ts - origin
       val iLo = when(d <= 0, lit(0L))
         .otherwise(ceil(d.cast("double") / lit(st.toDouble)).cast("long"))
-      val iHi = least(lit(n),
+      val iHi = least(n,
         floor((d + lit(ext - 1)).cast("double") / lit(st.toDouble)).cast("long"))
       when(iLo <= iHi,
-        sequence(lit(s) + iLo * lit(st), lit(s) + iHi * lit(st), lit(st)))
+        sequence(origin + iLo * lit(st), origin + iHi * lit(st), lit(st)))
         .otherwise(array().cast("array<long>"))
     }
 
@@ -595,11 +612,13 @@ object PromQlCompiler {
     /** Cross-spread a nested instant evaluation (a pinned, point-constant
       * subexpression) over the LITERAL point sequence.
       */
-    private def spreadPoints(df: DataFrame): DataFrame = {
+    private def spreadPoints(df: DataFrame): DataFrame =
+      df.drop("win_start").withColumn("win_start", explode(pointSequence))
+
+    /** The grid's points `start, start + step, …, ≤ end` as one array. */
+    private def pointSequence: Column = {
       val (s, e, st) = pointGrid.get
-      val last = s + ((e - s) / st) * st
-      df.drop("win_start")
-        .withColumn("win_start", explode(sequence(lit(s), lit(last), lit(st))))
+      sequence(eval_time(s), eval_time(s + ((e - s) / st) * st), lit(st))
     }
 
     /** The constant timestamp shift a selector's `@` pin induces under
@@ -652,10 +671,10 @@ object PromQlCompiler {
             Firehose.seriesKey(col("labels")).as("_sk"))
           .agg(
             any_value(col("labels")).as("labels"),
-            graft.functions.GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("value"))
+            GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("value"))
           .filter(!isnan(col("value")))
           .select(col("component"), col("name"), col("labels"),
-            lit(t).as("win_start"), col("value"))
+            eval_time(t).as("win_start"), col("value"))
       case None if pointGrid.isDefined =>
         // per point p: the freshest sample in (p − lookback, p],
         // staleness-aware — one explode + one map-side-combinable max_by
@@ -668,7 +687,7 @@ object PromQlCompiler {
             Firehose.seriesKey(col("labels")).as("_sk"), col("win_start"))
           .agg(
             any_value(col("labels")).as("labels"),
-            graft.functions.GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("value"))
+            GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("value"))
           .filter(!isnan(col("value")))
           .select("component", "name", "labels", "win_start", "value")
       case None =>
@@ -679,7 +698,7 @@ object PromQlCompiler {
             Firehose.seriesKey(col("labels")).as("_sk"), col("win_start"))
           .agg(
             any_value(col("labels")).as("labels"),
-            graft.functions.GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("value"))
+            GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("value"))
           .select("component", "name", "labels", "win_start", "value")
     }
 
@@ -754,7 +773,7 @@ object PromQlCompiler {
         // observed component at win_start = t (absent still needs the
         // component universe; time()/vector() take the single cell)
         metrics.select(col("component")).distinct()
-          .withColumn("win_start", lit(t))
+          .withColumn("win_start", eval_time(t))
       case None if pointGrid.isDefined =>
         // point grid: components × the LITERAL point sequence
         spreadPoints(metrics.select(col("component")).distinct())
@@ -831,7 +850,7 @@ object PromQlCompiler {
         // paths arrive pre-filtered from rangeSamples; absent's presence
         // side and subquery grid points are filtered here)
         df.filter(col("timestamp") > lit(t - r) && col("timestamp") <= lit(t))
-          .withColumn("win_start", lit(t))
+          .withColumn("win_start", eval_time(t))
       } else if (pointGrid.isDefined) {
         // one left-open window per grid point the sample can serve —
         // the instant window, vectorized across the grid
@@ -1043,7 +1062,7 @@ object PromQlCompiler {
         sum(dv).cast("double").as("_sumf"),
         sum((dv * dv).cast("decimal(38,12)")).cast("double").as("_sumsq"),
         sum(maskFinite(col("value")) * maskFinite(col("value"))).as("_sdsq"),
-        graft.functions.GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("_last")) ++
+        GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("_last")) ++
         nfFlagAggs(col("value"), "s")
       // ts_of_* (Prometheus 3.1 experimental family): the extremum
       // aggregates ride the same map-side-combinable aggregation. The
@@ -1368,10 +1387,7 @@ object PromQlCompiler {
         case Vec(df) => Vec(spreadPoints(df))
         case WinScal(df) =>
           // a per-window scalar (scalar(x @ p)) is point-constant too
-          val (s, e, st) = pointGrid.get
-          val last = s + ((e - s) / st) * st
-          WinScal(df.drop("_ws_win").withColumn("_ws_win",
-            explode(sequence(lit(s), lit(last), lit(st)))))
+          WinScal(df.drop("_ws_win").withColumn("_ws_win", explode(pointSequence)))
         case other => other // plain scalars are point-independent anyway
       }
     }
@@ -1720,11 +1736,11 @@ object PromQlCompiler {
             Firehose.seriesKey(col("labels")).as("_sk"))
           .agg(
             any_value(col("labels")).as("labels"),
-            graft.functions.GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("_v"),
+            GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("_v"),
             max(col("timestamp")).as("_ts"))
           .filter(!isnan(col("_v")))
           .select(col("component"), col("name"), col("labels"),
-            lit(t).as("win_start"),
+            eval_time(t).as("win_start"),
             (col("_ts") - lit(pinShift(sel))).cast("double").as("value"))
       case sel: VectorSelector if pointGrid.isDefined =>
         // per point: the lookback's freshest sample's surfaced time,
@@ -1739,7 +1755,7 @@ object PromQlCompiler {
             Firehose.seriesKey(col("labels")).as("_sk"), col("win_start"))
           .agg(
             any_value(col("labels")).as("labels"),
-            graft.functions.GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("_v"),
+            GraftFunctions.max_by_ts_id(col("value"), col("timestamp"), col("id")).as("_v"),
             max(col("timestamp")).as("_ts"))
           .filter(!isnan(col("_v")))
           .select(col("component"), col("name"), col("labels"),

@@ -1,8 +1,9 @@
 package graft.promql
 
-import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
+
+import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -459,7 +460,7 @@ object PromQlHttp {
       defaultTime: () => Long,
       port: Int,
       extras: Extras = Extras()): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val server = graft.HttpServers.create(port)
     // handlers run Spark ACTIONS (unlike the scrape endpoint's in-memory
     // renders) — without an executor every request serializes on the one
     // dispatch thread and a slow query_range blocks a whole dashboard's
@@ -1176,28 +1177,28 @@ object PromQlHttp {
   /** JSON response with the Prometheus error envelope on failure; the
     * body is by-name so param parsing itself falls under the handler.
     */
-  private def respondWith(ex: HttpExchange)(body: => String): Unit = {
-    val (code, json) =
-      try (200, body)
-      catch {
-        case e @ (_: PromQlParseException | _: PromQlCompileException |
-            _: IllegalArgumentException) =>
-          (400, errorJson("bad_data", e.getMessage))
-        case e: Exception =>
-          (500, errorJson("internal", s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-      }
-    send(ex, code, json, "application/json")
-  }
+  private def respondWith(ex: HttpExchange)(body: => String): Unit =
+    respondAs(ex, "application/json")(body)
 
   /** text/plain response (the federation surface); errors still JSON. */
-  private def respondText(ex: HttpExchange)(body: => String): Unit = {
+  private def respondText(ex: HttpExchange)(body: => String): Unit =
+    respondAs(ex, "text/plain; version=0.0.4; charset=utf-8")(body)
+
+  /** Every non-fatal failure gets an answer, because an escaped throwable
+    * leaves the client waiting for a response that never comes. A parser
+    * recursing past the handler thread's stack on a deeply nested
+    * expression is the client's malformed input, not a server fault.
+    */
+  private def respondAs(ex: HttpExchange, contentType: String)(body: => String): Unit = {
     val (code, text, ct) =
-      try (200, body, "text/plain; version=0.0.4; charset=utf-8")
+      try (200, body, contentType)
       catch {
         case e @ (_: PromQlParseException | _: PromQlCompileException |
             _: IllegalArgumentException) =>
           (400, errorJson("bad_data", e.getMessage), "application/json")
-        case e: Exception =>
+        case _: StackOverflowError =>
+          (400, errorJson("bad_data", "expression nested too deeply"), "application/json")
+        case NonFatal(e) =>
           (500, errorJson("internal",
             s"${e.getClass.getSimpleName}: ${e.getMessage}"), "application/json")
       }

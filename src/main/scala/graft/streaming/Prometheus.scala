@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.net.{InetSocketAddress, URI}
+import java.net.URI
 import java.net.http.{HttpClient, HttpRequest}
 import java.net.http.HttpResponse.BodyHandlers
 import java.nio.charset.StandardCharsets
@@ -175,7 +175,7 @@ object Prometheus {
     * bound port (pass 0 to pick a free one).
     */
   def startPullServer(registry: Registry, port: Int = 0): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val server = graft.HttpServers.create(port)
     server.createContext("/metrics", (exchange: HttpExchange) => {
       val body = registry.render.getBytes(StandardCharsets.UTF_8)
       exchange.getResponseHeaders.add("Content-Type", "text/plain; version=0.0.4")

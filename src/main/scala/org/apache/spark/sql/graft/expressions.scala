@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -336,6 +338,29 @@ case class PromLineParse(child: Expression)
 
   override protected def withNewChildInternal(
       newChild: Expression): PromLineParse = copy(child = newChild)
+}
+
+/** A PromQL evaluation time (unix seconds), bound into the generated
+  * code BY REFERENCE, like [[PqCell]]'s centroids. Spark writes a long
+  * literal straight into the generated Java, so a `lit(t)` above the scan
+  * makes every new evaluation time a new source text and Janino compiles
+  * each stage again; this leaf reads the value from a reference slot, so
+  * the source stays the same across times and the compiled class is
+  * reused. Not foldable, so the optimizer cannot turn it back into a
+  * literal; deterministic and not nullable, like the literal it replaces.
+  */
+case class EvalTime(value: Long) extends LeafExpression {
+
+  override def foldable: Boolean = false
+  override def nullable: Boolean = false
+  override def dataType: DataType = LongType
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("evalTime", value, "java.lang.Long")
+    ev.copy(code = code"final long ${ev.value} = $ref;", isNull = FalseLiteral)
+  }
 }
 
 object GraftBridge {

@@ -443,7 +443,7 @@ class PromQlHttpSpec extends SparkSuite {
 
   test("the scraper lands a Prometheus 3.x quoted-UTF-8 exposition, and " +
       "/federate re-renders it quoted — the UTF-8 circle closes") {
-    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import com.sun.net.httpserver.HttpExchange
     // a 3.x endpoint negotiated to escaping=allow-utf-8: quoted metric
     // names (first brace entry), quoted label keys, adversarial values
     val body =
@@ -451,7 +451,7 @@ class PromQlHttpSpec extends SparkSuite {
         "{\"rpc latency\",\"quantile p\"=\"0.99\"} 1.5 18000\n" +
         "classic{\"dot.key\"=\"x=y,z\\\\w\"} 2 19000\n" +
         "{\"lone.metric\"} 7 21000\n"
-    val target = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val target = HttpServers.create(0)
     target.createContext("/metrics", (ex: HttpExchange) => {
       // the scraper advertises the capability; assert the negotiation
       val acc = ex.getRequestHeaders.getFirst("Accept")
@@ -524,7 +524,7 @@ class PromQlHttpSpec extends SparkSuite {
 
   test("the scraper and the ingest endpoint tolerate an OpenMetrics body: " +
       "exemplars drop, samples land, # EOF skips") {
-    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import com.sun.net.httpserver.HttpExchange
     // a modern endpoint's exposition: TYPE/HELP metadata, exemplar tails
     // (with and without exemplar timestamps), and the # EOF terminator
     val body =
@@ -535,7 +535,7 @@ class PromQlHttpSpec extends SparkSuite {
         |bare_metric 7 21000
         |# EOF
         |""".stripMargin
-    val target = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val target = HttpServers.create(0)
     target.createContext("/metrics", (ex: HttpExchange) => {
       val b = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       ex.sendResponseHeaders(200, b.length)
@@ -579,8 +579,7 @@ class PromQlHttpSpec extends SparkSuite {
         |om_bare 7
         |# EOF
         |""".stripMargin
-    val omTarget = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val omTarget = HttpServers.create(0)
     omTarget.createContext("/metrics", (ex: HttpExchange) => {
       val b = omBody.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       ex.getResponseHeaders.add("Content-Type",
@@ -1036,6 +1035,54 @@ class PromQlHttpSpec extends SparkSuite {
       // end < start
       assert(get(port,
         s"/api/v1/query_range?query=${enc("x")}&start=9&end=2&step=1")._1 === 400)
+    } finally server.stop(0)
+  }
+
+  /** Three `up` series: a bare selector's answer is a few hundred bytes,
+    * served from the registry fast path.
+    */
+  private lazy val smallRoot: String = {
+    import spark.implicits._
+    val r = Files.createTempDirectory("pqlsmall").toFile.getAbsolutePath
+    PromQlVersioned.land(Seq(
+      ("app", "up", Map("job" -> "a"), 100L, "s1", 1.0),
+      ("app", "up", Map("job" -> "b"), 100L, "s2", 1.0),
+      ("app", "up", Map("job" -> "c"), 100L, "s3", 0.0))
+      .toDF("component", "name", "labels", "timestamp", "id", "value"), r)
+    r
+  }
+
+  test("a small query response reaches a keep-alive client without the delayed-ACK stall") {
+    val server = PromQlHttp.startLandingServer(spark, smallRoot)
+    try {
+      val (ms, codes) = KeepAliveLatency.medianMs(
+        s"http://127.0.0.1:${server.getAddress.getPort}/api/v1/query?query=up&time=100")
+      assert(codes.forall(_ == 200))
+      // without TCP_NODELAY the body waits for the client's delayed ACK
+      // of the headers, about 40 ms per request
+      assert(ms < 20.0, s"median $ms ms over 20 keep-alive GETs")
+    } finally server.stop(0)
+  }
+
+  test("a too deeply nested expression gets 400 bad_data, and the server keeps answering") {
+    val server = PromQlHttp.startLandingServer(spark, smallRoot)
+    try {
+      val port = server.getAddress.getPort
+      // the recursive-descent parser overflows a default thread stack
+      // long before 2000 levels
+      val deep = "(" * 2000 + "up" + ")" * 2000
+      val t0 = System.nanoTime()
+      val resp = client.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/api/v1/query?query=${enc(deep)}&time=100"))
+          .timeout(java.time.Duration.ofSeconds(30)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert((System.nanoTime() - t0) / 1e9 < 10.0)
+      assert(resp.statusCode() === 400)
+      assert(resp.body() ===
+        """{"status":"error","errorType":"bad_data","error":"expression nested too deeply"}""")
+      val (code, body) = get(port, "/api/v1/query?query=up&time=100")
+      assert(code === 200 && body.contains("\"job\":\"c\""), body)
     } finally server.stop(0)
   }
 
