@@ -1185,14 +1185,6 @@ object Firehose {
   /** Default classic-histogram bucket boundaries for the synthetic stream. */
   val DefaultLes: Seq[Double] = Seq(50.0, 100.0, 200.0, 300.0, 400.0)
 
-  /** Classic-histogram bucket classification: the smallest `le` boundary
-    * ≥ value, +Inf when none. Shared by the batch quantile operator and the
-    * streaming bucket aggregation — O(1) per row, pure codegen.
-    */
-  def bucketLe(value: Column, les: Seq[Double] = DefaultLes): Column =
-    coalesce(
-      (les.map(l => when(value <= l, lit(l))) :+ lit(Double.PositiveInfinity)): _*)
-
   /** Prometheus classic-histogram semantics as engine operators: cumulative
     * `le` bucket counts per metric, and `histogram_quantile()`-style linear
     * interpolation within the located bucket. A quantile landing in the
@@ -1207,8 +1199,11 @@ object Firehose {
       les: Seq[Double] = DefaultLes,
       q: Double = 0.9): DataFrame = {
     val inf = Double.PositiveInfinity
+    // bucket classification: the smallest `le` boundary ≥ value, +Inf when
+    // none — O(1) per row, pure codegen
+    val le = coalesce((les.map(l => when(col("value") <= l, lit(l))) :+ lit(inf)): _*)
     val counts = metrics
-      .select(col("name"), bucketLe(col("value"), les).as("le"))
+      .select(col("name"), le.as("le"))
       .groupBy(col("name"), col("le"))
       .agg(count(lit(1)).as("n"))
     val byLe = Window.partitionBy(col("name")).orderBy(col("le"))
@@ -1371,9 +1366,8 @@ object Firehose {
 
   /** The `on()`/`ignoring()` label-subset match key — the canonical
     * rendering of the selected submap. Shared by the batch [[vectorMatch]]
-    * and the streaming sibling
-    * ([[graft.streaming.FirehoseStream.vectorMatch]]) so the matching
-    * identity cannot drift between them.
+    * and the PromQL compiler's binary operators, so the matching identity
+    * cannot drift between them.
     */
   def vectorMatchKey(
       labels: Column, on: Seq[String] = Nil, ignoring: Seq[String] = Nil): Column = {
@@ -1662,20 +1656,6 @@ object Firehose {
       .withColumn("_ts_s", tsSec.cast("long"))
       .withColumn("_x", col("_ts_s") - min(col("_ts_s")).over(w))
       .withColumn("_y", value.cast("double"))
-    olsTrend(based, seriesCols, horizonSec)
-  }
-
-  /** Shared OLS finish over a relation carrying centered `_x` (long
-    * seconds) and `_y` (double): five exact aggregates → per-series slope
-    * and the extrapolated value at (max x + horizon). Used by the batch
-    * [[predictLinear]] (window-min centering) and the streaming sibling
-    * ([[graft.streaming.FirehoseStream.predictLinear]], fixed-base
-    * centering) — the trend arithmetic cannot diverge between them. Every
-    * aggregate here is streaming-legal (count/sum/max), which is what
-    * makes the streaming port a PLAIN aggregation.
-    */
-  private[graft] def olsTrend(
-      based: DataFrame, seriesCols: Seq[String], horizonSec: Long): DataFrame = {
     val yDec = IeeeLanes.decLane(col("_y"), IeeeLanes.Cap2dp).cast("decimal(18,2)")
     val yFin = IeeeLanes.finLane(col("_y"))
     val g = based

@@ -406,8 +406,8 @@ object PromQlCompiler {
 
   /** IEEE-explicit arithmetic: engines disagree on double division and
     * modulo by zero in SQL mode, so the special cases are spelled out.
-    * Shared by the batch Eval and [[PromQlStream]] — the two front-ends
-    * cannot drift on operator semantics.
+    * Shared by the batch Eval and the [[PromRegistry]] fast path — the
+    * two evaluators cannot drift on operator semantics.
     */
   private[promql] def arith(op: String, l: Column, r: Column): Column = op match {
     case "+" => l + r

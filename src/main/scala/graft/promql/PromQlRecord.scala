@@ -50,9 +50,9 @@ import graft.sources.{Ivm, MaterializedView, Versioned}
   * a lag over series order), so they take a dedicated maintainer
   * instead of the view lowering: the table holds the per-(series,
   * window) exact decimal increase PLUS one state row per series (the
-  * series' freshest `(ts, id, value)` — the same fold state
-  * [[graft.streaming.FirehoseStream.counterIncrease]] carries), and a
-  * refresh seeds the new span's first delta per series from that state.
+  * series' freshest `(ts, id, value)`, the anchor of a counter-increase
+  * fold), and a refresh seeds the new span's first delta per series from
+  * that state.
   * Sound ONLY on APPEND-ONLY, per-series-in-order lineage (a scrape
   * pipeline's natural shape — and the only shape where a window's
   * interior deltas are final): a change span that retracts samples, or

@@ -24,14 +24,14 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *     Iceberg's manifests) where a commit costs O(changed files), not
   *     O(table);
   *   - every commit stages data under a UNIQUE name, pools it, then writes
-  *     the marker with `CREATE_NEW`; the marker lands AFTER the data, so a
+  *     the marker by exclusive link; the marker lands AFTER the data, so a
   *     crashed writer leaves invisible pool orphans, never a
   *     readable-but-partial version (parquet's `_SUCCESS` discipline lifted
   *     to table level — readers resolve versions AND file lists from
   *     markers only, spec-asserted). Staging names never repeat; pool
   *     names collide only for byte-identical content, and a lost pool-move
   *     race is handled as the dedupe case it is — so the marker's
-  *     `CREATE_NEW` is the sole contention point that can FAIL a commit; a
+  *     exclusive link is the sole contention point that can FAIL a commit; a
   *     committer that loses that race gets a descriptive concurrent-commit
   *     conflict (first writer wins), and its already-pooled files stay
   *     invisible until a manifest references them;
@@ -134,13 +134,17 @@ object Versioned {
       if (manifestMemo.size > 256) manifestMemo.clear()
       manifestMemo.put(key, parsed)
       parsed
-    } else {
+    } else if (node.has("data")) {
       // legacy full-snapshot marker: one data directory per version
       val dir = new File(root, node.get("data").asText())
       Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
         .map(f => Entry(s"${node.get("data").asText()}/${f.getName}", ""))
         .toSeq
+    } else {
+      throw new IllegalStateException(
+        s"marker ${markerFile(root, v)} of $root v$v has no manifests, files " +
+          "or data field: it is not a commit marker graft can read")
     }
   }
 
@@ -266,9 +270,10 @@ object Versioned {
     entries
   }
 
-  /** Publish `entries` as version `next`'s marker. `CREATE_NEW` is the one
-    * atomic contention point among COMMITTERS: a committer that loses the
-    * race gets a descriptive concurrent-commit conflict (first writer
+  /** Publish `entries` as version `next`'s marker. Its exclusive link
+    * ([[publishExclusive]]) is the one atomic contention point among
+    * COMMITTERS: a committer that loses the race gets a descriptive
+    * concurrent-commit conflict (first writer
     * wins). The loser's pooled files are left in place — they are
     * invisible (no manifest references them) and may already be SHARED by
     * the winner via content-address dedupe, so deleting them here would be
@@ -346,9 +351,25 @@ object Versioned {
     manifestsDir(root).mkdirs()
     val f = new File(manifestsDir(root), name)
     if (!f.exists())
-      try Files.write(f.toPath, bytes, StandardOpenOption.CREATE_NEW)
+      try publishExclusive(f, bytes)
       catch { case _: java.nio.file.FileAlreadyExistsException => () }
     name
+  }
+
+  /** Publish `bytes` at `target` whole or not at all: the bytes go to a
+    * temp file in the same directory (a dot-name no marker, chunk or tag
+    * listing matches), which is then hard-linked into place.
+    * `createLink` fails with `FileAlreadyExistsException` when `target`
+    * exists, so it stays the one contention point, and a reader never
+    * sees `target` empty or partial. The temp file is deleted either way.
+    */
+  private def publishExclusive(target: File, bytes: Array[Byte]): Unit = {
+    val tmp = new File(target.getParentFile,
+      s".${target.getName}.${java.util.UUID.randomUUID()}.tmp").toPath
+    try {
+      Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW)
+      Files.createLink(target.toPath, tmp)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Publish a TWO-LEVEL marker: `reuseChunks` (immutable manifest
@@ -359,7 +380,7 @@ object Versioned {
     * IS re-checked, closing the same vacuum race the per-file check
     * closes for the delta). `reuseChunks = Nil` degrades to a
     * single-chunk marker — what every non-append committer writes.
-    * `CREATE_NEW` on the marker stays the one atomic contention point.
+    * The marker's exclusive link stays the one atomic contention point.
     */
   private[graft] def writeMarkerChunked(
       root: String,
@@ -399,11 +420,7 @@ object Versioned {
     val ms = Json.createArrayNode()
     refs.foreach(ms.add)
     marker.set[com.fasterxml.jackson.databind.JsonNode]("manifests", ms)
-    try
-      Files.write(
-        markerFile(root, next).toPath,
-        Json.writeValueAsBytes(marker),
-        StandardOpenOption.CREATE_NEW)
+    try publishExclusive(markerFile(root, next), Json.writeValueAsBytes(marker))
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new java.util.ConcurrentModificationException(
@@ -1084,7 +1101,7 @@ object Versioned {
 
   /** [[appendCommit]] with optimistic-concurrency RETRY — how many
     * committers an append-only landing actually has. Appends COMMUTE, so
-    * a committer that loses the `CREATE_NEW` marker race re-reads the
+    * a committer that loses the marker-link race re-reads the
     * new latest manifest and re-publishes its ALREADY-POOLED delta on
     * top: the data stages and pools exactly once (content-addressed,
     * never orphaned by a lost race), and each retry costs one manifest
@@ -1472,7 +1489,7 @@ object Versioned {
     // `expectedVersion` is the OPTIMISTIC-CONCURRENCY read-set check for
     // derived-state writers (the materialized-view refreshes): a caller
     // that computed its changeset against version E passes E, and the
-    // commit lands E+1 through the marker's CREATE_NEW — so a concurrent
+    // commit lands E+1 through the marker's exclusive link — so a concurrent
     // commit that already took E+1 fails THIS commit loudly instead of
     // letting a stale changeset double-apply on top of it. Default −1
     // keeps last-writer-wins for plain upsert callers.
@@ -1873,7 +1890,7 @@ object Versioned {
     * blooms likewise), so a stats-pruned landing never LOSES skipping to
     * its own maintenance. Rows are untouched; time travel still reads
     * every pre-compaction version. Like [[compact]], this does not
-    * commute with concurrent commits — a lost `CREATE_NEW` race throws
+    * commute with concurrent commits — a lost marker-link race throws
     * and the caller re-derives (the scrape loop just compacts again next
     * tick). Returns the committed version, or -1 when no bin holds two
     * files (no empty commit).
@@ -2066,7 +2083,7 @@ object Versioned {
     * sweep until [[untag]] releases it (the refs-retention rule), so
     * "the corpus the March model trained on" stays time-travelable while
     * routine retention rolls everything else forward. Tag names are
-    * immutable once created (`CREATE_NEW` — re-pointing a ref is a
+    * immutable once created (an exclusive link — re-pointing a ref is a
     * delete + create, never a silent overwrite).
     */
   def tag(root: String, name: String, v: Long): Unit = {
@@ -2077,9 +2094,7 @@ object Versioned {
     val node = Json.createObjectNode()
     node.put("version", v)
     node.put("ts", System.currentTimeMillis())
-    try
-      Files.write(tagFile(root, name).toPath, Json.writeValueAsBytes(node),
-        StandardOpenOption.CREATE_NEW)
+    try publishExclusive(tagFile(root, name), Json.writeValueAsBytes(node))
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new IllegalArgumentException(
@@ -2262,8 +2277,10 @@ object Versioned {
       .sortBy(_.getName)
       .map { f => Files.delete(f.toPath); s"_files/${f.getName}" }
       .toSeq
+    // a dot-name is a chunk still being published (publishExclusive)
     val chunks = Option(manifestsDir(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => !refChunks.contains(f.getName) && f.lastModified() <= horizon)
+      .filter(f => !f.getName.startsWith(".") && !refChunks.contains(f.getName) &&
+        f.lastModified() <= horizon)
       .sortBy(_.getName)
       .map { f => Files.delete(f.toPath); s"_manifests/${f.getName}" }
       .toSeq

@@ -337,32 +337,33 @@ class FirehoseAppSpec extends SparkSuite {
     } finally spark.conf.unset(NoData)
   }
 
-  test("a closed-window query started after the app still closes a window with no new input") {
+  test("a gauge query started after the app still runs its watermark-only batch") {
     val appDir = Files.createTempDirectory("graft-gauge3").toFile
     val app = FirehoseApp.start(spark, FirehoseApp.buildConfig(Array(
       "--mode", "pull", "--source", appDir.getAbsolutePath)),
       Files.createTempDirectory("graft-gauge3chk").toString)
-    val dir = Files.createTempDirectory("graft-gauge3inc").toFile
-    // width 100 s, 0 s watermark, 1 s TTL: the one file moves the
-    // watermark to 250 s, past u1's timer (window 0's end); only the
-    // watermark-only batch that follows can close window 0
+    val dir = Files.createTempDirectory("graft-gauge3in").toFile
+    // 0 s watermark, 1 s TTL: the one file moves the watermark to 250 s,
+    // past u1's timeout (51 s); only the watermark-only batch that
+    // follows can evict u1, so the app's no-data setting must not reach
+    // this plain start on the same session
     Files.write(dir.toPath.resolve("b1.json"), Seq(
-      metricJson("1", "c_total", 10, "u1", 10.0),
-      metricJson("2", "c_total", 50, "u1", 16.0),
-      metricJson("3", "c_total", 250, "u2", 1.0)).mkString("\n").getBytes)
-    try withRocksDb {
-      val q = graft.streaming.FirehoseTws.counterIncreaseClosed(
+      metricJson("1", "g", 10, "u1", 10.0),
+      metricJson("2", "g", 50, "u1", 16.0),
+      metricJson("3", "g", 250, "u2", 1.0)).mkString("\n").getBytes)
+    try {
+      val q = FirehoseStream.gaugeLatest(
           FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-          widthSec = 100, watermarkDelay = "0 seconds", ttlMs = 1000L)
-        .writeStream.format("memory").queryName("inc_after_app_t").outputMode("append")
-        .option("checkpointLocation", Files.createTempDirectory("graft-gauge3incchk").toString)
+          watermarkDelay = "0 seconds", ttlMs = 1000L)
+        .writeStream.format("memory").queryName("gauge_after_app_t").outputMode("update")
+        .option("checkpointLocation", Files.createTempDirectory("graft-gauge3inchk").toString)
         .start()
       try {
         q.processAllAvailable()
-        assert(batches(q).length === 2)
-        val rows = spark.table("inc_after_app_t").collect()
-          .map(r => (r.getAs[String]("series"), r.getAs[Long]("win_start"), r.getAs[Double]("value")))
-        assert(rows.toSeq === Seq(("user=u1", 0L, 6.0)))
+        val progress = batches(q)
+        assert(progress.map(_.numInputRows) === Seq(3L, 0L), progress.map(_.json))
+        assert(progress.map(_.stateOperators.head.numRowsRemoved) === Seq(0L, 1L),
+          "idle u1 is evicted by the watermark-only batch")
       } finally q.stop()
     } finally app.stop()
   }

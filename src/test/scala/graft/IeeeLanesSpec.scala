@@ -6,15 +6,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Firehose
-import graft.streaming.FirehoseStream
 
 /** One poison record must not kill a 100 TB job: JSON ingest parses
   * `NaN`/`Infinity` tokens (Spark's allowNonNumericNumbers default) and
   * byte counters walk past decimal(18,2)'s representable range — both
   * previously failed the whole query on Spark 4's ANSI decimal cast.
   * These specs drive the [[graft.functions.IeeeLanes]] reconstruction
-  * through every guarded batch operator and pin streaming parity on a
-  * poisoned stream.
+  * through every guarded batch operator, fed from a poisoned JSON file.
   */
 class IeeeLanesSpec extends SparkSuite {
 
@@ -152,10 +150,8 @@ class IeeeLanesSpec extends SparkSuite {
     assert(beq(trend("t_big"), Big / 600.0))
   }
 
-  test("streaming windowAgg and overTimeAgg match batch on a poisoned stream") {
+  test("windowAgg and overTimeAgg carry a poisoned JSON file from ingest") {
     val dir = Files.createTempDirectory("graft-ieee").toFile
-    val chk1 = Files.createTempDirectory("graft-ieeechk1").toFile
-    val chk2 = Files.createTempDirectory("graft-ieeechk2").toFile
     def line(id: String, name: String, ts: Long, v: String): String =
       s"""{"id":"$id","name":"$name","timestamp":$ts,"component":"app",""" +
         s""""tags":{"user":"u1","unit":"bytes"},"value":$v,""" +
@@ -169,40 +165,24 @@ class IeeeLanesSpec extends SparkSuite {
         line("5", "g_inf", 100, "1.0"), line("6", "g_inf", 200, "Infinity"),
         line("7", "g_big", 100, "1.0E16"), line("8", "g_big", 200, "2.0"))
         .mkString("\n").getBytes)
-    val src = FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath)
-    val q1 = FirehoseStream.windowAgg(src, width = "1 hour")
-      .writeStream.format("memory").queryName("ieee_wa").outputMode("update")
-      .option("checkpointLocation", chk1.getAbsolutePath).start()
-    val q2 = FirehoseStream.overTimeAgg(src, width = "1 hour")
-      .writeStream.format("memory").queryName("ieee_ot").outputMode("update")
-      .option("checkpointLocation", chk2.getAbsolutePath).start()
-    try {
-      q1.processAllAvailable()
-      q2.processAllAvailable()
-      val batchIn = graft.sources.MetricJson.readJsonLines(spark, dir.getAbsolutePath)
-      // ingest really parsed the poison tokens
-      assert(batchIn.filter(isnan(col("value"))).count() === 1L)
-      val sWa = spark.table("ieee_wa")
-        .collect().map(r => r.getAs[String]("name") -> r.getAs[Double]("sum_value"))
-        .toMap
-      val bWa = Firehose.windowAgg(batchIn, 3600)
-        .collect().map(r => r.getAs[String]("name") -> r.getAs[Double]("sum_value"))
-        .toMap
-      assert(sWa.keySet === bWa.keySet && sWa.nonEmpty)
-      sWa.foreach { case (k, v) => assert(beq(v, bWa(k)), s"windowAgg $k") }
-      val sOt = spark.table("ieee_ot")
-        .collect().map(r => r.getAs[String]("name") ->
-          ((r.getAs[Double]("sum_value"), r.getAs[Double]("stdvar_value")))).toMap
-      val bOt = Firehose.overTimeAgg(batchIn, 3600)
-        .collect().map(r => r.getAs[String]("name") ->
-          ((r.getAs[Double]("sum_value"), r.getAs[Double]("stdvar_value")))).toMap
-      assert(sOt.keySet === bOt.keySet && sOt.nonEmpty)
-      sOt.foreach { case (k, (s1, s2)) =>
-        assert(beq(s1, bOt(k)._1) && beq(s2, bOt(k)._2), s"overTimeAgg $k")
-      }
-      assert(beq(sWa("g_nan"), Double.NaN))
-      assert(beq(sWa("g_inf"), Double.PositiveInfinity))
-      assert(beq(sWa("g_big"), 1.0e16 + 2.0))
-    } finally { q1.stop(); q2.stop() }
+    val batchIn = graft.sources.MetricJson.readJsonLines(spark, dir.getAbsolutePath)
+    // ingest really parsed the poison tokens
+    assert(batchIn.filter(isnan(col("value"))).count() === 1L)
+    assert(batchIn.filter(col("value") === Double.PositiveInfinity).count() === 1L)
+    val wa = Firehose.windowAgg(batchIn, 3600)
+      .collect().map(r => r.getAs[String]("name") -> r.getAs[Double]("sum_value"))
+      .toMap
+    assert(wa.keySet === Set("g_norm", "g_nan", "g_inf", "g_big"))
+    assert(beq(wa("g_norm"), 4.0))
+    assert(beq(wa("g_nan"), Double.NaN))
+    assert(beq(wa("g_inf"), Double.PositiveInfinity))
+    assert(beq(wa("g_big"), 1.0e16 + 2.0))
+    val ot = Firehose.overTimeAgg(batchIn, 3600)
+      .collect().map(r => r.getAs[String]("name") ->
+        ((r.getAs[Double]("sum_value"), r.getAs[Double]("stdvar_value")))).toMap
+    assert(ot.keySet === wa.keySet)
+    ot.foreach { case (k, (sum, _)) => assert(beq(sum, wa(k)), s"overTimeAgg $k") }
+    assert(beq(ot("g_norm")._2, 0.25))
+    assert(beq(ot("g_nan")._2, Double.NaN))
   }
 }

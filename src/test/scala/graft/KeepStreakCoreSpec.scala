@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.FirehoseTws.KeepStreakCore
+import graft.streaming.KeepStreakCore
 
 /** The pure keep_firing_for fold, property-tested against a SEQUENTIAL
   * reference state machine (the same one that pins the batch

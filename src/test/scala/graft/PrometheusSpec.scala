@@ -78,54 +78,6 @@ class PrometheusSpec extends SparkSuite {
       s"wrong eviction order:\n$body")
   }
 
-  test("streaming histogram quantile matches the batch interpolation") {
-    val dir = Files.createTempDirectory("graft-histq").toFile
-    val chk = Files.createTempDirectory("graft-histqchk").toFile
-    // 10 samples 1..10 under boundaries (5, 10): p90 rank 9 interpolates to
-    // 9.0 — the batch operator's own spec case, now through the stream
-    Files.write(dir.toPath.resolve("b1.json"),
-      (1 to 10).map(v => metricJson(s"$v", "lat", v.toLong, "u1", v.toDouble))
-        .mkString("\n").getBytes)
-    val registry = new Prometheus.HistogramRegistry
-    val buckets = FirehoseStream.histogramBuckets(
-      FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath),
-      les = Seq(5.0, 10.0), watermarkDelay = "0 seconds")
-    val q = Prometheus.histogramSink(buckets, registry)
-      .option("checkpointLocation", chk.getAbsolutePath).start()
-    try {
-      q.processAllAvailable()
-      assert(registry.size > 0)
-      val streamed = registry.quantile("lat", 0.9)
-      import spark.implicits._
-      val batch = graft.operators.Firehose.histogramQuantile(
-        (1 to 10).map(v => ("lat", v.toDouble)).toDF("name", "value"),
-        les = Seq(5.0, 10.0), q = 0.9)
-        .select("quantile").collect()(0).getDouble(0)
-      assert(batch === 9.0)
-      assert(streamed === Some(batch), s"streamed=$streamed batch=$batch")
-    } finally q.stop()
-  }
-
-  test("registry topK returns the hottest series by current value") {
-    val registry = new Prometheus.Registry
-    registry.update(Seq(
-      """app_a{user="u1"} 5.000000 1000""",
-      """app_b{user="u2"} 9.000000 1000""",
-      """app_c{user="u3"} 7.000000 1000"""))
-    val top2 = registry.topK(2)
-    assert(top2.map(_.takeWhile(_ != ' ')) === Seq("""app_b{user="u2"}""", """app_c{user="u3"}"""))
-  }
-
-  test("histogram registry evicts the oldest windows past maxWindows") {
-    val registry = new Prometheus.HistogramRegistry(maxWindows = 2)
-    registry.update(Seq((0L, "m", 5.0, 1L), (60000L, "m", 5.0, 2L)))
-    registry.update(Seq((120000L, "m", 5.0, 3L)))
-    assert(registry.size === 2) // window 0 evicted
-    // the evicted window no longer contributes to the quantile
-    assert(registry.quantile("m", 0.5, w => w == 0L).isEmpty)
-    assert(registry.quantile("m", 0.5, w => w == 120000L).isDefined)
-  }
-
   test("push model: each micro-batch POSTs exposition text to the gateway (PrometheusPusher parity)") {
     val dir = Files.createTempDirectory("graft-push").toFile
     val chk = Files.createTempDirectory("graft-pushchk").toFile

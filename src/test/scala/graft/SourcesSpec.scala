@@ -784,7 +784,7 @@ class SourcesSpec extends SparkSuite {
     import graft.sources.Versioned
     val root = Files.createTempDirectory("graft-conc").toFile.getAbsolutePath
     Versioned.commit(Seq((0L, "base")).toDF("k", "name").coalesce(1), root)
-    // eight committers race the CREATE_NEW marker; appends commute, so
+    // eight committers race the marker link; appends commute, so
     // every one must land (losers retry marker-only on the new latest)
     val dfs = (1 to 8).map(i => Seq((i.toLong, s"t$i")).toDF("k", "name").coalesce(1))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)

@@ -23,9 +23,7 @@ trait SparkSuite extends AnyFunSuite {
     }
   }
 
-  /** Run `body` on the RocksDB state store provider, which
-    * `transformWithState` requires.
-    */
+  /** Run `body` on the RocksDB state store provider. */
   def withRocksDb[T](body: => T): T =
     withConf("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
