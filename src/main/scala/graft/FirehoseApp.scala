@@ -247,16 +247,16 @@ object FirehoseApp {
         val q = FirehoseStream.startGaugeQuery(spark, Prometheus.pushSink(
             gauges,
             cfg.getOrElse("prometheus.gateway", "http://localhost:9091"),
-            cfg.getOrElse("prometheus.job", "graft"))
-          .option("checkpointLocation", checkpointDir))
+            cfg.getOrElse("prometheus.job", "graft")),
+          checkpointDir)
         Running(q, None, () => q.stop())
       case _ =>
         val registry = new Prometheus.Registry
         val server = Prometheus.startPullServer(
           registry, cfg.getInt("prometheus.listener.port", 0))
         println(s"[graft] /metrics listening on ${server.getAddress}")
-        val q = FirehoseStream.startGaugeQuery(spark, Prometheus.pullSink(gauges, registry)
-          .option("checkpointLocation", checkpointDir))
+        val q = FirehoseStream.startGaugeQuery(
+          spark, Prometheus.pullSink(gauges, registry), checkpointDir)
         Running(q, Some(registry), () => { q.stop(); server.stop(0) })
     }
   }

@@ -189,16 +189,6 @@ object PromQlVersioned {
       lookbackSec: Long = 300L, subqueryStepSec: Long = 3600L): (Long, Long) =
     pointBounds(expr, tSec, tSec, lookbackSec, subqueryStepSec)
 
-  /** [[instantBounds]] kept as SEPARATE intervals — the relative reach
-    * anchored at `tSec` plus one absolute interval per `@` pin — so the
-    * scan reads the pin's files and the lookback's files, not the span
-    * between them.
-    */
-  def instantIntervals(
-      expr: PromExpr, tSec: Long,
-      lookbackSec: Long = 300L, subqueryStepSec: Long = 3600L): Seq[(Long, Long)] =
-    pointIntervals(expr, tSec, tSec, lookbackSec, subqueryStepSec)
-
   /** The closed sample interval a POINT-GRID evaluation over
     * `[startSec, endSec]` can touch — [[instantBounds]] generalized:
     * every point's backward reach anchors the relative interval to the

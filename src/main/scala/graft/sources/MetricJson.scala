@@ -10,32 +10,33 @@ import graft.model.FirehoseMetric
   * Reference parity: AbstractFirehose.java:100-107 parses each Kafka record
   * with Jackson and silently skips malformed records
   * (AbstractFirehose.java:118-126 catches and logs). Here the whole batch is
-  * parsed by a single codegen'd `from_json` expression; malformed rows
-  * null-out and are dropped, giving the same skip semantics without a
-  * per-record interpreter loop.
+  * parsed by one `from_json` decode per line; malformed rows null-out and
+  * are dropped, giving the same skip semantics without a per-record
+  * interpreter loop.
   */
 object MetricJson {
 
   /** Parse a column of metric JSON lines into flattened metric columns.
     * Works identically on batch and streaming DataFrames.
     *
-    * `strict = true` (default for external input) drops malformed rows.
-    * The filter carries an always-false nondeterministic disjunct: a plain
-    * deterministic predicate gets pushed below the parse projection (and
-    * below any repartition) with `from_json` inlined, making the whole
-    * parse run twice — once in the pushed filter's stage and once in the
-    * projection. (`rand() > 2` doesn't survive: Spark 4 folds it via rand's
-    * known range; `uuid() = ''` does.) Set `strict = false` for trusted
-    * in-engine input where malformed rows are impossible.
+    * `strict = true` (default for external input) drops malformed rows:
+    * lines that do not parse, or parse without an `id` or a `name`. Each
+    * line is decoded once. The parsed struct leaves through a generator,
+    * `inline` of a one-element array for a well-formed row and of null
+    * (no row) otherwise: the optimizer pushes no filter below a generator,
+    * so the check reads the one decoded struct. A plain `filter` on the
+    * parsed columns is pushed below the parse with `from_json` inlined
+    * into it, decoding every line again for each field it reads; on Spark
+    * 4.1 a nondeterministic disjunct such as `uuid() = ''` does not hold
+    * it above. Set `strict = false` for trusted in-engine input where
+    * malformed rows are impossible.
     */
   def parse(lines: DataFrame, jsonCol: String = "value", strict: Boolean = true): DataFrame = {
-    val parsed = lines
-      .withColumn("_metric", from_json(col(jsonCol), FirehoseMetric.schema))
-      .select(col("_metric.*"))
-    if (strict) {
-      parsed.filter(
-        (col("id").isNotNull && col("name").isNotNull) || expr("uuid()") === lit(""))
-    } else parsed
+    val decoded = lines.select(from_json(col(jsonCol), FirehoseMetric.schema).as("_metric"))
+    val m = col("_metric")
+    if (strict)
+      decoded.select(inline(when(m("id").isNotNull && m("name").isNotNull, array(m))))
+    else decoded.select(col("_metric.*"))
   }
 
   /** Typed variant. */

@@ -4,7 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryException}
 
 import graft.operators.Firehose
 import graft.sources.MetricJson
@@ -140,37 +142,71 @@ object FirehoseStream {
   }
 
   private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-  private val noDataBatchesLock = new Object
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val FileSystemCheckpointManager = classOf[FileSystemBasedCheckpointFileManager].getName
+  private val gaugeStartLock = new Object
+  private val InitWaitMs = 60000L
 
-  /** Start a [[gaugeLatest]] sink with Spark's no-data micro-batches off
-    * for this query only. A no-data batch runs only because the watermark
-    * moved; in the gauge it can only evict idle series and emits nothing,
-    * yet it pays a whole epoch (offset log, state-store commits, commit
-    * log, an empty sink call). Without it each input costs one batch.
+  /** Start a [[gaugeLatest]] sink checkpointed at `checkpointDir`, with two
+    * Spark settings scoped to this query:
     *
-    * `start()` clones the session's SQL conf, so the setting is scoped to
-    * that one call: the caller's value (or its absence) is restored after
-    * `start()`, also when it throws. The lock serialises the
-    * set–start–restore window, so concurrent gauge starts never see or
-    * restore each other's value; a stream started elsewhere on the same
-    * session during that window (one `start()` long) would read it too.
+    *  - No-data micro-batches off. A no-data batch runs only because the
+    *    watermark moved; in the gauge it can only evict idle series and
+    *    emits nothing, yet it pays a whole epoch (offset log, state-store
+    *    commits, commit log, an empty sink call). Without it each input
+    *    costs one batch.
+    *  - On a local (`file:`) checkpoint, Spark's
+    *    `FileSystemBasedCheckpointFileManager` for the offset and commit
+    *    logs, the file source's log and the state store. Spark ships no
+    *    native Hadoop library, so its default `FileContext` manager shells
+    *    out on the local filesystem: every `rename` forks `readlink` for
+    *    the file and again for its `.crc`, about 90 forks per input and
+    *    most of the state commit. The `FileSystem` manager renames with the
+    *    same one `rename(2)` and keeps both checksum layers (Spark's
+    *    `N.delta.crc`, Hadoop's `.N.delta.crc`), so a checkpoint written
+    *    under either manager restarts under the other. A checkpoint on any
+    *    other filesystem keeps Spark's default manager.
+    *
+    * `start()` clones the session's SQL conf, so the settings reach this
+    * query only: the caller's values (or their absence) are restored once
+    * the query has created its source, also when `start()` throws. The
+    * lock serialises the set–start–restore window, so concurrent gauge
+    * starts never see or restore each other's values; a stream started
+    * elsewhere on the same session during that window (a `start()` and
+    * the source's creation long) would read them too.
     * Every other query a caller starts on the same session keeps its
     * no-data batches: a stateful query of the caller's own may need a
     * watermark-only batch to close a window or fire a timeout without new
     * traffic.
     */
   def startGaugeQuery(
-      spark: SparkSession, writer: DataStreamWriter[GaugeOut]): StreamingQuery =
-    noDataBatchesLock.synchronized {
+      spark: SparkSession, writer: DataStreamWriter[GaugeOut],
+      checkpointDir: String): StreamingQuery = {
+    val fs = new org.apache.hadoop.fs.Path(checkpointDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val scoped = Map(NoDataBatchesKey -> "false") ++
+      (if (fs.getUri.getScheme == "file") Map(CheckpointManagerKey -> FileSystemCheckpointManager)
+       else Map.empty)
+    gaugeStartLock.synchronized {
       val conf = spark.conf
-      val old = conf.getAll.get(NoDataBatchesKey)
-      conf.set(NoDataBatchesKey, "false")
-      try writer.start()
-      finally old match {
-        case Some(v) => conf.set(NoDataBatchesKey, v)
-        case None => conf.unset(NoDataBatchesKey)
+      val old = scoped.keys.map(k => k -> conf.getAll.get(k))
+      scoped.foreach { case (k, v) => conf.set(k, v) }
+      try {
+        val q = writer.option("checkpointLocation", checkpointDir).start()
+        // the stream thread creates the source (and the file source's own
+        // log) from this session after `start()` returns; hold the
+        // settings until it has (past the wait, only that log falls back
+        // to Spark's default manager). A query that dies here reports it
+        // through `exception`/`awaitTermination`, as one that dies later
+        try q.asInstanceOf[StreamingQueryWrapper].streamingQuery.awaitInitialization(InitWaitMs)
+        catch { case _: StreamingQueryException => () }
+        q
+      } finally old.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
       }
     }
+  }
 
   /** `endOfSet()` parity: per micro-batch, render the current gauge updates
     * to Prometheus exposition text and hand them to `push` (a PushGateway

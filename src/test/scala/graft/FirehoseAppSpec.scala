@@ -5,6 +5,8 @@ import java.net.http.{HttpClient, HttpRequest}
 import java.net.http.HttpResponse.BodyHandlers
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 import graft.streaming.{FirehoseStream, Prometheus}
@@ -311,30 +313,94 @@ class FirehoseAppSpec extends SparkSuite {
     assert(body.contains("app_g{user=\"u3\"} 6.5 1150000"))
   }
 
+  private val CheckpointManager = "spark.sql.streaming.checkpointFileManagerClass"
+
+  // covers the checkpoint-manager setting too
   test("the gauge start restores the session's no-data setting, also when start fails") {
     def gauges = FirehoseStream.gaugeLatest(
       FirehoseStream.fromJsonFiles(
         spark, Files.createTempDirectory("graft-gauge2").toString))
+    def chk = Files.createTempDirectory("graft-gauge2chk").toString
     def startAndStop(): Unit = FirehoseStream.startGaugeQuery(spark,
-      gauges.writeStream.format("memory").queryName("gauge_conf_t").outputMode("update")
-        .option("checkpointLocation", Files.createTempDirectory("graft-gauge2chk").toString))
+      gauges.writeStream.format("memory").queryName("gauge_conf_t").outputMode("update"), chk)
       .stop()
     def failingStart(): Unit = intercept[Exception] {
       FirehoseStream.startGaugeQuery(spark,
-        gauges.writeStream.format("graft-no-such-sink"))
+        gauges.writeStream.format("graft-no-such-sink"), chk)
     }
-    assert(!spark.conf.getAll.contains(NoData))
-    startAndStop()
-    assert(!spark.conf.getAll.contains(NoData))
-    failingStart()
-    assert(!spark.conf.getAll.contains(NoData))
-    spark.conf.set(NoData, "true")
+    for (key <- Seq(NoData, CheckpointManager)) {
+      assert(!spark.conf.getAll.contains(key))
+      startAndStop()
+      assert(!spark.conf.getAll.contains(key))
+      failingStart()
+      assert(!spark.conf.getAll.contains(key))
+    }
+    val preset = Seq(NoData -> "true", CheckpointManager ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
+    preset.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       startAndStop()
-      assert(spark.conf.get(NoData) === "true")
+      preset.foreach { case (k, v) => assert(spark.conf.get(k) === v) }
       failingStart()
-      assert(spark.conf.get(NoData) === "true")
-    } finally spark.conf.unset(NoData)
+      preset.foreach { case (k, v) => assert(spark.conf.get(k) === v) }
+    } finally preset.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("the app's gauge query forks no readlink per input on a local checkpoint") {
+    // Spark ships no native Hadoop library, so its default FileContext
+    // checkpoint manager forks `readlink` around every rename on the local
+    // filesystem (about 90 per input); the gauge query's manager
+    // renames without them
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try runGauge { (dir, chk) =>
+      val r = FirehoseApp.start(spark, FirehoseApp.buildConfig(Array(
+        "--mode", "pull", "--source", dir)), chk)
+      (r.query, r.registry.get, r.stop)
+    } finally rec.stop()
+    val jfr = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(jfr)
+      val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .groupBy(_.getString("command").split(' ').head)
+        .map { case (command, events) => command -> events.size }
+      // Hadoop still forks `chmod` on each checkpoint file it creates:
+      // the recording saw the checkpoint's forks
+      assert(forks.getOrElse("chmod", 0) > 0, forks)
+      assert(forks.getOrElse("readlink", 0) === 0, forks)
+    } finally { rec.close(); Files.delete(jfr) }
+  }
+
+  test("a gauge checkpoint restarts under the other checkpoint manager with its state") {
+    // plain start = Spark's default manager; startGaugeQuery = the
+    // FileSystem manager on a local checkpoint. Each direction: u1's
+    // state from the first run must outrank a stale u1 sample after the
+    // restart, so the restarted gauge keeps 1.5 at 1000 s
+    for (gaugeFirst <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft-gauge4").toFile
+      val chk = Files.createTempDirectory("graft-gauge4chk").toString
+      def run(viaGauge: Boolean, file: String, lines: Seq[String]): String = {
+        val registry = new Prometheus.Registry
+        val w = Prometheus.pullSink(FirehoseStream.gaugeLatest(
+          FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath)), registry)
+        val q =
+          if (viaGauge) FirehoseStream.startGaugeQuery(spark, w, chk)
+          else w.option("checkpointLocation", chk).start()
+        try {
+          Files.write(dir.toPath.resolve(file), lines.mkString("\n").getBytes)
+          q.processAllAvailable()
+          registry.render
+        } finally q.stop()
+      }
+      val first = run(gaugeFirst, "f0.json", Seq(metricJson("1", "g", 1000, "u1", 1.5)))
+      assert(first.contains("app_g{user=\"u1\"} 1.5 1000000"), first)
+      val second = run(!gaugeFirst, "f1.json", Seq(
+        metricJson("2", "g", 900, "u1", 9.5), metricJson("3", "g", 1000, "u2", 2.5)))
+      assert(second.contains("app_g{user=\"u1\"} 1.5 1000000"), s"gaugeFirst=$gaugeFirst: $second")
+      assert(second.contains("app_g{user=\"u2\"} 2.5 1000000"), second)
+      assert(!second.contains("9.5"), second)
+    }
   }
 
   test("a gauge query started after the app still runs its watermark-only batch") {
