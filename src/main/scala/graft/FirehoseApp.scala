@@ -483,11 +483,7 @@ object FirehoseApp {
         new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
           java.nio.charset.StandardCharsets.UTF_8))
       val server = graft.promql.PromQlHttp.startLandingServer(
-        spark, root, cfg.getInt("app.serve.port", 0), rules,
-        // registry.mode=landed: serve the registry surfaces from the
-        // landed checkpoint relation (cardinality beyond driver heap is
-        // a config flip, not a rewrite)
-        cfg.getOrElse("registry.mode", "driver"))
+        spark, root, cfg.getInt("app.serve.port", 0), rules)
       println(s"[graft] query API on http://127.0.0.1:${
         server.getAddress.getPort} over $root")
       // serving-side lifecycle daemon: retention + small-file compaction

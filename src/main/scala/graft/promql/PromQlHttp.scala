@@ -156,23 +156,9 @@ object PromQlHttp {
     */
   def startLandingServer(
       spark: org.apache.spark.sql.SparkSession, root: String,
-      port: Int = 0, rulesText: Option[String] = None,
-      registryMode: String = "driver"): HttpServer = {
+      port: Int = 0, rulesText: Option[String] = None): HttpServer = {
     import graft.sources.Versioned
     rulesText.foreach(PromQlRules.parse) // a bad rules file fails at START
-    require(registryMode == "driver" || registryMode == "landed",
-      s"registry.mode must be 'driver' or 'landed', got '$registryMode'")
-    // `registry.mode=landed`: the cardinality-beyond-driver-heap posture.
-    // The head table lives in the LANDED checkpoint relation
-    // (`_registry_ckpt`, advanced Spark-side by
-    // [[PromRegistry.checkpointAdvance]] — the driver map is never
-    // built), and every registry-backed surface — /federate, the
-    // instant fast path, default-time newestTs, metadata, the tsdb page
-    // — serves from that relation. Honest cost model: what was a
-    // zero-job driver fold becomes a registry-sized Spark query
-    // (spec-pinned jobs > 0), still ZERO landed data files per request;
-    // byte-identity with driver mode is spec-pinned surface by surface.
-    val landed = registryMode == "landed"
     // the landing's latest-gauge registry, maintained INCREMENTALLY per
     // committed version (PromRegistry: an append folds only its delta
     // files into the driver-held head map) — the default-time newestTs
@@ -182,53 +168,11 @@ object PromQlHttp {
     // the corpus. This is what keeps a downstream Prometheus's 15 s
     // /federate poll from costing a full-landing scan per append.
     def registry(): PromRegistry.State = PromRegistry.current(spark, root)
-    // ---- landed-mode serving state (all memoized per version; Spark
-    // work always OUTSIDE the map — the bin-lock review catch) ----
-    val landedCkpt =
-      new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-    def landedCkptVersion(): Long = {
-      val v = Versioned.latestVersion(root)
-      val hit = landedCkpt.get(v: java.lang.Long)
-      if (hit != null) hit.longValue()
-      else {
-        val cv = PromRegistry.checkpointAdvance(spark, root)
-        if (landedCkpt.size > 64) landedCkpt.clear()
-        landedCkpt.putIfAbsent(v, cv)
-        cv
-      }
+    def newestOf(s: PromRegistry.State): Long = {
+      if (s.heads.isEmpty) throw new IllegalArgumentException(
+        "the landing is empty — pass an explicit 'time'")
+      s.maxTs
     }
-    def landedHeads(): DataFrame =
-      Versioned.asOf(spark, PromRegistry.ckptRoot(root), landedCkptVersion())
-    def landedGauges(): DataFrame = landedHeads().select(
-      col("component"), col("name"), col("labels"),
-      col("value").as("last_value"), col("ts").as("last_ts"))
-    def landedMetrics(): DataFrame = landedHeads().select(
-      col("component"), col("name"), col("labels"),
-      col("ts").as("timestamp"), col("id"), col("value"))
-    val landedNewestCache =
-      new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-    def landedNewest(): Long = {
-      val cv = landedCkptVersion()
-      val hit = landedNewestCache.get(cv: java.lang.Long)
-      if (hit != null) hit.longValue()
-      else {
-        val r = landedHeads().agg(max(col("ts"))).head()
-        if (r.isNullAt(0)) throw new IllegalArgumentException(
-          "the landing is empty — pass an explicit 'time'")
-        val n = r.getLong(0)
-        if (landedNewestCache.size > 64) landedNewestCache.clear()
-        landedNewestCache.putIfAbsent(cv, n)
-        n
-      }
-    }
-    def cachedNewest(): Long =
-      if (landed) landedNewest()
-      else {
-        val s = registry()
-        if (s.heads.isEmpty) throw new IllegalArgumentException(
-          "the landing is empty — pass an explicit 'time'")
-        s.maxTs
-      }
     def cachedNames(): Seq[String] =
       if (Versioned.latestVersion(root) < 0) Nil else registry().names
     // the TSDB-status cardinality page: computed over the registry's
@@ -237,31 +181,7 @@ object PromQlHttp {
     // holds the bin lock against unrelated requests (review catch).
     val tsdbCache =
       new java.util.concurrent.ConcurrentHashMap[java.lang.Long, String]()
-    def cachedTsdb(): String =
-      if (landed) {
-        // same body over the checkpoint RELATION: the corpus min
-        // timestamp comes from the checkpoint's own stamp (head
-        // timestamps alone cannot answer it), the max from the cached
-        // newest — byte-identity with driver mode spec-pinned
-        val cv = landedCkptVersion()
-        val hit = tsdbCache.get(cv: java.lang.Long)
-        if (hit != null) hit
-        else {
-          val heads = landedHeads()
-          val empty = heads.isEmpty
-          val minT =
-            if (empty) 0L
-            else Versioned.markerProps(PromRegistry.ckptRoot(root), cv)
-              .get("ckpt.minTs").map(_.toLong * 1000L).getOrElse(0L)
-          val body = tsdbBodyOf(
-            heads.select(col("name"), col("series").as("_sk"), col("labels")),
-            minT,
-            if (empty) 0L else landedNewest() * 1000L)
-          if (tsdbCache.size > 8) tsdbCache.clear()
-          tsdbCache.putIfAbsent(cv, body)
-          body
-        }
-      } else {
+    def cachedTsdb(): String = {
       val s = registry()
       val hit = tsdbCache.get(s.version: java.lang.Long)
       if (hit != null) hit
@@ -288,17 +208,7 @@ object PromQlHttp {
       (q, t, lookback, xp) =>
         // bare-selector instant queries answer from the registry (zero
         // landed files; byte-identity spec-pinned); everything else
-        // takes the pruned landed compile. In landed mode the same
-        // instant-only shape class compiles over the checkpoint
-        // RELATION instead of the driver map — registry-sized Spark
-        // jobs (> 0, honestly), still zero landed data files
-        if (landed) {
-          val ast = PromQlParser.parse(q)
-          if (PromRegistry.instantOnly(ast) && t >= landedNewest())
-            PromQlCompiler.compileInstantVector(q, landedMetrics(), t, lookback)
-          else PromQlVersioned.compileInstantVector(spark, root, q, t,
-            lookbackSec = lookback, extrapolate = xp)
-        } else
+        // takes the pruned landed compile
         PromRegistry.instantFastPath(spark, root, q, t, lookback).getOrElse(
           PromQlVersioned.compileInstantVector(spark, root, q, t,
             lookbackSec = lookback, extrapolate = xp)),
@@ -321,8 +231,7 @@ object PromQlHttp {
         // head, so distinct labels/values/series over the registry's
         // local frame equal the corpus's — zero landed files per probe
         case (None, None) =>
-          if (landed) landedMetrics()
-          else PromRegistry.metricsFrame(spark, PromRegistry.current(spark, root))
+          PromRegistry.metricsFrame(spark, PromRegistry.current(spark, root))
         // half-bounded spans prune one-sidedly (files wholly outside
         // the bound never list; prunedRead applies the residual row
         // filter itself, like the both-bounds case)
@@ -333,7 +242,7 @@ object PromQlHttp {
           spark, root, Versioned.latestVersion(root),
           Seq(("timestamp", -Double.MaxValue, e.toDouble)))
       },
-      () => cachedNewest(),
+      () => newestOf(registry()),
       port,
       Extras(
         ingest = Some((params, body) => ingestBody(spark, root, params, body)),
@@ -341,22 +250,13 @@ object PromQlHttp {
           // the registry IS the latest-gauge relation — the body renders
           // ENTIRELY driver-side from the head map (zero landed files,
           // zero Spark jobs per poll; byte-identity with the m6 render
-          // spec-pinned); utf8 = the client's escaping negotiation. In
-          // landed mode the SAME body renders through the codegen m6
-          // render over the checkpoint relation (byte-identity of the
-          // two renders spec-pinned since r16)
-          if (landed) federateSparkBody(landedGauges(), params.matches, utf8)
-          else PromRegistry.federateBody(registry(), params.matches, utf8)),
-        metadataNames =
-          // landed: fall through to the spanFn(None, None) Spark path
-          // over the checkpoint relation — honest jobs > 0
-          if (landed) None else Some(() => cachedNames()),
+          // spec-pinned); utf8 = the client's escaping negotiation
+          PromRegistry.federateBody(registry(), params.matches, utf8)),
+        metadataNames = Some(() => cachedNames()),
         tsdbStats = Some(() => cachedTsdb()),
         // time-unbounded metadata probes (Grafana's per-keystroke global
-        // autocomplete) fold over the registry's head map — zero jobs.
-        // Landed: None — the endpoints compute Spark-side over
-        // spanFn(None, None) = the checkpoint relation
-        metaFold = if (landed) None else Some(MetaFold(
+        // autocomplete) fold over the registry's head map — zero jobs
+        metaFold = Some(MetaFold(
           ms => PromRegistry.labelKeys(registry(), ms),
           (l, ms) => PromRegistry.labelValues(registry(), l, ms),
           ms => PromRegistry.seriesTriples(registry(), ms))),
@@ -365,32 +265,14 @@ object PromQlHttp {
           // pin the registry's version ONCE and thread it through
           // everything the cached body reads: an append racing the
           // request must not cache newer (or internally mixed) data
-          // under this key
-          // pin version and newest-sample default from ONE observation:
-          // driver mode reads both off a single registry State; landed
-          // mode pins the advanced checkpoint version and reads newest
-          // from that same checkpoint (no driver map)
-          val (v, defaultEnd) =
-            if (landed) {
-              // the pin is the LANDING version (what ruleSpanMetrics
-              // evaluates at); the newest default reads the checkpoint
-              // advanced to it
-              val lv = Versioned.latestVersion(root)
-              landedCkptVersion()
-              (lv, () => landedNewest())
-            }
-            else {
-              val reg = registry()
-              (reg.version, () => {
-                if (reg.heads.isEmpty) throw new IllegalArgumentException(
-                  "the landing is empty — pass an explicit 'time'")
-                reg.maxTs
-              })
-            }
+          // under this key; version and newest-sample default come from
+          // one registry State
+          val reg = registry()
+          val v = reg.version
           // resolve the grid BEFORE keying, so an omitted `time` and an
           // explicit time equal to the newest sample share one entry
           // (the newest-sample default reads the PINNED registry too)
-          val end = params.get("time").map(parseTime).getOrElse(defaultEnd())
+          val end = params.get("time").map(parseTime).getOrElse(newestOf(reg))
           val step = params.get("step").map(parseDuration).getOrElse(60L)
           val lookback =
             params.get("lookback").map(parseDuration).getOrElse(300L)
@@ -796,12 +678,10 @@ object PromQlHttp {
   /** The SPARK-path `/federate` render over an already-latest gauge
     * relation — `match[]` filters on the label map, then the m6 render
     * (`utf8` = the client's escaping negotiation, promRender's classic
-    * downgrade when false). The DRIVER-mode landing server serves the
+    * downgrade when false). The landing server serves the
     * zero-job fold instead ([[PromRegistry.federateBody]]); this is the
     * byte-identity REFERENCE the parity spec replays the driver render
-    * against, and the serving path of `registry.mode=landed`, where the
-    * head table lives in the checkpoint relation rather than driver
-    * memory.
+    * against.
     */
   private[graft] def federateSparkBody(
       gauges: DataFrame, matches: Seq[String],

@@ -179,15 +179,6 @@ object PromRegistry {
     StructField("id", StringType),
     StructField("ts_full", DoubleType)))
 
-  /** LAND the registry's head map as a checkpoint commit — one
-    * registry-sized snapshot file stamped with the landing version it
-    * represents, the durable half of the restart path: a cold driver
-    * bootstraps from `checkpoint ∪ delta-files-since` (the exact merge
-    * [[advance]] runs on every append) instead of scanning the corpus.
-    * O(registry) per call; the scrape loop lands one every
-    * `checkpointEvery` ticks ([[PromScraper.run]]). Returns the
-    * checkpoint table's committed version.
-    */
   /** The series-key format this engine writes and reads — bumped when
     * the canonical identity changes (r16: "esc1", the escaped render).
     * One constant across every durable key-bearing artifact
@@ -210,6 +201,15 @@ object PromRegistry {
     try Some(Versioned.commitTime(root, 0L))
     catch { case scala.util.control.NonFatal(_) => None }
 
+  /** LAND the registry's head map as a checkpoint commit — one
+    * registry-sized snapshot file stamped with the landing version it
+    * represents, the durable half of the restart path: a cold driver
+    * bootstraps from `checkpoint ∪ delta-files-since` (the exact merge
+    * [[advance]] runs on every append) instead of scanning the corpus.
+    * O(registry) per call; the scrape loop lands one every
+    * `checkpointEvery` ticks ([[PromScraper.run]]). Returns the
+    * checkpoint table's committed version.
+    */
   def checkpoint(spark: SparkSession, root: String): Long = {
     val state = current(spark, root)
     val rows: java.util.List[Row] = {
@@ -220,27 +220,12 @@ object PromRegistry {
       }
       l
     }
-    commitCkpt(spark, root,
-      spark.createDataFrame(rows, ckptSchema).coalesce(1),
-      state.version, state.minTs)
-  }
-
-  /** One checkpoint commit — frame already in [[ckptSchema]] order —
-    * with the stamp set every loader checks (source version, corpus min
-    * timestamp, series-key format, landing generation), followed by the
-    * O(1)-snapshots vacuum. Shared by [[checkpoint]] (the driver-map
-    * snapshot) and [[checkpointAdvance]] (the Spark-side landed-mode
-    * advance), so the two writers cannot drift on the guard props.
-    */
-  private def commitCkpt(
-      spark: SparkSession, root: String, frame: DataFrame,
-      srcVersion: Long, minTs: Long): Long = {
     val v = Versioned.commit(
-      frame,
+      spark.createDataFrame(rows, ckptSchema).coalesce(1),
       ckptRoot(root),
       props = Map(
-        "ckpt.sourceVersion" -> srcVersion.toString,
-        "ckpt.minTs" -> minTs.toString,
+        "ckpt.sourceVersion" -> state.version.toString,
+        "ckpt.minTs" -> state.minTs.toString,
         // the series-key FORMAT generation: "esc1" = the r16 escaped
         // identity. A checkpoint written under an older key format
         // must not seed a merge with newer-format delta keys (the same
@@ -255,83 +240,6 @@ object PromRegistry {
     // cold-start may just have resolved.
     Versioned.vacuum(ckptRoot(root), keepLast = 2)
     v
-  }
-
-  /** Advance the landed checkpoint ENTIRELY Spark-side — the
-    * `registry.mode=landed` maintenance tick. Unlike [[checkpoint]]
-    * (which snapshots the driver-held map), the head set here never
-    * materializes on the driver: an append-only transition merges the
-    * checkpoint RELATION with the delta files' per-series winners in
-    * one Spark aggregation and commits the result; any other transition
-    * (compaction, retention, tombstones — or no usable checkpoint at
-    * all: missing, foreign key format, dead generation, vacuumed source
-    * manifest) recomputes the head table over the full landing. The
-    * SAME append-vs-maintenance split [[advance]] applies to the driver
-    * map, so the two modes cannot disagree on content; the winner order
-    * is the same (ts_full, id) struct comparison on both paths. Driver
-    * memory per call: one scalar row (the min-timestamp aggregate) plus
-    * commit metadata — series cardinality beyond driver heap is exactly
-    * the regime this exists for.
-    *
-    * Returns the checkpoint version serving should read (the current
-    * one when it already sits at the landing's newest version).
-    */
-  def checkpointAdvance(spark: SparkSession, root: String): Long = {
-    val v = Versioned.latestVersion(root)
-    require(v >= 0, s"no committed versions in $root")
-    val cr = ckptRoot(root)
-    val curGen = generationId(root)
-    // the newest USABLE checkpoint: same guards as loadCheckpoint (key
-    // format, generation, source version not ahead), but the rows stay
-    // landed — only the marker props are read
-    val cur: Option[(Long, Long, Long)] =
-      try {
-        val cv = Versioned.latestVersion(cr)
-        if (cv < 0) None
-        else {
-          val props = Versioned.markerProps(cr, cv)
-          val srcV = props.get("ckpt.sourceVersion").map(_.toLong)
-          val minTs = props.get("ckpt.minTs").map(_.toLong)
-          val gen = props.get("ckpt.generation").map(_.toLong)
-          if (srcV.isEmpty || minTs.isEmpty || srcV.get > v ||
-              (gen.isDefined && curGen.isDefined && gen != curGen) ||
-              !props.get("ckpt.keyFormat").contains(KeyFormat)) None
-          else Some((cv, srcV.get, minTs.get))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    def recompute(): (DataFrame, Long) = {
-      val m = Versioned.asOf(spark, root, v)
-      val mn = m.agg(min(col("timestamp").cast("long"))).head()
-      (headsFrame(m), if (mn.isNullAt(0)) Long.MaxValue else mn.getLong(0))
-    }
-    cur match {
-      case Some((cv, srcV, _)) if srcV == v => cv
-      case other =>
-        val (heads, minT) = other match {
-          case Some((cv, srcV, oldMin)) =>
-            val deltaOpt =
-              try multisetDelta(
-                Versioned.manifest(root, srcV), Versioned.manifest(root, v))
-              catch { case _: IllegalArgumentException => None }
-            deltaOpt match {
-              case Some(delta) if delta.isEmpty =>
-                // same content, newer version stamp — re-land the
-                // relation so `sourceVersion == newest` stays invariant
-                (Versioned.asOf(spark, cr, cv), oldMin)
-              case Some(delta) =>
-                val dm = Versioned.readSubset(spark, root, v, delta)
-                val dMin = dm.agg(min(col("timestamp").cast("long"))).head()
-                val newMin =
-                  if (dMin.isNullAt(0)) oldMin
-                  else math.min(oldMin, dMin.getLong(0))
-                (headsMerge(Versioned.asOf(spark, cr, cv), headsFrame(dm)),
-                  newMin)
-              case None => recompute()
-            }
-          case None => recompute()
-        }
-        commitCkpt(spark, root, heads, v, minT)
-    }
   }
 
   /** The newest landed checkpoint as a [[State]] at its recorded source
@@ -429,52 +337,6 @@ object PromRegistry {
     }
     (heads.result(), minT)
   }
-
-  /** [[headsOf]]'s winner selection as a FRAME in [[ckptSchema]] column
-    * order — no driver collect: the landed-mode maintenance path
-    * ([[checkpointAdvance]]) commits this directly. One map-side-
-    * combinable `max_by` whose shuffle carries one candidate per series
-    * per input partition.
-    */
-  private def headsFrame(m: DataFrame): DataFrame = {
-    import graft.operators.Firehose
-    m.withColumn("series", Firehose.seriesKey(col("labels")))
-      .groupBy(col("component"), col("name"), col("series"))
-      .agg(
-        graft.functions.GraftFunctions.max_by_ts_id(
-          struct(col("labels"), col("value"),
-            col("timestamp").cast("long").as("ts"), col("id"),
-            col("timestamp").cast("double").as("ts_full")),
-          col("timestamp"), col("id")).as("w"))
-      .select(col("component"), col("name"), col("series"),
-        col("w.labels").as("labels"), col("w.value").as("value"),
-        col("w.ts").as("ts"), col("w.id").as("id"),
-        col("w.ts_full").as("ts_full"))
-  }
-
-  /** The `max_by((ts_full, id))` head-merge semigroup applied SPARK-side
-    * over two [[ckptSchema]]-shaped relations — [[mergeHeads]]'s twin
-    * for the landed mode, ordered by exactly the same (full-precision
-    * timestamp, UTF-8-binary id) key, so the driver fold and the landed
-    * merge cannot pick different winners.
-    */
-  private def headsMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("component"), col("name"), col("series"))
-      .agg(
-        graft.functions.GraftFunctions.max_by_ts_id(
-          struct(col("labels"), col("value"), col("ts"), col("id"),
-            col("ts_full")),
-          col("ts_full"), col("id")).as("w"))
-      .select(col("component"), col("name"), col("series"),
-        col("w.labels").as("labels"), col("w.value").as("value"),
-        col("w.ts").as("ts"), col("w.id").as("id"),
-        col("w.ts_full").as("ts_full"))
-
-  /** How many roots hold a memoized driver-side registry — the landed
-    * mode's "driver map never built" spec pin.
-    */
-  private[graft] def memoSize: Int = states.size
 
   /** `a > b` in Spark's UTF8String order — unsigned lexicographic over
     * the UTF-8 bytes. The driver merge must tie-break ids EXACTLY as

@@ -495,34 +495,6 @@ object Versioned {
     next
   }
 
-  /** Per-file bloom filters over `bloomCols` for every parquet file under
-    * `stagingPath` — Spark's own bloom aggregate over xxhash64 of the
-    * canonical string rendering, one grouped pass, file-count-bounded
-    * collect. Shared by every commit flavor so the probe-side hash
-    * ([[pointRead]], [[deleteCommit]]) can never diverge from the build.
-    */
-  /** Driver-side read of one column's values from a staged parquet dir —
-    * the fast path [[bloomsFor]] and [[tombstoneHits]] take for SMALL
-    * stagings, where scheduling a Spark job costs more than the bytes.
-    * Returns per-file values rendered exactly like `cast(col AS string)`
-    * (the Spark pass's spelling): strings verbatim, integral types via
-    * toString, null as None. None (fall back to the cluster pass) when
-    * the columns aren't string/integral (double→string rendering would
-    * have to reimplement Spark's shortest-round-trip spelling — not worth
-    * the drift risk), when any file is unreadable, or when the staging
-    * exceeds `spark.graft.driverCommitScanMaxBytes` (default 64 MB —
-    * commits bigger than that are data-sized, not metadata-sized, and
-    * belong on the cluster; the cap keeps the driver path to the
-    * commit-ceremony regime where the action count dominates).
-    */
-  /** One parquet file's `cols` values read driver-side, rendered exactly
-    * like `cast(col AS string)`: strings verbatim, integral via toString,
-    * null as None. None = unsupported shape (non-string/integral column,
-    * unreadable file) → the caller falls back to its Spark pass. The
-    * double/timestamp/decimal exclusions are deliberate: their string
-    * renderings would have to reimplement Spark's spelling and any drift
-    * corrupts blooms/tombstones silently.
-    */
   /** One parsed-default Hadoop conf shared by every driver-side parquet
     * read: `new Configuration()` re-parses the default XML resources each
     * time — a fixed several-ms tax the per-commit ceremony was paying
@@ -532,6 +504,14 @@ object Versioned {
     */
   private lazy val driverHadoopConf = new org.apache.hadoop.conf.Configuration()
 
+  /** One parquet file's `cols` values read driver-side, rendered exactly
+    * like `cast(col AS string)`: strings verbatim, integral via toString,
+    * null as None. None = unsupported shape (non-string/integral column,
+    * unreadable file) → the caller falls back to its Spark pass. The
+    * double/timestamp/decimal exclusions are deliberate: their string
+    * renderings would have to reimplement Spark's spelling and any drift
+    * corrupts blooms/tombstones silently.
+    */
   private def fileColumnsDriver(
       f: File, cols: Seq[String]): Option[Seq[Seq[Option[String]]]] =
     try {
@@ -595,6 +575,20 @@ object Versioned {
     spark.conf.getOption("spark.graft.driverCommitScanMaxBytes")
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
 
+  /** Driver-side read of one column's values from a staged parquet dir —
+    * the fast path [[bloomsFor]] and [[tombstoneHits]] take for SMALL
+    * stagings, where scheduling a Spark job costs more than the bytes.
+    * Returns per-file values rendered exactly like `cast(col AS string)`
+    * (the Spark pass's spelling): strings verbatim, integral types via
+    * toString, null as None. None (fall back to the cluster pass) when
+    * the columns aren't string/integral (double→string rendering would
+    * have to reimplement Spark's shortest-round-trip spelling — not worth
+    * the drift risk), when any file is unreadable, or when the staging
+    * exceeds `spark.graft.driverCommitScanMaxBytes` (default 64 MB —
+    * commits bigger than that are data-sized, not metadata-sized, and
+    * belong on the cluster; the cap keeps the driver path to the
+    * commit-ceremony regime where the action count dominates).
+    */
   private def stagedColumnsDriver(
       spark: SparkSession,
       stagingPath: String,
@@ -686,6 +680,12 @@ object Versioned {
       }.toMap)
     }
 
+  /** Per-file bloom filters over `bloomCols` for every parquet file under
+    * `stagingPath` — Spark's own bloom aggregate over xxhash64 of the
+    * canonical string rendering, one grouped pass, file-count-bounded
+    * collect. Shared by every commit flavor so the probe-side hash
+    * ([[pointRead]], [[deleteCommit]]) can never diverge from the build.
+    */
   private def bloomsFor(
       spark: SparkSession,
       stagingPath: String,
@@ -725,23 +725,6 @@ object Versioned {
     }
   }
 
-  /** Z-ordered snapshot commit WITH per-file column stats in the manifest —
-    * the "stats in the log" data-skipping index the real formats maintain
-    * (Delta's per-file min/max, Iceberg's manifest metrics), composed from
-    * [[graft.operators.Layout.zorderBy]]'s clustering so the stats are
-    * TIGHT on every clustered dimension at once. The stats pass is one
-    * grouped aggregate over the staged files whose result is one row per
-    * FILE (registry-sized by construction — the collect is file-count-
-    * bounded, never data). Numeric clustered columns only (the same
-    * contract as the z-order bucketing). Returns the committed version.
-    */
-  /** Per-file (min, max) stats over `cols` for a staged write, typed by
-    * `schema`: numerics and date/timestamps as numbers (epoch), strings
-    * as lexical bounds. One grouped aggregate, one row per FILE (the
-    * collect is file-count-bounded, never data). An all-null column in a
-    * file yields null bounds — no stats for that column (the file stays
-    * un-prunable on it), never a fake (0, 0) range.
-    */
   /** FOOTER fast path for [[statsFor]]: when every requested column is a
     * plain integral type (INT32/INT64 with no date/time/decimal logical
     * annotation), the per-file (min, max) already sits in the parquet
@@ -807,6 +790,13 @@ object Versioned {
     Some(out.result())
   }
 
+  /** Per-file (min, max) stats over `cols` for a staged write, typed by
+    * `schema`: numerics and date/timestamps as numbers (epoch), strings
+    * as lexical bounds. One grouped aggregate, one row per FILE (the
+    * collect is file-count-bounded, never data). An all-null column in a
+    * file yields null bounds — no stats for that column (the file stays
+    * un-prunable on it), never a fake (0, 0) range.
+    */
   private def statsFor(
       spark: SparkSession,
       stagingPath: String,
@@ -864,6 +854,16 @@ object Versioned {
     }
   }
 
+  /** Z-ordered snapshot commit WITH per-file column stats in the manifest —
+    * the "stats in the log" data-skipping index the real formats maintain
+    * (Delta's per-file min/max, Iceberg's manifest metrics), composed from
+    * [[graft.operators.Layout.zorderBy]]'s clustering so the stats are
+    * TIGHT on every clustered dimension at once. The stats pass is one
+    * grouped aggregate over the staged files whose result is one row per
+    * FILE (registry-sized by construction — the collect is file-count-
+    * bounded, never data). Numeric clustered columns only (the same
+    * contract as the z-order bucketing). Returns the committed version.
+    */
   def commitZordered(
       df: DataFrame,
       root: String,
@@ -1215,13 +1215,6 @@ object Versioned {
       .filter(col(keyCol).cast("string").isin(values: _*))
   }
 
-  /** `entries` with `keys` tombstoned in exactly the files that
-    * physically hold them: blooms prune the candidate set first (a file
-    * whose bloom proves every key absent never gets scanned), then ONE
-    * scan over the candidates only — driver result bounded by (affected
-    * files × key-set size). Unaffected entries pass through untouched, so
-    * they never pay the read-side anti-join.
-    */
   /** Locate which files physically hold `keys`: blooms prune the
     * candidate set, one scan over the survivors only. Returns
     * file-suffix → hit keys.
@@ -1283,6 +1276,13 @@ object Versioned {
       }
     }
 
+  /** `entries` with `keys` tombstoned in exactly the files that
+    * physically hold them: blooms prune the candidate set first (a file
+    * whose bloom proves every key absent never gets scanned), then ONE
+    * scan over the candidates only — driver result bounded by (affected
+    * files × key-set size). Unaffected entries pass through untouched, so
+    * they never pay the read-side anti-join.
+    */
   private def withTombstones(
       spark: SparkSession,
       root: String,

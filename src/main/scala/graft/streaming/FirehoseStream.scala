@@ -106,6 +106,10 @@ object FirehoseStream {
     * a timed-out series is removed at the next data batch, not in an extra
     * watermark-only batch. Eviction emits no rows, so the output is the same
     * either way.
+    *
+    * A row whose `timestamp` or `value` is null (a line with a good `id` and
+    * `name` whose other fields do not fit their types) is dropped here: the
+    * typed step below would otherwise fail the query on it.
     */
   def gaugeLatest(
       metrics: DataFrame,
@@ -113,7 +117,7 @@ object FirehoseStream {
       ttlMs: Long = 10 * 60 * 1000L): Dataset[GaugeOut] = {
     val spark = metrics.sparkSession
     import spark.implicits._
-    Firehose.tagFilter(metrics)
+    Firehose.tagFilter(metrics.filter(col("timestamp").isNotNull && col("value").isNotNull))
       .withColumn("series", Firehose.seriesKey(col("labels")))
       .withColumn("eventTime", timestamp_seconds(col("timestamp")))
       .select("component", "name", "series", "timestamp", "id", "value", "eventTime")
@@ -127,10 +131,15 @@ object FirehoseStream {
           state.remove()
           Iterator.empty
         } else {
-          // the latest sample by (timestamp, id) wins
+          // the latest sample by (timestamp, id) wins, ids ordered by their
+          // UTF-8 bytes as the batch `max_by_ts_id` orders them
           val (component, name, series) = key
           val candidates = points.map(p => GaugeState(p.timestamp, p.id, p.value)) ++ state.getOption
-          val best = candidates.maxBy(s => (s.lastTs, s.lastId))
+          val best = candidates.reduce { (a, b) =>
+            if (b.lastTs > a.lastTs ||
+                (b.lastTs == a.lastTs && graft.promql.PromRegistry.utf8Gt(b.lastId, a.lastId))) b
+            else a
+          }
           state.update(best)
           // evict `ttlMs` past the watermark, or past the series' last
           // sample before the first watermark

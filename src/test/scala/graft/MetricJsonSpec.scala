@@ -91,6 +91,24 @@ class MetricJsonSpec extends SparkSuite {
     assert(MetricJson.readJsonLines(spark, jsonFile(mixed)).count() === good.size)
   }
 
+  test("the adversarial corpus does not stop the gauge query") {
+    val dir = Files.createTempDirectory("graft-metricjson-bad")
+    Files.write(dir.resolve("f0.json"), (adversarial :+
+      """{"id":"v1","name":"valid_g","timestamp":9,"component":"c","tags":{"host":"h"},"value":4.0}""")
+      .mkString("\n").getBytes)
+    val q = FirehoseStream.startGaugeQuery(spark,
+      FirehoseStream.gaugeLatest(FirehoseStream.fromJsonFiles(spark, dir.toString))
+        .writeStream.format("memory").queryName("gauge_bad_t").outputMode("update"),
+      Files.createTempDirectory("graft-metricjson-badchk").toString)
+    try {
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty, q.exception)
+      val valid = spark.table("gauge_bad_t").filter("name = 'valid_g'").collect()
+      assert(valid.map(r => (r.getAs[String]("series"), r.getAs[Double]("last_value"),
+        r.getAs[Long]("last_ts"))).toSeq === Seq(("host=h", 4.0, 9L)))
+    } finally q.stop()
+  }
+
   test("each line is decoded once: one from_json in the executed plan") {
     val batch = MetricJson.readJsonLines(spark, jsonFile(adversarial))
     batch.collect()

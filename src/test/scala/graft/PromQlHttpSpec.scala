@@ -1092,13 +1092,11 @@ class PromQlHttpSpec extends SparkSuite {
     } finally server.stop(0)
   }
 
-  test("registry.mode=landed: every registry surface serves from the " +
-      "checkpoint RELATION byte-identically to driver mode — the driver " +
-      "map is never built") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  test("every registry surface serves adversarial heads at full " +
+      "precision, quotes UTF-8 names, and /federate shows an append") {
     import spark.implicits._
     graft.promql.PromRegistry.reset()
-    val r = Files.createTempDirectory("pqllanded").toFile.getAbsolutePath
+    val r = Files.createTempDirectory("pqlregistry").toFile.getAbsolutePath
     PromQlVersioned.land(metrics, r)
     // adversarial heads: a quoted UTF-8 name + key, escape-relevant
     // label text, sub-microunit and 17-significant-digit values (the
@@ -1109,8 +1107,7 @@ class PromQlHttpSpec extends SparkSuite {
       ("app", "up", Map("z" -> "x,y=q\\", "host" -> "a\nb"),
         tMax + 2L, "a2", 1.0 / 3.0))
       .toDF("component", "name", "labels", "timestamp", "id", "value"), r)
-    val landedSrv =
-      PromQlHttp.startLandingServer(spark, r, registryMode = "landed")
+    val srv = PromQlHttp.startLandingServer(spark, r)
     val qt = tMax + 2L
     val paths = Seq(
       s"/federate?match[]=${enc("{__name__=~\".*\"}")}",
@@ -1118,81 +1115,36 @@ class PromQlHttpSpec extends SparkSuite {
       s"/api/v1/query?query=${enc("view_total")}&time=$qt",
       s"/api/v1/query?query=${enc("sum by (user) (view_total)")}&time=$qt",
       s"/api/v1/query?query=${enc("{\"dot.name\"}")}&time=$qt",
-      // outside the instant-only class: both modes compile the landing
       s"/api/v1/query?query=${enc("rate(view_total[30m])")}&time=$qt",
       "/api/v1/labels",
       "/api/v1/label/user/values",
       s"/api/v1/series?match[]=${enc("up")}",
       "/api/v1/metadata",
       "/api/v1/status/tsdb")
-    def fedUtf8(port: Int): String = client.send(
-      HttpRequest.newBuilder(URI.create(
-        s"http://127.0.0.1:$port/federate?match[]=${enc("{__name__=~\".*\"}")}"))
-        .header("Accept", "text/plain;version=0.0.4;escaping=allow-utf-8")
-        .build(),
-      HttpResponse.BodyHandlers.ofString()).body()
     try {
-      val lp = landedSrv.getAddress.getPort
-      // serve EVERYTHING from the landed server first...
-      val landedBodies = paths.map { p =>
-        val (c, b) = get(lp, p)
+      val port = srv.getAddress.getPort
+      paths.foreach { p =>
+        val (c, b) = get(port, p)
         assert(c === 200, s"$p -> $b")
-        p -> b
       }
-      val landedUtf8 = fedUtf8(lp)
-      // ...full precision live on the wire...
-      assert(landedUtf8.contains(" 3.5E-7 "))
-      assert(landedUtf8.contains(" 0.3333333333333333 "))
-      assert(landedUtf8.contains("{\"app_dot.name\","))
-      // ...and the driver-held registry was NEVER built: the head table
-      // stayed a landed relation end to end
-      assert(graft.promql.PromRegistry.memoSize === 0,
-        "landed serving must not build the driver-held registry")
-      // honest cost pin: a WARM landed federate is a Spark query over
-      // the checkpoint relation — jobs > 0 (driver mode's fold is 0)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        org.apache.spark.graft.TestBus.drain(spark.sparkContext)
-        jobs.set(0)
-        assert(get(lp, paths.head)._1 === 200)
-        org.apache.spark.graft.TestBus.drain(spark.sparkContext)
-        assert(jobs.get() > 0,
-          "landed federate must run as a Spark query over the relation")
-      } finally spark.sparkContext.removeSparkListener(l)
-      // the DRIVER-mode server over the same landing: every surface
-      // byte-identical
-      val drvSrv = PromQlHttp.startLandingServer(spark, r)
-      try {
-        val dp = drvSrv.getAddress.getPort
-        landedBodies.foreach { case (p, lb) =>
-          val (c, db) = get(dp, p)
-          assert(c === 200, p)
-          assert(lb === db, p)
-        }
-        assert(fedUtf8(dp) === landedUtf8)
-        // an append: the landed checkpoint advances SPARK-side (merge of
-        // the checkpoint relation with the delta heads) and both modes
-        // move in lockstep
-        PromQlVersioned.land(Seq(
-          ("app", "up", Map("z" -> "x,y=q\\", "host" -> "a\nb"),
-            tMax + 50L, "a3", 2.0e-7))
-          .toDF("component", "name", "labels", "timestamp", "id", "value"), r)
-        val fed = s"/federate?match[]=${enc("up")}"
-        val (cl2, lb2) = get(lp, fed)
-        val (cd2, db2) = get(dp, fed)
-        assert(cl2 === 200 && cd2 === 200)
-        assert(lb2.contains(" 2.0E-7 "), lb2)
-        assert(lb2 === db2)
-        // the landed checkpoint sits at the landing's newest version
-        val cr = graft.promql.PromRegistry.ckptRoot(r)
-        val props = Versioned.markerProps(cr, Versioned.latestVersion(cr))
-        assert(props("ckpt.sourceVersion").toLong === Versioned.latestVersion(r))
-      } finally drvSrv.stop(0)
-    } finally landedSrv.stop(0)
+      val utf8 = client.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/federate?match[]=${enc("{__name__=~\".*\"}")}"))
+          .header("Accept", "text/plain;version=0.0.4;escaping=allow-utf-8")
+          .build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+      // full precision on the wire, and the quoted UTF-8 name
+      assert(utf8.contains(" 3.5E-7 "))
+      assert(utf8.contains(" 0.3333333333333333 "))
+      assert(utf8.contains("{\"app_dot.name\","))
+      // an append shows up in the next /federate poll
+      PromQlVersioned.land(Seq(
+        ("app", "up", Map("z" -> "x,y=q\\", "host" -> "a\nb"),
+          tMax + 50L, "a3", 2.0e-7))
+        .toDF("component", "name", "labels", "timestamp", "id", "value"), r)
+      val (c2, b2) = get(port, s"/federate?match[]=${enc("up")}")
+      assert(c2 === 200)
+      assert(b2.contains(" 2.0E-7 "), b2)
+    } finally srv.stop(0)
   }
 }

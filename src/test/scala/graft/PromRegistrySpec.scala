@@ -570,13 +570,10 @@ class PromRegistrySpec extends SparkSuite {
       "a foreign-key-format checkpoint must not seed the restart")
   }
 
-  test("the landed-registry swap is mechanical: /federate serves straight " +
-      "from the checkpoint RELATION — no driver map — byte-identically") {
-    // the documented cardinality-beyond-the-driver path: the m60
-    // checkpoint IS a landed head table, so if series cardinality ever
-    // outgrows the driver, serving switches to the landed relation by
-    // construction — this pins that the switch is a column rename, not
-    // a redesign (r15 verdict Next #6)
+  test("the checkpoint relation holds the registry's heads: the Spark " +
+      "/federate render over it equals the driver render") {
+    // the checkpoint is a landed head table; rendering it through the
+    // m6 Spark path must give the driver fold's body byte for byte
     PromRegistry.reset()
     val root = Files.createTempDirectory("graft-regswap").toFile.getAbsolutePath
     PromQlVersioned.land(mk(Seq(

@@ -46,11 +46,17 @@ class StreamingSpec extends SparkSuite {
   test("streaming gauge state keeps latest value per series across batches") {
     val dir = Files.createTempDirectory("graft-stream").toFile
     val chk = Files.createTempDirectory("graft-chk").toFile
+    // a timestamp tie between ids "\uFFFF" and "\uD83D\uDE00" (JSON
+    // escapes): UTF-16 order picks the first, UTF-8 byte order (the batch
+    // max_by_ts_id) the second
+    val bs = "\\"
     Files.write(dir.toPath.resolve("b1.json"),
       Seq(
         metricJson("1", "bytes_total", 1000, "u1", 10.0),
         metricJson("2", "bytes_total", 2000, "u1", 20.0),
         metricJson("3", "bytes_total", 1500, "u2", 15.0),
+        metricJson(s"${bs}uFFFF", "bytes_total", 100, "tie", 1.0),
+        metricJson(s"${bs}uD83D${bs}uDE00", "bytes_total", 100, "tie", 2.0),
         "not json at all").mkString("\n").getBytes)
 
     val metrics = FirehoseStream.fromJsonFiles(spark, dir.getAbsolutePath)
@@ -64,7 +70,11 @@ class StreamingSpec extends SparkSuite {
       val r1 = spark.table("gauges_t")
         .groupBy("series").agg(max_by(col("last_value"), col("last_ts")).as("v"))
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      assert(r1 === Map("user=u1" -> 20.0, "user=u2" -> 15.0))
+      assert(r1 === Map("user=u1" -> 20.0, "user=u2" -> 15.0, "user=tie" -> 2.0))
+      val batch = graft.operators.Firehose.gaugeLatest(
+          graft.sources.MetricJson.readJsonLines(spark, dir.getAbsolutePath))
+        .collect().map(r => r.getAs[String]("series") -> r.getAs[Double]("last_value")).toMap
+      assert(r1 === batch)
 
       // second micro-batch: newer sample for u1 wins, older one is ignored
       Files.write(dir.toPath.resolve("b2.json"),
