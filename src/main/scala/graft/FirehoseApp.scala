@@ -24,6 +24,10 @@ import graft.streaming.{FirehoseStream, Prometheus}
   */
 object FirehoseApp {
 
+  // local[N] cores of every session main() starts; lazy, so a malformed
+  // value fails only the modes that start one
+  private lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+
   final case class Running(
       query: StreamingQuery,
       registry: Option[Prometheus.Registry],
@@ -353,8 +357,7 @@ object FirehoseApp {
       val fn = SparkEntry.queries.getOrElse(name,
         throw new IllegalArgumentException(
           s"unknown query $name (--list-queries shows the catalog)"))
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-query")
+      val spark = Sessions.local(cpus, "graft-query")
       try {
         fn(spark, cfg.getOrElse("app.query.sfdir", "/root/testdata/sf0.001"))
           .show(cfg.getInt("app.query.rows", 20), truncate = false)
@@ -363,8 +366,7 @@ object FirehoseApp {
     }
     // ad-hoc PromQL: the text front-end against the event-derived stream
     cfg.get("app.promql").foreach { query =>
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-promql")
+      val spark = Sessions.local(cpus, "graft-promql")
       try {
         val metrics = graft.operators.Firehose.metricsFromEvents(
           spark, cfg.getOrElse("app.query.sfdir", "/root/testdata/sf0.001"))
@@ -400,8 +402,7 @@ object FirehoseApp {
     // recording rules: evaluate a rule file against the event stream
     cfg.get("app.rules").foreach { file =>
       val text = new String(java.nio.file.Files.readAllBytes(Paths.get(file)))
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-rules")
+      val spark = Sessions.local(cpus, "graft-rules")
       try {
         val metrics = graft.operators.Firehose.metricsFromEvents(
           spark, cfg.getOrElse("app.query.sfdir", "/root/testdata/sf0.001"))
@@ -424,8 +425,7 @@ object FirehoseApp {
     cfg.get("app.table").foreach { cmd =>
       val root = cfg.get("app.table.root").getOrElse(
         throw new IllegalArgumentException("--table needs a table root"))
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-table")
+      val spark = Sessions.local(cpus, "graft-table")
       try tableCommand(spark, cmd, root, cfg.get("app.table.n").map(_.toInt))
       finally spark.stop()
       return
@@ -435,8 +435,7 @@ object FirehoseApp {
     cfg.get("app.record").foreach { rule =>
       val source = cfg.get("app.record.source").get
       val view = cfg.get("app.record.view").get
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-record")
+      val spark = Sessions.local(cpus, "graft-record")
       try {
         val v = graft.promql.PromQlRecord.create(spark, rule, source, view)
         println(s"[graft] recorded '$rule' as incremental view $view (v$v)")
@@ -462,8 +461,7 @@ object FirehoseApp {
       val interval = cfg.getInt("app.scrape.interval", 15000).toLong
       val ticks0 = cfg.getInt("app.scrape.ticks", 0)
       val ticks = if (ticks0 <= 0) Int.MaxValue else ticks0
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-scrape")
+      val spark = Sessions.local(cpus, "graft-scrape")
       // progress rides the onScrape hook — a forever loop never returns,
       // so a post-hoc foreach over the result would print nothing
       try graft.promql.PromScraper.run(spark, url, root,
@@ -476,8 +474,7 @@ object FirehoseApp {
       return
     }
     cfg.get("app.serve").foreach { root =>
-      val spark = Sessions.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-serve")
+      val spark = Sessions.local(cpus, "graft-serve")
       // `--serve-rules <file>` arms /api/v1/rules + /api/v1/alerts
       val rules = cfg.get("app.serve.rules").map(p =>
         new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
@@ -528,7 +525,7 @@ object FirehoseApp {
     cfg.entries.toSeq.sortBy(_._1).foreach { case (k, v) =>
       println(f"[graft]   $k%-40s = $v")
     }
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-firehose")
+    val spark = Sessions.local(cpus, "graft-firehose")
     val chk = java.nio.file.Files.createTempDirectory("graft-app-chk").toString
     val running = start(spark, cfg, chk)
     if (cfg.getBoolean("app.once", default = false)) {

@@ -4853,11 +4853,6 @@ object SparkEntry {
       |  FROM m WHERE rn = 1)
       |""".stripMargin
 
-  /** Per-series windowed counter-increase CTE (the m9 semantics: positive
-    * deltas summed per tumbling hour, resets clamped), shared by the m9
-    * oracle and the m22 for-duration alert oracle; ends with
-    * `win(component, name, series, win_start, increase, n_samples)`.
-    */
   /** m49 and m50 share ONE oracle text by construction: m50 answers the
     * SAME instant query through the pruned landed read, and pruning must
     * never change a row — the byte-identity is the point (review catch:
@@ -4889,6 +4884,11 @@ object SparkEntry {
         |  CAST(sum(CAST(inc AS DECIMAL(18,6))) AS DOUBLE) AS value
         |FROM i GROUP BY component, series""".stripMargin
 
+  /** Per-series windowed counter-increase CTE (the m9 semantics: positive
+    * deltas summed per tumbling hour, resets clamped), shared by the m9
+    * oracle and the m22 for-duration alert oracle; ends with
+    * `win(component, name, series, win_start, increase, n_samples)`.
+    */
   private def IncreaseCte(widthSec: Long): String =
     s"""WITH m AS (
       |  SELECT 'app' AS component, event_type || '_total' AS name,
@@ -5044,9 +5044,6 @@ object SparkEntry {
   private def markerSql(lang: String): String =
     s"CAST(len(list_filter(ws, x -> list_contains(${markerLists(lang)}, x))) AS BIGINT)"
 
-  /** Explicit f64 cosine in DuckDB, sequential accumulation — bit-identical
-    * to [[graft.functions.Kernels.cosine]].
-    */
   /** Dot product of two already-quantized DOUBLE list columns (s8 oracle):
     * the plain sum-fold mirror of the Spark side's `aggregate(zip_with)` —
     * every term and partial sum is an exact integer, so the left-to-right
@@ -5056,6 +5053,9 @@ object SparkEntry {
     s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len($x)), " +
       s"i -> $x[i] * $y[i])), (acc, v) -> acc + v)"
 
+  /** Explicit f64 cosine in DuckDB, sequential accumulation — bit-identical
+    * to [[graft.functions.Kernels.cosine]].
+    */
   private def cosineSql(a: String, b: String): String = {
     def sumProd(x: String, y: String): String =
       s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len($a)), " +

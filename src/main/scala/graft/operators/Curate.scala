@@ -184,21 +184,6 @@ object Curate {
       .select(col(groupCol), col("doc_id"), col("n_words"), col("cum_tokens"), col("budget"))
   }
 
-  /** Deterministic stratified train/val/test split — every evaluation
-    * pipeline's first step. Within each stratum (`groupCol`) documents are
-    * ranked by the portable hash priority (so membership is reproducible
-    * across engines, runs and partitionings — re-running the corpus build
-    * never migrates a doc between splits unless the stratum itself grows)
-    * and assigned by rank position: the first `ceil(trainFrac·n)` are
-    * train, the next `ceil(valFrac·n)` val, the rest test. Rank-based
-    * assignment makes the split proportions EXACT per stratum, unlike
-    * bucket-mod hashing which is only stratified in expectation.
-    *
-    * Shape at 100 TB: one shuffle by stratum; the rank and the stratum
-    * count are two window functions over the same partitioning (one
-    * exchange). Strata are provenance buckets (source, shard) — no single
-    * stratum is corpus-sized.
-    */
   /** Epoch-based mixture upsampling — the repeat-factor step of a training
     * mix: each source is taken for a (possibly fractional) number of
     * epochs, so every document is emitted `floor(e)` times plus one more
@@ -230,6 +215,21 @@ object Curate {
       .withColumn("copy_idx", col("copy_idx").cast("long"))
   }
 
+  /** Deterministic stratified train/val/test split — every evaluation
+    * pipeline's first step. Within each stratum (`groupCol`) documents are
+    * ranked by the portable hash priority (so membership is reproducible
+    * across engines, runs and partitionings — re-running the corpus build
+    * never migrates a doc between splits unless the stratum itself grows)
+    * and assigned by rank position: the first `ceil(trainFrac·n)` are
+    * train, the next `ceil(valFrac·n)` val, the rest test. Rank-based
+    * assignment makes the split proportions EXACT per stratum, unlike
+    * bucket-mod hashing which is only stratified in expectation.
+    *
+    * Shape at 100 TB: one shuffle by stratum; the rank and the stratum
+    * count are two window functions over the same partitioning (one
+    * exchange). Strata are provenance buckets (source, shard) — no single
+    * stratum is corpus-sized.
+    */
   def stratifiedSplit(
       docs: DataFrame,
       groupCol: String = "source",
@@ -492,31 +492,6 @@ object Curate {
       .select("doc_id", "source", "text")
   }
 
-  /** The composed end-to-end corpus build (p8): every stage is an
-    * individually-verified operator, and THIS is the production shape —
-    * one pipeline from raw documents to packed training sequences:
-    *
-    *   1. [[qualityGate]] — heuristic quality floor + exact dedup;
-    *   2. [[Dedup.stripDuplicatePassages]] — C4-style exact-substring
-    *      strip over the gated corpus;
-    *   3. [[Dedup.semDedup]] — semantic dedup over the stripped corpus's
-    *      embeddings (docs without an embedding row cannot be compared
-    *      and leave the pipeline here, by design);
-    *   4. [[dsirBudgetSample]] — importance-ordered per-source token
-    *      budgets over the CLEANED text;
-    *   5. [[TextAnalysis.chunkWindows]] + [[packSequences]] — fixed
-    *      training sequences from the selected documents.
-    *
-    * Scan discipline at 100 TB: the gated and stripped corpora are landed
-    * once ([[graft.Tables.materializeStage]] — the between-stage landing a
-    * production pipeline makes durable via
-    * [[graft.sources.Versioned.appendCommit]]) because three-plus
-    * downstream consumers each re-derive them otherwise; the semantic
-    * survivor ID set is registry-narrow and memoized the same way. The
-    * raw documents parquet is scanned EXACTLY ONCE in the whole composed
-    * plan (PlanSpec-pinned) — each stage's own shuffles are bounded as
-    * documented on the stage operators.
-    */
   /** INCREMENTAL corpus curation (p10) — the continuous-ingest form of
     * the gate+dedup front of [[fullCurate]]: one BATCH of raw documents
     * is [[qualityGate]]d (heuristic floor + in-batch exact dedup), then
@@ -566,6 +541,31 @@ object Curate {
       gated.join(keep, Seq("_h"), "left_semi"), root, bloomCols = Seq("_h"))
   }
 
+  /** The composed end-to-end corpus build (p8): every stage is an
+    * individually-verified operator, and THIS is the production shape —
+    * one pipeline from raw documents to packed training sequences:
+    *
+    *   1. [[qualityGate]] — heuristic quality floor + exact dedup;
+    *   2. [[Dedup.stripDuplicatePassages]] — C4-style exact-substring
+    *      strip over the gated corpus;
+    *   3. [[Dedup.semDedup]] — semantic dedup over the stripped corpus's
+    *      embeddings (docs without an embedding row cannot be compared
+    *      and leave the pipeline here, by design);
+    *   4. [[dsirBudgetSample]] — importance-ordered per-source token
+    *      budgets over the CLEANED text;
+    *   5. [[TextAnalysis.chunkWindows]] + [[packSequences]] — fixed
+    *      training sequences from the selected documents.
+    *
+    * Scan discipline at 100 TB: the gated and stripped corpora are landed
+    * once ([[graft.Tables.materializeStage]] — the between-stage landing a
+    * production pipeline makes durable via
+    * [[graft.sources.Versioned.appendCommit]]) because three-plus
+    * downstream consumers each re-derive them otherwise; the semantic
+    * survivor ID set is registry-narrow and memoized the same way. The
+    * raw documents parquet is scanned EXACTLY ONCE in the whole composed
+    * plan (PlanSpec-pinned) — each stage's own shuffles are bounded as
+    * documented on the stage operators.
+    */
   def fullCurate(
       docs: DataFrame,
       embeddings: DataFrame,
@@ -618,27 +618,6 @@ object Curate {
       .orderBy(col("source"))
   }
 
-  /** DSIR-style importance resampling (Xie et al. 2023, "Data Selection
-    * for Language Models via Importance Resampling"): score every raw doc
-    * by how target-domain-like its hashed n-gram features are, keep the
-    * top `k`. Feature = word unigram hashed into `buckets` via the
-    * portable md5 hash; bucket importance = Laplace-smoothed
-    * log((ct+1)·(Dr+B) / ((cr+1)·(Dt+B))) with ct/cr the target/raw bucket
-    * counts and Dt/Dr the totals; doc score = sum over its tokens.
-    *
-    * Scale: the bucket model is `buckets` rows — materialized once
-    * (bucket-bounded) and broadcast; the corpus token stream is recomputed
-    * for the scoring pass rather than cached (the t8 two-scan shape: one
-    * model-build scan, one scoring scan, both map-side-combinable aggs).
-    *
-    * Portability: every count product is an exactly-representable double,
-    * so both engines take ln of IDENTICAL inputs; the per-bucket log is
-    * quantized to an exact integer via floor(x·1e6 + 0.5) (a ≤1-ulp
-    * cross-engine ln difference cannot move it off its grid cell, and the
-    * one common exact value — ln(1) = 0 — quantizes identically), and doc
-    * scores are exact LONG sums of those integers: order-independent,
-    * oracle-checkable bit-for-bit.
-    */
   /** The per-doc DSIR scoring relation `(doc_id, source, n_tokens,
     * dsir_score)` — the shared machinery behind [[dsirSample]] (top-k)
     * and [[dsirBudgetSample]] (budget-bounded selection).
@@ -672,6 +651,27 @@ object Curate {
         (sum(col("_v")).cast("double") / lit(1e6)).as("dsir_score"))
   }
 
+  /** DSIR-style importance resampling (Xie et al. 2023, "Data Selection
+    * for Language Models via Importance Resampling"): score every raw doc
+    * by how target-domain-like its hashed n-gram features are, keep the
+    * top `k`. Feature = word unigram hashed into `buckets` via the
+    * portable md5 hash; bucket importance = Laplace-smoothed
+    * log((ct+1)·(Dr+B) / ((cr+1)·(Dt+B))) with ct/cr the target/raw bucket
+    * counts and Dt/Dr the totals; doc score = sum over its tokens.
+    *
+    * Scale: the bucket model is `buckets` rows — materialized once
+    * (bucket-bounded) and broadcast; the corpus token stream is recomputed
+    * for the scoring pass rather than cached (the t8 two-scan shape: one
+    * model-build scan, one scoring scan, both map-side-combinable aggs).
+    *
+    * Portability: every count product is an exactly-representable double,
+    * so both engines take ln of IDENTICAL inputs; the per-bucket log is
+    * quantized to an exact integer via floor(x·1e6 + 0.5) (a ≤1-ulp
+    * cross-engine ln difference cannot move it off its grid cell, and the
+    * one common exact value — ln(1) = 0 — quantizes identically), and doc
+    * scores are exact LONG sums of those integers: order-independent,
+    * oracle-checkable bit-for-bit.
+    */
   def dsirSample(
       docs: DataFrame,
       targetSource: String = "src0",

@@ -260,14 +260,6 @@ object Dedup {
           .otherwise(array()))
     }
 
-  /** MinHash + banded LSH near-dup candidates, verified with exact Jaccard.
-    * Permutation hashes are 60-bit md5 prefixes of "i:shingle" — computable
-    * identically in DuckDB (`CAST('0x'||substr(md5(..),1,15) AS BIGINT)`).
-    *
-    * @param numHashes signature length k (perm hashes 0..k-1)
-    * @param bands     LSH bands (rows per band = k / bands);
-    *                  P(candidate) = 1-(1-j^r)^b
-    */
   /** (doc_id, band, sig) banded MinHash signatures — the LSH index
     * relation. The whole signature is one codegen'd row-local expression —
     * no k-fold row explosion, no per-(doc, perm) shuffle, no interpreted
@@ -300,6 +292,14 @@ object Dedup {
       .select(col("doc_id"), col("bk.band"), col("bk.sig"))
   }
 
+  /** MinHash + banded LSH near-dup candidates, verified with exact Jaccard.
+    * Permutation hashes are 60-bit md5 prefixes of "i:shingle" — computable
+    * identically in DuckDB (`CAST('0x'||substr(md5(..),1,15) AS BIGINT)`).
+    *
+    * @param numHashes signature length k (perm hashes 0..k-1)
+    * @param bands     LSH bands (rows per band = k / bands);
+    *                  P(candidate) = 1-(1-j^r)^b
+    */
   def minhashLsh(
       docs: DataFrame,
       threshold: Double = 0.5,
@@ -506,17 +506,6 @@ object Dedup {
       .filter(col("hamming") <= radius)
   }
 
-  /** Resolve near-dup pairs into duplicate clusters: connected components
-    * by iterative min-label propagation (Pregel-style — each round every
-    * node adopts the minimum label in its neighborhood; converges in
-    * O(component diameter) rounds, each one shuffle). Near-dup components
-    * are tiny in practice, so the loop is short; the iteration is
-    * driver-controlled but all data movement is distributed joins.
-    *
-    * @param pairs (doc_a, doc_b) near-duplicate pairs (any Dedup variant)
-    * @return (doc_id, cluster_rep) for every doc appearing in a pair;
-    *         cluster_rep = min doc_id of the component (the survivor)
-    */
   /** Driver-local union-find with path compression; survivor (cluster rep)
     * = min doc_id per component.
     */
@@ -539,6 +528,17 @@ object Dedup {
     parent.keys.toArray.sorted.map(d => d -> find(d))
   }
 
+  /** Resolve near-dup pairs into duplicate clusters: connected components
+    * by iterative min-label propagation (Pregel-style — each round every
+    * node adopts the minimum label in its neighborhood; converges in
+    * O(component diameter) rounds, each one shuffle). Near-dup components
+    * are tiny in practice, so the loop is short; the iteration is
+    * driver-controlled but all data movement is distributed joins.
+    *
+    * @param pairs (doc_a, doc_b) near-duplicate pairs (any Dedup variant)
+    * @return (doc_id, cluster_rep) for every doc appearing in a pair;
+    *         cluster_rep = min doc_id of the component (the survivor)
+    */
   def resolveClusters(pairs: DataFrame, maxIters: Int = 20,
       maxLocalEdges: Long = 5000000L): DataFrame = {
     val spark = pairs.sparkSession
@@ -719,20 +719,6 @@ object Dedup {
       .filter(col("cosine") >= threshold)
   }
 
-  /** Semantic dedup (the SemDeDup shape, Abbas et al. 2023 "SemDeDup:
-    * Data-efficient learning at web-scale through semantic
-    * deduplication"): embedding near-dup pairs → connected components →
-    * keep ONE vector per semantic cluster (the min-id representative),
-    * emitting the kept corpus with each survivor's merge weight (cluster
-    * size, 1 for untouched vectors) — the weight a loss-reweighting or
-    * epoch-sampling step consumes downstream.
-    *
-    * Pure composition: [[embeddingNearDup]] supplies the blocked pair
-    * relation (never all-pairs), [[resolveClusters]] the O(diameter)
-    * min-label propagation; the only new work — survivor filter and
-    * cluster sizes — runs on the pair-bounded cluster relation, so the
-    * corpus-scale cost is exactly d5's.
-    */
   /** Incremental semantic dedup — [[semDedup]]'s delta-ingest sibling (the
     * d10/d12 incrementality shape for the embedding family): admit only
     * delta vectors that are (a) not within `threshold` of ANY vector in
@@ -767,6 +753,20 @@ object Dedup {
       .orderBy(col("vec_id"))
   }
 
+  /** Semantic dedup (the SemDeDup shape, Abbas et al. 2023 "SemDeDup:
+    * Data-efficient learning at web-scale through semantic
+    * deduplication"): embedding near-dup pairs → connected components →
+    * keep ONE vector per semantic cluster (the min-id representative),
+    * emitting the kept corpus with each survivor's merge weight (cluster
+    * size, 1 for untouched vectors) — the weight a loss-reweighting or
+    * epoch-sampling step consumes downstream.
+    *
+    * Pure composition: [[embeddingNearDup]] supplies the blocked pair
+    * relation (never all-pairs), [[resolveClusters]] the O(diameter)
+    * min-label propagation; the only new work — survivor filter and
+    * cluster sizes — runs on the pair-bounded cluster relation, so the
+    * corpus-scale cost is exactly d5's.
+    */
   def semDedup(
       embeddings: DataFrame,
       blockCol: String = "label",

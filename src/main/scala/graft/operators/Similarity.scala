@@ -196,19 +196,6 @@ object Similarity {
     centers
   }
 
-  /** IVF (inverted-file) ANN: k-means partitions the corpus into `nlist`
-    * cells; probes score only vectors in their `nprobe` nearest cells.
-    * The coarse quantizer trains on a bounded reservoir sample
-    * ([[graft.Tables.reservoirSample]]: uniform per split, no count(), no
-    * shuffle, deterministic) collected to the driver — a documented
-    * registry-sized collect — and fits driver-locally ([[lloydFit]]).
-    * Both corpus cell assignment and probe cell probing are then pure
-    * codegen'd expressions against the LITERAL centroid matrix: one
-    * whole-stage-codegen pass over the corpus, no model UDF, no extra job.
-    * At 100 TB the cell column is what an ingest pipeline materializes as
-    * the index; the search itself is an equi-join on cell id, exactly like
-    * the LSH path but with data-adaptive buckets.
-    */
   /** A built IVF index: the literal centroid matrix (plan-time constant)
     * plus the cell-assigned corpus relation `(neighbor_id, cand_emb,
     * cell)`. The assignment IS the materializable artifact: an ingest
@@ -281,6 +268,19 @@ object Similarity {
       .filter(col("rnk") <= k)
   }
 
+  /** IVF (inverted-file) ANN: k-means partitions the corpus into `nlist`
+    * cells; probes score only vectors in their `nprobe` nearest cells.
+    * The coarse quantizer trains on a bounded reservoir sample
+    * ([[graft.Tables.reservoirSample]]: uniform per split, no count(), no
+    * shuffle, deterministic) collected to the driver — a documented
+    * registry-sized collect — and fits driver-locally ([[lloydFit]]).
+    * Both corpus cell assignment and probe cell probing are then pure
+    * codegen'd expressions against the LITERAL centroid matrix: one
+    * whole-stage-codegen pass over the corpus, no model UDF, no extra job.
+    * At 100 TB the cell column is what an ingest pipeline materializes as
+    * the index; the search itself is an equi-join on cell id, exactly like
+    * the LSH path but with data-adaptive buckets.
+    */
   def ivfTopK(
       embeddings: DataFrame,
       probes: DataFrame,
@@ -342,8 +342,7 @@ object Similarity {
     * @param m    number of subspaces (must divide the dimensionality)
     * @param ksub codebook entries per subspace (≤ 16 so codes pack into
     *             4 bits each; m·4 must fit in 64 bits)
-    */
-  /** @param metaCols metadata columns copied into the index rows (still
+    * @param metaCols metadata columns copied into the index rows (still
     *                  scalar-only) — the payload a FILTERED vector search
     *                  predicates on, pushed down into the landed index
     *                  scan exactly like any parquet filter
@@ -499,15 +498,6 @@ object Similarity {
       .filter(col("rnk") <= k)
   }
 
-  /** Hard-negative mining for contrastive training: for each probe, the k
-    * most-similar corpus vectors with a DIFFERENT label — the negatives
-    * that actually move a contrastive loss (random negatives are too easy;
-    * same-label items are positives). Same scale shape as
-    * [[bruteForceTopK]]: probes broadcast with their labels, the corpus
-    * never shuffles its vectors, one top-k window per probe. At 100 TB the
-    * candidate side drops in an LSH/IVF pre-filter exactly like [[lshTopK]]
-    * — the label predicate composes with any of them.
-    */
   /** Hybrid retrieval — lexical BM25 and vector cosine rankings fused by
     * reciprocal-rank fusion (Cormack et al., SIGIR 2009): each candidate
     * scores Σ 1/(k + rank) over the lists it appears in, with k = 60 the
@@ -552,6 +542,15 @@ object Similarity {
       .select(col("id"), col("rrf"), col("lex_rank"), col("vec_rank"))
   }
 
+  /** Hard-negative mining for contrastive training: for each probe, the k
+    * most-similar corpus vectors with a DIFFERENT label — the negatives
+    * that actually move a contrastive loss (random negatives are too easy;
+    * same-label items are positives). Same scale shape as
+    * [[bruteForceTopK]]: probes broadcast with their labels, the corpus
+    * never shuffles its vectors, one top-k window per probe. At 100 TB the
+    * candidate side drops in an LSH/IVF pre-filter exactly like [[lshTopK]]
+    * — the label predicate composes with any of them.
+    */
   def hardNegatives(
       embeddings: DataFrame,
       probes: DataFrame,

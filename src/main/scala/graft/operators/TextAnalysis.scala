@@ -508,14 +508,6 @@ object TextAnalysis {
       .orderBy(col("source"))
   }
 
-  /** Gopher-style quality-rule flags (the word-level subset of the Gopher
-    * paper's repetition/format filters — this corpus is single-line, so the
-    * per-line rules degenerate): word-count bounds, mean-word-length
-    * bounds, symbol-word ratio ('#' or '...'), alpha-word ratio, and a
-    * distinct-stopword floor, folded into one keep flag. Pure row-local
-    * array expressions; all ratios are exact-integer divisions evaluated
-    * in IEEE doubles so the oracle matches bit-for-bit.
-    */
   /** Quality-classifier calibration — the PR curve of the cheap heuristic
     * score ([[qualityScore]] `quality`) against the Gopher-rules gate
     * ([[gopherRules]] `keep`) as gold: for each threshold τ in {0, 1/steps,
@@ -576,6 +568,14 @@ object TextAnalysis {
       .withColumn("pass_rate", col("n_pass").cast("double") / col("n_docs").cast("double"))
   }
 
+  /** Gopher-style quality-rule flags (the word-level subset of the Gopher
+    * paper's repetition/format filters — this corpus is single-line, so the
+    * per-line rules degenerate): word-count bounds, mean-word-length
+    * bounds, symbol-word ratio ('#' or '...'), alpha-word ratio, and a
+    * distinct-stopword floor, folded into one keep flag. Pure row-local
+    * array expressions; all ratios are exact-integer divisions evaluated
+    * in IEEE doubles so the oracle matches bit-for-bit.
+    */
   def gopherRules(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
     val ws = tokens(col("text"))
     val stopArr = array(Stopwords.map(lit): _*)

@@ -2208,14 +2208,6 @@ object PromQlCompiler {
       } else v.withColumn("value", ap(arith(op, _, _)).cast("double"))
     }
 
-    /** Vector-vector arithmetic/comparison join — the per-window form of
-      * [[Firehose.vectorMatch]]: one equi-join on (component, window,
-      * match key), cardinality enforced by a codegen'd `raise_error`
-      * riding the join's own hash layout, registry-sized side broadcast
-      * under AQE. Result identity per PromQL: the match-label subset for
-      * one-to-one (name dropped), the many side's full labels for
-      * group_left/right; comparison filters preserve the left row intact.
-      */
     /** The match key of a binary op's operand row. `on()` with an EMPTY
       * label list is meaningful PromQL (everything matches one bucket) —
       * distinct from no modifier at all (full label set), which is why
@@ -2246,6 +2238,14 @@ object PromQlCompiler {
       }
     }
 
+    /** Vector-vector arithmetic/comparison join — the per-window form of
+      * [[Firehose.vectorMatch]]: one equi-join on (component, window,
+      * match key), cardinality enforced by a codegen'd `raise_error`
+      * riding the join's own hash layout, registry-sized side broadcast
+      * under AQE. Result identity per PromQL: the match-label subset for
+      * one-to-one (name dropped), the many side's full labels for
+      * group_left/right; comparison filters preserve the left row intact.
+      */
     private def vecBinary(
         op: String, l: DataFrame, r: DataFrame,
         vm: VectorMatching, boolMod: Boolean): DataFrame = {

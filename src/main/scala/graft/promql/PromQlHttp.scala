@@ -7,8 +7,10 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Versioned
 
 /** The compiler served over HTTP in the Prometheus wire format — the
   * deployment loop's last arc (scrape in via the DSv2 `prom` source,
@@ -41,7 +43,7 @@ import org.apache.spark.sql.functions._
   * The METADATA endpoints Grafana's autocomplete asks for are served
   * too: `/api/v1/labels` (label names), `/api/v1/label/<n>/values`,
   * and `/api/v1/series` — each over the optional `start`/`end` span
-  * (file-pruned on a landing server) filtered to the union of
+  * (file-pruned) filtered to the union of
   * repeatable `match[]` series selectors through the compiler's own
   * matcher predicate; the engine's `component` dimension and
   * `__name__` surface as labels. Results are registry-sized.
@@ -58,13 +60,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: the heavy lifting (selector pushdown, window
   * aggregation) runs in the compiled Spark plan; only the RESULT rows —
   * a dashboard response, series × points, the same driver-bounded
-  * posture as the scrape registries — are collected and rendered. The
-  * relation is a thunk, re-resolved per request, so a server over
-  * `Versioned.latest` always answers from the newest committed version.
+  * posture as the scrape registries — are collected and rendered. Every
+  * request resolves the landing's newest committed version, so the
+  * server answers appends as soon as they commit.
   *
   * Round 13 closes the loop's INGEST half and the rule surface:
   *
-  *  - `POST /api/v1/ingest?component=C[&time=T]` (landing server) —
+  *  - `POST /api/v1/ingest?component=C[&time=T]` —
   *    text-exposition body parsed by the same [[graft.operators
   *    .Firehose.PromGrammar]] the DSv2 `prom` source scans, landed as
   *    one retry-append commit with timestamp stats (so ingested batches
@@ -93,75 +95,37 @@ import org.apache.spark.sql.functions._
   * Prometheus's `limit` param (cap the SERIES count; a truncated
   * response carries the warning annotation).
   *
-  * The landing server memoizes PER COMMITTED VERSION (a committed
-  * version is immutable, so each entry is computed once per append,
-  * not once per request): `newestTs` (the default-time max(timestamp)
-  * aggregate — on a 100 TB landing the difference between a dashboard
-  * poll costing a scan and costing a map lookup), the `/api/v1/
-  * metadata` name universe, and the rules/alerts responses keyed by
-  * the resolved (version, time, step, lookback) evaluation grid — a
+  * The server memoizes PER COMMITTED VERSION (a committed version is
+  * immutable, so each entry is computed once per append, not once per
+  * request): the latest-gauge registry ([[PromRegistry]]), whose newest
+  * head is the default evaluation time and whose heads answer the
+  * `/api/v1/metadata` name universe — on a 100 TB landing the
+  * difference between a dashboard poll costing a scan and costing a map
+  * lookup — the TSDB-status body, and the rules/alerts responses keyed
+  * by the resolved (version, time, step, lookback) evaluation grid — a
   * polled alert list pays the two rule-fleet evaluateRange passes once
   * per append, not once per poll.
   */
 object PromQlHttp {
 
-  /** Start the query API server on `port` (0 = pick a free one); returns
-    * the bound server (stop with `.stop(0)`). `metrics` is resolved per
-    * request — pass `() => Versioned.latest(spark, root)` to serve a
-    * landing's newest committed version, or a constant relation for a
-    * fixed corpus.
-    */
-  def startQueryServer(
-      metrics: () => DataFrame, port: Int = 0,
-      rulesText: Option[String] = None): HttpServer = {
-    rulesText.foreach(PromQlRules.parse) // a bad rules file fails at START
-    serve(
-      (q, t, lookback, xp) =>
-        PromQl.compileInstantVector(q, metrics(), t, lookbackSec = lookback,
-          extrapolate = xp),
-      (q, start, end, step, lookback, grid, xp) =>
-        if (grid)
-          PromQl.compileSlidingVector(q, metrics(), step)
-            .filter(col("win_start") >= lit(start) && col("win_start") <= lit(end))
-        else PromQl.compileRangeVector(q, metrics(), start, end, step, lookback,
-          extrapolate = xp),
-      (startOpt, endOpt) => timeFiltered(metrics(), startOpt, endOpt),
-      () => newestTs(metrics()),
-      port,
-      Extras(
-        federate = Some((params, utf8) =>
-          federateBody(metrics(), params, utf8)),
-        rules = rulesText.map(rt => (params: Params, alertsOnly: Boolean) =>
-          rulesBody(rt, (_, _) => metrics(), params,
-            () => newestTs(metrics()), alertsOnly)),
-        configText = rulesText))
-  }
-
-  private def timeFiltered(
-      m: DataFrame, startOpt: Option[Long], endOpt: Option[Long]): DataFrame = {
-    val lo = startOpt.fold(lit(true))(s => col("timestamp") >= lit(s))
-    val hi = endOpt.fold(lit(true))(e => col("timestamp") <= lit(e))
-    m.filter(lo && hi)
-  }
-
-  /** The server over a [[graft.sources.Versioned]] LANDING with
-    * time-range FILE PRUNING on both endpoints ([[PromQlVersioned]]):
-    * each request's scan is cut to the query's own visibility — an
-    * instant query reads its lookback's files, a dashboard's
-    * `query_range` reads the requested span (for the prunable shapes;
-    * universe-/pin-/series-lag-dependent queries read fully, detected
-    * from the AST). This is the 100 TB deployment shape: the server
-    * stays up for months while the landing grows, and each request's
-    * cost tracks ITS window, not the corpus.
+  /** Start the query API server over the [[graft.sources.Versioned]]
+    * LANDING at `root` on `port` (0 = pick a free one); returns the
+    * bound server (stop with `.stop(0)`). Both query endpoints read with
+    * time-range FILE PRUNING ([[PromQlVersioned]]): each request's scan
+    * is cut to the query's own visibility — an instant query reads its
+    * lookback's files, a dashboard's `query_range` reads the requested
+    * span (for the prunable shapes; universe-/pin-/series-lag-dependent
+    * queries read fully, detected from the AST). This is the 100 TB
+    * deployment shape: the server stays up for months while the landing
+    * grows, and each request's cost tracks ITS window, not the corpus.
     */
   def startLandingServer(
-      spark: org.apache.spark.sql.SparkSession, root: String,
+      spark: SparkSession, root: String,
       port: Int = 0, rulesText: Option[String] = None): HttpServer = {
-    import graft.sources.Versioned
     rulesText.foreach(PromQlRules.parse) // a bad rules file fails at START
     // the landing's latest-gauge registry, maintained INCREMENTALLY per
     // committed version (PromRegistry: an append folds only its delta
-    // files into the driver-held head map) — the default-time newestTs
+    // files into the driver-held head map) — the default evaluation time
     // and the metadata name universe are pure driver-side folds over it
     // (zero Spark jobs once the version is absorbed), and /federate and
     // the tsdb page read its registry-sized local relation instead of
@@ -173,8 +137,24 @@ object PromQlHttp {
         "the landing is empty — pass an explicit 'time'")
       s.maxTs
     }
-    def cachedNames(): Seq[String] =
-      if (Versioned.latestVersion(root) < 0) Nil else registry().names
+    // a metadata span bounded on either side prunes files exactly like a
+    // query — the dominant Grafana pattern (label autocomplete scoped to
+    // the dashboard's time range); a missing bound is ±Double.MaxValue,
+    // and prunedRead applies the residual row filter itself. None = a
+    // time-UNBOUNDED probe (Grafana's global label autocomplete, fired
+    // per keystroke), which folds over the registry's head map instead:
+    // a label set rides its series identity and every series ever seen
+    // keeps a head, so distinct labels/values/series over the heads
+    // equal the corpus's — zero landed files and zero jobs per probe
+    def boundedSpan(params: Params): Option[DataFrame] = {
+      val lo = params.get("start").map(parseTime)
+      val hi = params.get("end").map(parseTime)
+      if (lo.isEmpty && hi.isEmpty) None
+      else Some(Versioned.prunedRead(
+        spark, root, Versioned.latestVersion(root),
+        Seq(("timestamp", lo.fold(-Double.MaxValue)(_.toDouble),
+          hi.fold(Double.MaxValue)(_.toDouble)))))
+    }
     // the TSDB-status cardinality page: computed over the registry's
     // local relation, rendered body memoized per committed version.
     // Computed OUTSIDE the map — a Spark job inside computeIfAbsent
@@ -204,144 +184,33 @@ object PromQlHttp {
     // memo (immutable content — clearing always safe).
     val rulesCache = new java.util.concurrent.ConcurrentHashMap[
       (Long, Long, Long, Long, Boolean), String]()
-    serve(
-      (q, t, lookback, xp) =>
-        // bare-selector instant queries answer from the registry (zero
-        // landed files; byte-identity spec-pinned); everything else
-        // takes the pruned landed compile
-        PromRegistry.instantFastPath(spark, root, q, t, lookback).getOrElse(
-          PromQlVersioned.compileInstantVector(spark, root, q, t,
-            lookbackSec = lookback, extrapolate = xp)),
-      (q, start, end, step, lookback, grid, xp) =>
-        if (grid)
-          PromQlVersioned.compileGridRangeVector(spark, root, q, start, end, step)
-        else PromQlVersioned.compileRangeVector(
-          spark, root, q, start, end, step, lookbackSec = lookback,
-          extrapolate = xp),
-      (startOpt, endOpt) => (startOpt, endOpt) match {
-        // a bounded metadata span prunes files exactly like a query —
-        // the dominant Grafana pattern (label autocomplete scoped to
-        // the dashboard's time range)
-        case (Some(s), Some(e)) => Versioned.prunedRead(
-          spark, root, Versioned.latestVersion(root),
-          Seq(("timestamp", s.toDouble, e.toDouble)))
-        // a time-UNBOUNDED probe (Grafana's global label autocomplete,
-        // fired per keystroke) answers from the registry: a label set
-        // rides its series identity and every series ever seen keeps a
-        // head, so distinct labels/values/series over the registry's
-        // local frame equal the corpus's — zero landed files per probe
-        case (None, None) =>
-          PromRegistry.metricsFrame(spark, PromRegistry.current(spark, root))
-        // half-bounded spans prune one-sidedly (files wholly outside
-        // the bound never list; prunedRead applies the residual row
-        // filter itself, like the both-bounds case)
-        case (Some(s), None) => Versioned.prunedRead(
-          spark, root, Versioned.latestVersion(root),
-          Seq(("timestamp", s.toDouble, Double.MaxValue)))
-        case (None, Some(e)) => Versioned.prunedRead(
-          spark, root, Versioned.latestVersion(root),
-          Seq(("timestamp", -Double.MaxValue, e.toDouble)))
-      },
-      () => newestOf(registry()),
-      port,
-      Extras(
-        ingest = Some((params, body) => ingestBody(spark, root, params, body)),
-        federate = Some((params, utf8) =>
-          // the registry IS the latest-gauge relation — the body renders
-          // ENTIRELY driver-side from the head map (zero landed files,
-          // zero Spark jobs per poll; byte-identity with the m6 render
-          // spec-pinned); utf8 = the client's escaping negotiation
-          PromRegistry.federateBody(registry(), params.matches, utf8)),
-        metadataNames = Some(() => cachedNames()),
-        tsdbStats = Some(() => cachedTsdb()),
-        // time-unbounded metadata probes (Grafana's per-keystroke global
-        // autocomplete) fold over the registry's head map — zero jobs
-        metaFold = Some(MetaFold(
-          ms => PromRegistry.labelKeys(registry(), ms),
-          (l, ms) => PromRegistry.labelValues(registry(), l, ms),
-          ms => PromRegistry.seriesTriples(registry(), ms))),
-        configText = rulesText,
-        rules = rulesText.map(rt => (params: Params, alertsOnly: Boolean) => {
-          // pin the registry's version ONCE and thread it through
-          // everything the cached body reads: an append racing the
-          // request must not cache newer (or internally mixed) data
-          // under this key; version and newest-sample default come from
-          // one registry State
-          val reg = registry()
-          val v = reg.version
-          // resolve the grid BEFORE keying, so an omitted `time` and an
-          // explicit time equal to the newest sample share one entry
-          // (the newest-sample default reads the PINNED registry too)
-          val end = params.get("time").map(parseTime).getOrElse(newestOf(reg))
-          val step = params.get("step").map(parseDuration).getOrElse(60L)
-          val lookback =
-            params.get("lookback").map(parseDuration).getOrElse(300L)
-          val key = (v, end, step, lookback, alertsOnly)
-          // compute outside the map: the two evaluateRange passes are
-          // multi-second Spark jobs; under computeIfAbsent they would
-          // hold the bin lock against unrelated keys (review catch)
-          val hit = rulesCache.get(key)
-          if (hit != null) hit
-          else {
-            val body = rulesBody(rt,
-              (s, e) => PromQlVersioned.ruleSpanMetrics(spark, root,
-                PromQlRules.parse(rt).map {
-                  case r: PromQlRules.Rule => r.expr
-                  case a: PromQlRules.Alert => a.expr
-                }, s, e, lookback, version = Some(v)),
-              params, () => end, alertsOnly)
-            if (rulesCache.size > 256) rulesCache.clear()
-            rulesCache.putIfAbsent(key, body)
-            body
-          }
-        })))
-  }
-
-  /** Optional per-server surfaces beyond the query/metadata endpoints:
-    * `ingest` (landing servers only — POST text exposition), `federate`
-    * (text-exposition body of the matched latest-gauge registry), and
-    * `rules` ((params, alertsOnly) → the /api/v1/rules or /alerts JSON,
-    * present when the server was given a rules file).
-    */
-  private final case class Extras(
-      ingest: Option[(Params, String) => String] = None,
-      // (params, utf8Negotiated) — utf8Negotiated is true when the
-      // client's Accept header carries `escaping=allow-utf-8`
-      // (Prometheus 3.x negotiation): non-classic names then render in
-      // the quoted form; a classic client gets underscore-mangled
-      // names, exactly Prometheus's own downgrade
-      federate: Option[(Params, Boolean) => String] = None,
-      rules: Option[(Params, Boolean) => String] = None,
-      // /api/v1/metadata's name universe — the landing server supplies a
-      // per-version memo so the distinct-name scan runs once per append,
-      // not once per datasource probe
-      metadataNames: Option[() => Seq[String]] = None,
-      // /api/v1/status/tsdb — the landing server memoizes the cardinality
-      // aggregates per committed version (the TSDB-status page is a
-      // corpus-wide scan; a probe must not pay it per click)
-      tsdbStats: Option[() => String] = None,
-      // /api/v1/status/config — the server's effective rule file (the
-      // honest analogue of Prometheus's loaded YAML); empty without one
-      configText: Option[String] = None,
-      // TIME-UNBOUNDED metadata probes folded driver-side (the landing
-      // server's registry): label keys / label values / series triples
-      // of the match[]-selected heads — zero Spark jobs per keystroke
-      // probe; bounded spans keep the pruned DataFrame path
-      metaFold: Option[MetaFold] = None)
-
-  /** Driver-side answers for the time-unbounded metadata probes. */
-  private[promql] final case class MetaFold(
-      labelKeys: Seq[String] => Set[String],
-      labelValues: (String, Seq[String]) => Seq[String],
-      series: Seq[String] => Seq[(String, String, Map[String, String])])
-
-  private def serve(
-      instantFn: (String, Long, Long, Boolean) => DataFrame,
-      rangeFn: (String, Long, Long, Long, Long, Boolean, Boolean) => DataFrame,
-      spanFn: (Option[Long], Option[Long]) => DataFrame,
-      defaultTime: () => Long,
-      port: Int,
-      extras: Extras = Extras()): HttpServer = {
+    def cachedRules(rt: String, params: Params, alertsOnly: Boolean): String = {
+      // pin the registry's version ONCE and thread it through
+      // everything the cached body reads: an append racing the
+      // request must not cache newer (or internally mixed) data
+      // under this key; version and newest-sample default come from
+      // one registry State
+      val reg = registry()
+      // resolve the grid BEFORE keying, so an omitted `time` and an
+      // explicit time equal to the newest sample share one entry
+      // (the newest-sample default reads the PINNED registry too)
+      val end = params.get("time").map(parseTime).getOrElse(newestOf(reg))
+      val step = params.get("step").map(parseDuration).getOrElse(60L)
+      val lookback = params.get("lookback").map(parseDuration).getOrElse(300L)
+      val key = (reg.version, end, step, lookback, alertsOnly)
+      // compute outside the map: the two evaluateRange passes are
+      // multi-second Spark jobs; under computeIfAbsent they would
+      // hold the bin lock against unrelated keys (review catch)
+      val hit = rulesCache.get(key)
+      if (hit != null) hit
+      else {
+        val body = rulesBody(spark, root, reg.version, rt, end, step,
+          lookback, alertsOnly)
+        if (rulesCache.size > 256) rulesCache.clear()
+        rulesCache.putIfAbsent(key, body)
+        body
+      }
+    }
     val server = graft.HttpServers.create(port)
     // handlers run Spark ACTIONS (unlike the scrape endpoint's in-memory
     // renders) — without an executor every request serializes on the one
@@ -358,9 +227,15 @@ object PromQlHttp {
     server.createContext("/api/v1/query", (ex: HttpExchange) =>
       respond(ex) { params =>
         val q = required(params, "query")
-        val t = params.get("time").map(parseTime).getOrElse(defaultTime())
+        val t = params.get("time").map(parseTime).getOrElse(newestOf(registry()))
         val lookback = params.get("lookback").map(parseDuration).getOrElse(300L)
-        val rows = instantFn(q, t, lookback, parseExtrapolate(params))
+        val xp = parseExtrapolate(params)
+        // bare-selector instant queries answer from the registry (zero
+        // landed files; byte-identity spec-pinned); everything else
+        // takes the pruned landed compile
+        val rows = PromRegistry.instantFastPath(spark, root, q, t, lookback)
+          .getOrElse(PromQlVersioned.compileInstantVector(spark, root, q, t,
+            lookbackSec = lookback, extrapolate = xp))
           .select(col("component"), col("name"), col("labels"),
             col("win_start"), col("value"))
           .collect()
@@ -397,8 +272,13 @@ object PromQlHttp {
           case Some(other) => throw new IllegalArgumentException(
             s"unknown mode '$other' (expected 'prometheus' or 'grid')")
         }
-        val rows = rangeFn(q, start, end, step, lookback, grid,
-          parseExtrapolate(params))
+        val xp = parseExtrapolate(params)
+        val rows = (
+          if (grid)
+            PromQlVersioned.compileGridRangeVector(spark, root, q, start, end, step)
+          else PromQlVersioned.compileRangeVector(
+            spark, root, q, start, end, step, lookbackSec = lookback,
+            extrapolate = xp))
           .select(col("component"), col("name"), col("labels"),
             col("win_start"), col("value"))
           .collect()
@@ -428,15 +308,10 @@ object PromQlHttp {
     // never corpus-sized.
     server.createContext("/api/v1/labels", (ex: HttpExchange) =>
       respond(ex) { params =>
-        val startOpt = params.get("start").map(parseTime)
-        val endOpt = params.get("end").map(parseTime)
-        // time-unbounded probes fold driver-side when the server carries
-        // a registry (zero jobs); bounded spans keep the pruned read
-        val keys = extras.metaFold match {
-          case Some(f) if startOpt.isEmpty && endOpt.isEmpty =>
-            f.labelKeys(params.matches)
-          case _ =>
-            matched(spanFn(startOpt, endOpt), params.matches)
+        val keys = boundedSpan(params) match {
+          case None => PromRegistry.labelKeys(registry(), params.matches)
+          case Some(span) =>
+            matched(span, params.matches)
               .select(explode(map_keys(col("labels"))).as("l"))
               .distinct().collect().map(_.getString(0)).toSet
         }
@@ -452,13 +327,10 @@ object PromQlHttp {
           throw new IllegalArgumentException(
             "expected /api/v1/label/<name>/values")
         val label = URLDecoder.decode(parts(3), StandardCharsets.UTF_8)
-        val startOpt = params.get("start").map(parseTime)
-        val endOpt = params.get("end").map(parseTime)
-        val values = extras.metaFold match {
-          case Some(f) if startOpt.isEmpty && endOpt.isEmpty =>
-            f.labelValues(label, params.matches)
-          case _ =>
-            val m = matched(spanFn(startOpt, endOpt), params.matches)
+        val values = boundedSpan(params) match {
+          case None => PromRegistry.labelValues(registry(), label, params.matches)
+          case Some(span) =>
+            val m = matched(span, params.matches)
             val valueCol = label match {
               case "__name__" => col("name")
               case "component" => col("component")
@@ -473,15 +345,12 @@ object PromQlHttp {
       respond(ex) { params =>
         if (params.matches.isEmpty) throw new IllegalArgumentException(
           "missing required parameter 'match[]'")
-        val startOpt = params.get("start").map(parseTime)
-        val endOpt = params.get("end").map(parseTime)
-        val triples = extras.metaFold match {
-          case Some(f) if startOpt.isEmpty && endOpt.isEmpty =>
-            f.series(params.matches)
-          case _ =>
+        val triples = boundedSpan(params) match {
+          case None => PromRegistry.seriesTriples(registry(), params.matches)
+          case Some(span) =>
             // distinct SERIES — deduped on the rendered series key (a
             // map column cannot join Spark's set operations directly)
-            matched(spanFn(startOpt, endOpt), params.matches)
+            matched(span, params.matches)
               .withColumn("_sk",
                 graft.operators.Firehose.seriesKey(col("labels")))
               .dropDuplicates("component", "name", "_sk")
@@ -516,9 +385,8 @@ object PromQlHttp {
           "goVersion" -> "\"\""))))))
     server.createContext("/api/v1/metadata", (ex: HttpExchange) =>
       respond(ex) { params =>
-        val names = extras.metadataNames.map(_()).getOrElse(
-          spanFn(None, None).select(col("name")).distinct().collect()
-            .map(_.getString(0)).sorted.toSeq)
+        val names =
+          if (Versioned.latestVersion(root) < 0) Nil else registry().names
         // the same limit validation as every other endpoint: junk or
         // negative values are 400 bad_data, never silently ignored
         val (limited, _) = limitEntries(params, names)
@@ -548,10 +416,9 @@ object PromQlHttp {
           "web.enable-remote-write-receiver" -> "\"false\""))))))
     // the TSDB-status cardinality page (Grafana's "TSDB Status"):
     // head stats + the four top-10 cardinality lists, all registry-sized
-    // results computed in a handful of aggregate jobs
+    // results computed in a handful of aggregate jobs over the registry
     server.createContext("/api/v1/status/tsdb", (ex: HttpExchange) =>
-      respondWith(ex)(
-        extras.tsdbStats.map(_()).getOrElse(tsdbBody(spanFn(None, None)))))
+      respondWith(ex)(cachedTsdb()))
     // runtime info: real JVM values where Prometheus reports Go's (the
     // two fields a UI actually reads are startTime and retention)
     val started = java.time.Instant.now()
@@ -573,36 +440,43 @@ object PromQlHttp {
       respondWith(ex)(jsonObj(Seq(
         "status" -> "\"success\"",
         "data" -> jsonObj(Seq(
-          "yaml" -> s""""${esc(extras.configText.getOrElse(""))}""""))))))
+          "yaml" -> s""""${esc(rulesText.getOrElse(""))}""""))))))
     server.createContext("/-/healthy", (ex: HttpExchange) =>
       respondText(ex)("graft is Healthy.\n"))
     server.createContext("/-/ready", (ex: HttpExchange) =>
       respondText(ex)("graft is Ready.\n"))
-    extras.ingest.foreach { body =>
-      // the POST body here is the raw text exposition, NOT form params —
-      // request params come from the query string alone
-      server.createContext("/api/v1/ingest", (ex: HttpExchange) =>
-        respondWith(ex) {
-          if (ex.getRequestMethod != "POST")
-            throw new IllegalArgumentException("ingest requires POST")
-          val raw = new String(
-            ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          body(queryParamsOf(ex), raw)
-        })
-    }
-    extras.federate.foreach { body =>
-      server.createContext("/federate", (ex: HttpExchange) => {
-        val utf8 = Option(ex.getRequestHeaders.getFirst("Accept"))
-          .exists(_.toLowerCase(java.util.Locale.ROOT)
-            .contains("escaping=allow-utf-8"))
-        respondText(ex)(body(paramsOf(ex), utf8))
+    // the POST body here is the raw text exposition, NOT form params —
+    // request params come from the query string alone
+    server.createContext("/api/v1/ingest", (ex: HttpExchange) =>
+      respondWith(ex) {
+        if (ex.getRequestMethod != "POST")
+          throw new IllegalArgumentException("ingest requires POST")
+        val raw = new String(
+          ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        ingestBody(spark, root, queryParamsOf(ex), raw)
       })
-    }
-    extras.rules.foreach { body =>
+    server.createContext("/federate", (ex: HttpExchange) => {
+      // the client's escaping negotiation: an Accept header carrying
+      // `escaping=allow-utf-8` (Prometheus 3.x) gets non-classic names
+      // in the quoted form; a classic client gets underscore-mangled
+      // names, exactly Prometheus's own downgrade
+      val utf8 = Option(ex.getRequestHeaders.getFirst("Accept"))
+        .exists(_.toLowerCase(java.util.Locale.ROOT)
+          .contains("escaping=allow-utf-8"))
+      // the registry IS the latest-gauge relation — the body renders
+      // ENTIRELY driver-side from the head map (zero landed files, zero
+      // Spark jobs per poll; byte-identity with the m6 render
+      // spec-pinned)
+      respondText(ex) {
+        val params = paramsOf(ex)
+        PromRegistry.federateBody(registry(), params.matches, utf8)
+      }
+    })
+    rulesText.foreach { rt =>
       server.createContext("/api/v1/rules", (ex: HttpExchange) =>
-        respond(ex)(params => body(params, false)))
+        respond(ex)(params => cachedRules(rt, params, alertsOnly = false)))
       server.createContext("/api/v1/alerts", (ex: HttpExchange) =>
-        respond(ex)(params => body(params, true)))
+        respond(ex)(params => cachedRules(rt, params, alertsOnly = true)))
     }
     server.start()
     server
@@ -644,37 +518,6 @@ object PromQlHttp {
 
   // ──────────────────────── federate (scrape-out) ────────────────────────
 
-  /** The latest-gauge registry of the `match[]`-selected series as text
-    * exposition — Prometheus's `/federate`: `component_name{labels}
-    * value ts_millis`, one line per live series, scrape-able by a
-    * downstream Prometheus or this engine's own DSv2 `prom` source
-    * (round-trip spec-pinned). The render is the m6 operator
-    * ([[graft.operators.Firehose.promRender]]); only registry-sized
-    * result lines are collected.
-    */
-  private def federateBody(
-      metrics: DataFrame, params: Params, utf8: Boolean = true): String = {
-    import graft.operators.Firehose
-    if (params.matches.isEmpty) throw new IllegalArgumentException(
-      "missing required parameter 'match[]'")
-    // gauge aggregation on the cluster, line render through promRender's
-    // driver twin (spec-pinned byte-identical on the utf8 leg) so the
-    // escaping negotiation applies here exactly as on the registry path
-    val lines = Firehose
-      .gaugeLatestLabeled(matched(metrics, params.matches))
-      .select(col("component"), col("name"), col("labels"),
-        col("last_value"), col("last_ts"))
-      .collect()
-      .map { r =>
-        Firehose.renderLineStr(
-          r.getString(0), r.getString(1),
-          r.getMap[String, String](2).toMap.toSeq
-            .sortWith((x, y) => PromRegistry.utf8Gt(y._1, x._1)),
-          r.getDouble(3), r.getLong(4), utf8)
-      }.sorted
-    lines.mkString("", "\n", "\n")
-  }
-
   /** The SPARK-path `/federate` render over an already-latest gauge
     * relation — `match[]` filters on the label map, then the m6 render
     * (`utf8` = the client's escaping negotiation, promRender's classic
@@ -703,33 +546,16 @@ object PromQlHttp {
   /** `/api/v1/status/tsdb` body: head stats (series / label-pair counts,
     * min/max sample time in MILLIS — Prometheus's unit; chunkCount 0,
     * the engine has no chunk concept) plus the four top-10 cardinality
-    * lists, computed over the engine's labels map (`component` and
+    * lists, over a DISTINCT-SERIES relation `(name, _sk, labels)` — one
+    * row per (component, name, series) — with the time range supplied by
+    * the caller. Counts are over the engine's labels map (`component` and
     * `__name__` surface as query labels but are not label PAIRS here —
-    * the page exists to find expensive real labels). A handful of
-    * aggregate jobs, registry-sized results; the landing server
-    * memoizes the rendered body per committed version.
-    */
-  private def tsdbBody(m: DataFrame): String = {
-    import graft.operators.Firehose
-    val base = m.select(col("component"), col("name"),
-      Firehose.seriesKey(col("labels")).as("_sk"), col("labels"),
-      col("timestamp"))
-    val tr = base.agg(min(col("timestamp").cast("long")),
-      max(col("timestamp").cast("long"))).head()
-    val (minT, maxT) =
-      if (tr.isNullAt(0)) (0L, 0L) else (tr.getLong(0) * 1000L, tr.getLong(1) * 1000L)
-    tsdbBodyOf(base.dropDuplicates("component", "name", "_sk")
-      .select(col("name"), col("_sk"), col("labels")), minT, maxT)
-  }
-
-  /** [[tsdbBody]] over a DISTINCT-SERIES relation `(name, _sk, labels)`
-    * — one row per (component, name, series) — with the time range
-    * supplied by the caller. The landing server feeds the incremental
-    * registry's local frame here (every series that ever appeared keeps
-    * a head, and a series' label set is its identity, so the four
-    * cardinality lists over the registry equal the corpus's) — the
-    * page costs a handful of jobs over a registry-sized relation, never
-    * a landed-file scan.
+    * the page exists to find expensive real labels). The server feeds the
+    * incremental registry's local frame here (every series that ever
+    * appeared keeps a head, and a series' label set is its identity, so
+    * the four cardinality lists over the registry equal the corpus's) —
+    * the page costs a handful of jobs over a registry-sized relation,
+    * never a landed-file scan.
     */
   private def tsdbBodyOf(series: DataFrame, minT: Long, maxT: Long): String = {
     val numSeries = series.count()
@@ -800,30 +626,32 @@ object PromQlHttp {
     * come from the evaluation's label MAP (never re-split from the
     * rendered series key — values containing commas stay lossless),
     * with the rule's static labels merged over them (rule wins,
-    * Prometheus's merge) and its annotations verbatim.
+    * Prometheus's merge) and its annotations verbatim. The rule fleet's
+    * span is read from the landing at `version`, pruned to what the
+    * rule expressions can see.
     */
   private def rulesBody(
-      rulesText: String,
-      metricsFor: (Long, Long) => DataFrame,
-      params: Params,
-      defaultTime: () => Long,
+      spark: SparkSession, root: String, version: Long,
+      rulesText: String, end: Long, step: Long, lookback: Long,
       alertsOnly: Boolean): String = {
     val lines = PromQlRules.parse(rulesText)
     val alerts = lines.collect { case a: PromQlRules.Alert => a }
-    val end = params.get("time").map(parseTime).getOrElse(defaultTime())
-    val step = params.get("step").map(parseDuration).getOrElse(60L)
-    val lookback = params.get("lookback").map(parseDuration).getOrElse(300L)
     val maxFor = (0L +: alerts.map(a => a.forSec + a.keepFiringForSec)).max
     // the horizon holds every streak (and keep-firing tail) the end
     // point can complete, plus one step so a just-started breach has a
     // preceding point to differ
     val start = end - maxFor - step
+    lazy val metrics = PromQlVersioned.ruleSpanMetrics(spark, root,
+      lines.map {
+        case r: PromQlRules.Rule => r.expr
+        case a: PromQlRules.Alert => a.expr
+      }, start, end, lookback, version = Some(version))
     // fired rows per alert at every grid point (streaked + keep tail),
     // and the bare condition rows (for/keep stripped) for pending
     // detection + activeAt
     def evalAll(text: String): Map[String, DataFrame] =
-      PromQlRules.evaluateRangeLabeled(text, metricsFor(start, end), start,
-        end, step, lookback)
+      PromQlRules.evaluateRangeLabeled(
+        text, metrics, start, end, step, lookback)
     val fired =
       if (alerts.isEmpty) Map.empty[String, DataFrame] else evalAll(rulesText)
     val bare =
@@ -1013,17 +841,6 @@ object PromQlHttp {
   private def required(params: Params, name: String): String =
     params.get(name).getOrElse(
       throw new IllegalArgumentException(s"missing required parameter '$name'"))
-
-  /** The landed stream's newest sample timestamp — the instant
-    * endpoint's default evaluation time (one tiny aggregate action; a
-    * batch landing has no wall-clock "now").
-    */
-  private def newestTs(m: DataFrame): Long = {
-    val r = m.agg(max(col("timestamp").cast("long"))).head()
-    if (r.isNullAt(0)) throw new IllegalArgumentException(
-      "the metric relation is empty — pass an explicit 'time'")
-    r.getLong(0)
-  }
 
   /** Non-standard knob: `extrapolate=true` turns on Prometheus's
     * rate/increase boundary extrapolation (Go-exact); the default keeps

@@ -436,7 +436,7 @@ object PromRegistry {
     * `(component, name, labels, timestamp, id, value)`, one row per
     * live series, local (no scanned files in any plan over it).
     */
-  def metricsFrame(spark: SparkSession, state: State): DataFrame =
+  private def metricsFrame(spark: SparkSession, state: State): DataFrame =
     frame(spark, state).select(
       col("component"), col("name"), col("labels"),
       col("last_ts").as("timestamp"), col("id"),

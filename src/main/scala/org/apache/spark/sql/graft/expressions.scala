@@ -281,7 +281,6 @@ case class BpeCount(child: Expression, merges: Array[Array[String]])
     copy(child = newChild)
 }
 
-/** Column ↔ Expression bridge re-exported for graft's public function API. */
 /** Codegen'd Prometheus native-histogram bucket index
   * ([[graft.functions.Kernels.exp2Bucket]]): k with
   * v ∈ (base^(k-1), base^k], base = 2^(2^-schema), computed exactly from
@@ -363,6 +362,7 @@ case class EvalTime(value: Long) extends LeafExpression {
   }
 }
 
+/** Column ↔ Expression bridge re-exported for graft's public function API. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Firehose
@@ -105,7 +106,7 @@ class PromFuzzSpec extends SparkSuite {
     // kernel (the hot path), the regexp-expression spelling it replaced
     // (kept as the differential reference), and the Java-matcher scanner
     val viaKernel = run(Firehose.promParse)
-    val viaRegex = run(Firehose.promParseRegex)
+    val viaRegex = run(PromFuzzSpec.promParseRegex)
     assert(viaKernel === viaScanner)
     assert(viaRegex === viaScanner)
     // the generator must actually exercise both outcomes
@@ -242,5 +243,101 @@ class PromFuzzSpec extends SparkSuite {
           java.lang.Double.doubleToLongBits(v),
         s"line round-trip drift for $v")
     }
+  }
+}
+
+object PromFuzzSpec {
+
+  /** The regexp-expression spelling of [[Firehose.promParse]] — the
+    * DIFFERENTIAL REFERENCE the fuzz property compares the kernel against
+    * (three independent implementations of one grammar: this, the
+    * kernel, the DSv2 scanner).
+    */
+  def promParseRegex(lines: DataFrame): DataFrame = {
+    import Firehose.{PromGrammar, escapeSeriesPart}
+    // one anchored match: optional metric (absent for the Prometheus 3.x
+    // quoted-name form `{"my.metric",k="v"} 5`), optional {label block}
+    // (greedy `.*` so the block extends to the LAST '}' — quoted values
+    // may contain '}'), value token, optional timestamp token
+    val re = PromGrammar.LineRe
+    val pairRe = PromGrammar.PairRe
+    val bmRe = PromGrammar.BlockMetricRe
+    // the two regex passes of PromGrammar.unescapeLabelValue: newline
+    // escapes first, then the generic `\x` → x
+    def unesc(c: Column): Column =
+      regexp_replace(
+        regexp_replace(c, PromGrammar.NewlineEscRe, "$1\n"),
+        PromGrammar.AnyEscRe, "$1")
+    // validity under the plain grammar: the line matches, and its block
+    // tiles as pairs (classic form) or as quoted-metric-then-pairs
+    // (quoted-name form — exactly when the bare metric token is absent)
+    def lineValid(l: Column): Column = {
+      val mtok = regexp_extract(l, re, 1)
+      val block = regexp_extract(l, re, 3)
+      l.rlike(re) && (
+        (mtok =!= "" && block.rlike(PromGrammar.BlockRe)) ||
+        (mtok === "" && block.rlike(bmRe) &&
+          regexp_extract(block, bmRe, 2).rlike(PromGrammar.BlockRe)))
+    }
+    lines
+      .select(trim(col("line")).as("_l0"))
+      .filter(length(col("_l0")) > 0 && !col("_l0").startsWith("#"))
+      // OpenMetrics tolerance, the scanners' retry discipline as one
+      // codegen'd conditional: a line that does NOT already parse under
+      // the plain grammar sheds its exemplar tail; previously-valid
+      // lines are left byte-identical. Raw-line validity is computed
+      // ONCE here (`_v0` — ProjectExec's subexpression elimination
+      // shares it with the `_l` conditional); the keep/drop filter
+      // below reads the materialized boolean and only re-runs the line
+      // grammar on the RETRY branch (codegen `Or` short-circuits), so a
+      // valid line engages the LineRe family once, not twice
+      .select(
+        col("_l0"),
+        lineValid(col("_l0")).as("_v0"))
+      .select(
+        col("_v0"),
+        when(col("_v0"), col("_l0"))
+          .otherwise(regexp_replace(col("_l0"), PromGrammar.ExemplarTailRe, ""))
+          .as("_l"))
+      .filter(col("_v0") || lineValid(col("_l")))
+      .withColumn("_mtok", regexp_extract(col("_l"), re, 1))
+      .withColumn("_block", regexp_extract(col("_l"), re, 3))
+      // the pairs live in the whole block (classic) or after the quoted
+      // metric's comma (quoted-name form)
+      .withColumn("_pairsrc",
+        when(col("_mtok") =!= "", col("_block"))
+          .otherwise(regexp_extract(col("_block"), bmRe, 2)))
+      .withColumn("_ts_tok", regexp_extract(col("_l"), re, 6))
+      .withColumn("_val_tok", regexp_extract(col("_l"), re, 4))
+      // try_cast, not cast: a malformed token must become a dropped row,
+      // not an ANSI runtime error killing the scan. Accepts Spark's special
+      // floating-point literals (+Inf/-Inf/NaN, any case) — the scanner's
+      // PromGrammar.parseDoubleToken mirrors exactly this acceptance set.
+      .withColumn("value", expr("try_cast(_val_tok AS double)"))
+      .withColumn("ts_ms",
+        when(col("_ts_tok") === "", lit(null).cast("long"))
+          .otherwise(expr("try_cast(_ts_tok AS bigint)")))
+      // a present-but-unparseable value or timestamp token is a malformed
+      // line (skip), not a null field
+      .filter(col("value").isNotNull &&
+        !(col("_ts_tok") =!= "" && col("ts_ms").isNull))
+      .select(
+        when(col("_mtok") =!= "", col("_mtok"))
+          .otherwise(unesc(regexp_extract(col("_block"), bmRe, 1)))
+          .as("metric"),
+        array_join(
+          transform(
+            regexp_extract_all(col("_pairsrc"), lit(pairRe), lit(0)),
+            p => concat(
+              // classic key verbatim, quoted key unescaped; both
+              // series-escaped so the rendered key stays injective
+              escapeSeriesPart(
+                when(regexp_extract(p, pairRe, 1) =!= "",
+                  regexp_extract(p, pairRe, 1))
+                  .otherwise(unesc(regexp_extract(p, pairRe, 2)))),
+              lit("="),
+              escapeSeriesPart(unesc(regexp_extract(p, pairRe, 3))))),
+          ",").as("series"),
+        col("value"), col("ts_ms"))
   }
 }

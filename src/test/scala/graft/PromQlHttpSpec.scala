@@ -12,11 +12,13 @@ import graft.promql.{PromQl, PromQlHttp, PromQlVersioned}
 import graft.sources.Versioned
 
 /** The query API server ([[PromQlHttp]]): HTTP answers over a LANDED
-  * stream must equal the compiler called directly — instant
+  * stream, read through the server's file pruning, must equal the
+  * compiler called directly on the whole landing — instant
   * (`/api/v1/query` == `compileInstantVector`) and range
-  * (`/api/v1/query_range` == the step-grid `compileSlidingVector`
-  * filtered to `[start, end]`) — in the Prometheus JSON wire format,
-  * with Prometheus's error envelope for malformed expressions.
+  * (`/api/v1/query_range` == the point-grid `compileRangeVector`, the
+  * step-grid `compileSlidingVector` behind `mode=grid`) — in the
+  * Prometheus JSON wire format, with Prometheus's error envelope for
+  * malformed expressions.
   */
 class PromQlHttpSpec extends SparkSuite {
 
@@ -60,25 +62,48 @@ class PromQlHttpSpec extends SparkSuite {
     * label keys, __name__ + component folded in, integral doubles as
     * integers) so the server's rendering is PINNED, not self-compared.
     */
-  private def expectedEntries(df: DataFrame, valueKey: String): Seq[String] = {
-    def fmt(v: Double): String =
+  private def expectedEntries(df: DataFrame, valueKey: String): Seq[String] =
+    df.collect().toSeq.map { r =>
+      s"""{"metric":${metricOf(r.getString(0), r.getString(1),
+        r.getMap[String, String](2).toMap)},"$valueKey":${
+        pointOf(r.getLong(3), r.getDouble(4))}}"""
+    }
+
+  /** [[expectedEntries]]' matrix twin: one entry per series over a
+    * `(component, name, labels, win_start, value)` frame, its points in
+    * time order, the entries in the server's deterministic order — by
+    * the (component, name, key-sorted labels) identity's string form.
+    */
+  private def expectedMatrix(df: DataFrame): Seq[String] =
+    df.collect().toSeq
+      .groupBy(r => (r.getString(0), r.getString(1),
+        r.getMap[String, String](2).toSeq.sortBy(_._1)))
+      .toSeq.sortBy(_._1.toString)
+      .map { case ((component, name, labels), rows) =>
+        s"""{"metric":${metricOf(component, name, labels.toMap)},"values":${
+          rows.sortBy(_.getLong(3)).map(r => pointOf(r.getLong(3), r.getDouble(4)))
+            .mkString("[", ",", "]")}}"""
+      }
+
+  private def metricOf(
+      component: String, name: String, labels: Map[String, String]): String = {
+    val all =
+      (if (name.isEmpty) Map.empty[String, String] else Map("__name__" -> name)) ++
+        Map("component" -> component) ++ labels
+    all.toSeq.sortBy(_._1)
+      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
+  }
+
+  private def pointOf(t: Long, v: Double): String = {
+    val fmt =
       if (v.isNaN) "NaN"
       else if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString
       else v.toString
-    df.collect().toSeq.map { r =>
-      val labels =
-        (if (r.getString(1).isEmpty) Map.empty[String, String]
-         else Map("__name__" -> r.getString(1))) ++
-          Map("component" -> r.getString(0)) ++ r.getMap[String, String](2)
-      val metric = labels.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-      s"""{"metric":$metric,"$valueKey":[${r.getLong(3)},"${fmt(r.getDouble(4))}"]}"""
-    }
+    s"""[$t,"$fmt"]"""
   }
 
   test("instant query over HTTP == compileInstantVector, wire-exact") {
-    val server = PromQlHttp.startQueryServer(
-      () => Versioned.latest(spark, root))
+    val server = PromQlHttp.startLandingServer(spark, root)
     try {
       val port = server.getAddress.getPort
       val q = "sum by (user) (increase(view_total[2d]))"
@@ -100,8 +125,7 @@ class PromQlHttpSpec extends SparkSuite {
   }
 
   test("query_range over HTTP == the point-grid compile (default), grid mode behind mode=grid") {
-    val server = PromQlHttp.startQueryServer(
-      () => Versioned.latest(spark, root))
+    val server = PromQlHttp.startLandingServer(spark, root)
     try {
       val port = server.getAddress.getPort
       val q = "sum by (user) (view_total)"
@@ -146,29 +170,26 @@ class PromQlHttpSpec extends SparkSuite {
         val entry = body.split("""\{"metric":""").find(_.contains(s""""user":"$user""""))
         assert(entry.exists(_.contains(pair)), s"user=$user missing $pair")
       }
-    } finally server.stop(0)
-  }
-
-  test("the landing server (pruned reads) answers byte-identically to the plain server") {
-    val plain = PromQlHttp.startQueryServer(() => Versioned.latest(spark, root))
-    val landing = PromQlHttp.startLandingServer(spark, root)
-    try {
-      val (p1, p2) = (plain.getAddress.getPort, landing.getAddress.getPort)
-      // instant (prunable: window-interior increase) and range
-      // (prunable window-local shape + the unprunable lag fallback)
-      val urls = Seq(
-        s"/api/v1/query?query=${enc("sum by (user) (increase(view_total[2d]))")}&time=$tMax",
-        s"/api/v1/query_range?query=${enc("sum by (user) (sum_over_time(view_total[1d]))")}" +
-          s"&start=${tMax - 7 * 86400}&end=$tMax&step=1d",
-        s"/api/v1/query_range?query=${enc("increase(view_total[1d])")}" +
-          s"&start=${tMax - 2 * 86400}&end=$tMax&step=1d")
-      urls.foreach { u =>
-        val (ca, a) = get(p1, u); val (cb, b) = get(p2, u)
-        assert(ca === 200 && cb === 200, u)
-        assert(a === b, u)
-        assert(a.contains("\"result\":[{"), s"empty result for $u")
+      // the landing server prunes each request's scan to its span: the
+      // window-local sum_over_time reads only the span's files, the
+      // increase falls back to a full read — both equal the unpruned
+      // compile, byte for byte
+      Seq(
+        ("sum by (user) (sum_over_time(view_total[1d]))", tMax - 7 * 86400L),
+        ("increase(view_total[1d])", tMax - 2 * 86400L)).foreach {
+        case (pq, pStart) =>
+          val (pc, pBody) = get(port, s"/api/v1/query_range?query=${enc(pq)}" +
+            s"&start=$pStart&end=$tMax&step=1d")
+          assert(pc === 200, pq)
+          val want = expectedMatrix(PromQl.compileRangeVector(
+            pq, Versioned.latest(spark, root), pStart, tMax, 86400L)
+            .select("component", "name", "labels", "win_start", "value"))
+          assert(want.nonEmpty, pq)
+          assert(pBody ===
+            s"""{"status":"success","data":{"resultType":"matrix","result":[${
+              want.mkString(",")}]}}""", pq)
       }
-    } finally { plain.stop(0); landing.stop(0) }
+    } finally server.stop(0)
   }
 
   test("metadata endpoints: labels, label values, series — match[]-filtered") {
@@ -201,6 +222,21 @@ class PromQlHttpSpec extends SparkSuite {
           s"""{"__name__":"view_total","component":"app","user":"$u"}""")
       assert(series ===
         s"""{"status":"success","data":[${want.mkString(",")}]}""")
+      // half-bounded spans: the missing side is open, like Prometheus
+      Seq(
+        s"start=$t0" -> (col("timestamp") >= t0),
+        s"end=$t0" -> (col("timestamp") <= t0)).foreach { case (span, inSpan) =>
+        val (ch, half) = get(port,
+          s"/api/v1/series?match[]=${enc("view_total")}&$span")
+        assert(ch === 200, span)
+        val users = metrics.filter(col("name") === "view_total" && inSpan)
+          .select(expr("try_element_at(labels, 'user')").as("u"))
+          .distinct().collect().map(_.getString(0)).sorted
+        assert(users.nonEmpty, span)
+        assert(half === s"""{"status":"success","data":[${users.map(u =>
+          s"""{"__name__":"view_total","component":"app","user":"$u"}""")
+          .mkString(",")}]}""", span)
+      }
       // series without match[] is a bad_data error, like Prometheus
       assert(get(port, "/api/v1/series")._1 === 400)
       // a non-selector match[] is refused
@@ -984,8 +1020,7 @@ class PromQlHttpSpec extends SparkSuite {
   }
 
   test("the limit param caps the series count with Prometheus's warning") {
-    val server = PromQlHttp.startQueryServer(
-      () => Versioned.latest(spark, root))
+    val server = PromQlHttp.startLandingServer(spark, root)
     try {
       val port = server.getAddress.getPort
       val q = enc("sum by (user) (view_total)")
@@ -1022,8 +1057,7 @@ class PromQlHttpSpec extends SparkSuite {
   }
 
   test("malformed expressions get Prometheus's bad_data envelope") {
-    val server = PromQlHttp.startQueryServer(
-      () => Versioned.latest(spark, root))
+    val server = PromQlHttp.startLandingServer(spark, root)
     try {
       val port = server.getAddress.getPort
       val (code, body) = get(port, s"/api/v1/query?query=${enc("sum by (")}")
