@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{BpeCount, CosineSim, EvalTime, Exp2Bucket, GraftBridge, MaxByTsId, Md5Prefix60, MinHashSig, PolyFingerprint, SimHash64}
+import org.apache.spark.sql.graft.{BpeCount, CosineSim, DropMapKeys, EvalTime, Exp2Bucket, GraftBridge, MaxByTsId, Md5Prefix60, MinHashSig, PolyFingerprint, SeriesKey, SimHash64}
 
 /** Column-API and SQL registration for graft's custom Catalyst expressions. */
 object GraftFunctions {
@@ -78,18 +78,24 @@ object GraftFunctions {
     ("poly_fingerprint", "polynomial rolling fingerprint of a string",
       { case Seq(s) => PolyFingerprint(s) }),
     ("md5_prefix60", "first 60 bits of md5(s) as a long",
-      { case Seq(s) => Md5Prefix60(s) }))
+      { case Seq(s) => Md5Prefix60(s) }),
+    ("series_key", "canonical series key of a map<string,string> of labels",
+      { case Seq(m) => SeriesKey(m) }),
+    ("drop_map_keys", "the map without the entries whose key is one of the literal keys",
+      { case m +: keys if keys.forall(_.foldable) =>
+          DropMapKeys(m, keys.map(k => String.valueOf(k.eval()))) }))
 
-  /** Idempotently register the functions on an existing session (the driver
-    * builds its own plain sessions, so extensions aren't always available).
+  /** Idempotently register the functions on an existing session
+    * (`graft.Verify` and `graft.Bench` build plain sessions, so extensions
+    * aren't always available); a name the session already has is left as
+    * it is.
     */
   def register(spark: SparkSession): Unit = {
     val fr = spark.sessionState.functionRegistry
     registry.foreach { case (name, usage, builder) =>
-      fr.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name, usage),
-        builder)
+      val id = FunctionIdentifier(name)
+      if (!fr.functionExists(id))
+        fr.registerFunction(id, new ExpressionInfo("graft.functions", name, usage), builder)
     }
   }
 

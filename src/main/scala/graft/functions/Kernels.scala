@@ -1,8 +1,19 @@
 package graft.functions
 
+import java.io.{ByteArrayInputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.JsonParser.NumberType
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, FailureSafeParser, GenericArrayData, MapData, PermissiveMode}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernels shared by interpreted eval and generated code. Keeping the
@@ -469,5 +480,273 @@ object Kernels {
       Array[Any](
         UTF8String.fromString(metric), UTF8String.fromString(sb.toString),
         value.get, if (tsNull) null else java.lang.Long.valueOf(ts)))
+  }
+
+  // ---- firehose metric JSON and series keys ---------------------------
+
+  /** One firehose JSON line decoded into the seven-field metric struct,
+    * row for row what `from_json(line, FirehoseMetric.schema)` returns
+    * under the session's defaults (null for a blank line, a row of nulls
+    * for a line that does not parse, a partial row when a field does not
+    * fit its type). The reference decodes each record once with
+    * Jackson (AbstractFirehose.java:100-107); so does this.
+    *
+    * A line whose fields all have their expected token types (strings,
+    * integers in range, numbers, a map of strings, a window of integers,
+    * or nulls; unknown fields skipped) decodes in one pass of Jackson's
+    * byte parser over its UTF-8 bytes. Any other line, and any line a
+    * Jackson error stops, is decoded again by `from_json`'s own parser:
+    * Spark's `JacksonParser` behind its permissive `FailureSafeParser`,
+    * over a UTF-8 reader, so raw text for a non-string token, partial
+    * results, a repeated field, overflow and invalid UTF-8 all come out as
+    * `from_json` writes them. A NUL or a byte-order mark in the first four
+    * bytes could make the byte parser's bootstrapper pick another
+    * encoding, so such a line goes to the reader at once.
+    */
+  def metricJson(line: UTF8String, decoder: MetricJsonDecoder): InternalRow = {
+    val n = line.numBytes
+    val (bytes, off) = line.getBaseObject match {
+      case a: Array[Byte] => (a, (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt)
+      case _ => (line.getBytes, 0)
+    }
+    var bootstrapSafe = n > 0
+    var i = 0
+    while (bootstrapSafe && i < 4 && i < n) {
+      val b = bytes(off + i)
+      if (b == 0 || (i == 0 && (b == 0xEF.toByte || b == 0xFE.toByte || b == 0xFF.toByte)))
+        bootstrapSafe = false
+      i += 1
+    }
+    val fast =
+      if (!bootstrapSafe) null
+      else {
+        val p = decoder.factory.createParser(bytes, off, n)
+        try metricJsonFast(p)
+        catch { case _: Exception => null }
+        finally p.close()
+      }
+    if (fast != null) fast else decoder.viaReader(line)
+  }
+
+  private val MetricFields = Array("id", "name", "timestamp", "component", "tags", "value", "window")
+  private val WindowFields = Array("from", "to", "interval")
+
+  private def fieldIndex(fields: Array[String], name: String): Int = {
+    var i = 0
+    while (i < fields.length && fields(i) != name) i += 1
+    if (i < fields.length) i else -1
+  }
+
+  /** The one-pass decode; null hands the line to the reader path. */
+  private def metricJsonFast(p: JsonParser): InternalRow = {
+    if (p.nextToken() != JsonToken.START_OBJECT) return null
+    val row = new GenericInternalRow(MetricFields.length)
+    var seen = 0
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val i = fieldIndex(MetricFields, p.currentName())
+      val t = p.nextToken()
+      if (i < 0) p.skipChildren()
+      else {
+        if ((seen & (1 << i)) != 0) return null
+        seen |= 1 << i
+        if (t != JsonToken.VALUE_NULL) {
+          val v: Any = i match {
+            case 0 | 1 | 3 =>
+              if (t == JsonToken.VALUE_STRING) UTF8String.fromString(p.getText) else null
+            case 2 => longOf(p, t)
+            case 4 => if (t == JsonToken.START_OBJECT) stringMap(p) else null
+            case 5 =>
+              if (t == JsonToken.VALUE_NUMBER_INT || t == JsonToken.VALUE_NUMBER_FLOAT) p.getDoubleValue
+              else null
+            case _ => if (t == JsonToken.START_OBJECT) window(p) else null
+          }
+          if (v == null) return null
+          row.update(i, v)
+        }
+      }
+    }
+    if (p.currentToken() == JsonToken.END_OBJECT) row else null
+  }
+
+  private def longOf(p: JsonParser, t: JsonToken): Any =
+    if (t != JsonToken.VALUE_NUMBER_INT) null
+    else p.getNumberType match {
+      case NumberType.INT | NumberType.LONG => p.getLongValue
+      case _ => null
+    }
+
+  /** A `map<string,string>` of string or null values, a repeated key kept
+    * as `from_json` keeps it; null (reader path) on any other value token.
+    */
+  private def stringMap(p: JsonParser): MapData = {
+    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val values = scala.collection.mutable.ArrayBuffer.empty[Any]
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      keys += UTF8String.fromString(p.currentName())
+      p.nextToken() match {
+        case JsonToken.VALUE_STRING => values += UTF8String.fromString(p.getText)
+        case JsonToken.VALUE_NULL => values += null
+        case _ => return null
+      }
+    }
+    new ArrayBasedMapData(new GenericArrayData(keys.toArray), new GenericArrayData(values.toArray))
+  }
+
+  /** The `window` struct of integers or nulls; unknown fields skipped. */
+  private def window(p: JsonParser): InternalRow = {
+    val w = new GenericInternalRow(WindowFields.length)
+    var seen = 0
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val i = fieldIndex(WindowFields, p.currentName())
+      val t = p.nextToken()
+      if (i < 0) p.skipChildren()
+      else {
+        if ((seen & (1 << i)) != 0) return null
+        seen |= 1 << i
+        if (t != JsonToken.VALUE_NULL) {
+          val v: Any =
+            if (i < 2) longOf(p, t)
+            else if (t == JsonToken.VALUE_NUMBER_INT && p.getNumberType == NumberType.INT) p.getIntValue
+            else null
+          if (v == null) return null
+          w.update(i, v)
+        }
+      }
+    }
+    w
+  }
+
+  /** `map_filter(labels, (k, _) -> k NOT IN drop)`: the map without the
+    * entries whose key is in `drop`, the rest in their order. The input
+    * map itself when no key is dropped.
+    */
+  def dropKeys(labels: MapData, drop: Array[UTF8String]): MapData = {
+    val n = labels.numElements()
+    val keys = labels.keyArray()
+    val keep = new Array[Boolean](n)
+    var kept = 0
+    var i = 0
+    while (i < n) {
+      val k = keys.getUTF8String(i)
+      var j = 0
+      while (j < drop.length && drop(j) != k) j += 1
+      keep(i) = j == drop.length
+      if (keep(i)) kept += 1
+      i += 1
+    }
+    if (kept == n) return labels
+    val values = labels.valueArray()
+    val ks = new Array[Any](kept)
+    val vs = new Array[Any](kept)
+    var o = 0
+    i = 0
+    while (i < n) {
+      if (keep(i)) {
+        ks(o) = keys.getUTF8String(i)
+        vs(o) = if (values.isNullAt(i)) null else values.getUTF8String(i)
+        o += 1
+      }
+      i += 1
+    }
+    new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
+  }
+
+  private def escapedLen(s: UTF8String): Int = {
+    var n = s.numBytes
+    var i = 0
+    while (i < s.numBytes) {
+      val b = s.getByte(i)
+      if (b == '\\' || b == '=' || b == ',') n += 1
+      i += 1
+    }
+    n
+  }
+
+  private def putEscaped(s: UTF8String, out: Array[Byte], at: Int): Int = {
+    var o = at
+    var i = 0
+    while (i < s.numBytes) {
+      val b = s.getByte(i)
+      if (b == '\\' || b == '=' || b == ',') { out(o) = '\\'; o += 1 }
+      out(o) = b
+      o += 1
+      i += 1
+    }
+    o
+  }
+
+  /** The canonical series key of a label map: its entries sorted by
+    * (key, value) in UTF-8 byte order, each rendered `k=v` with `\`, `=`
+    * and `,` escaped by a `\`, joined by `,`. An entry with a null value
+    * is left out; an empty map gives "". Byte for byte the key of
+    * `array_join(transform(array_sort(map_entries(labels)), ...), ',')`,
+    * the spelling [[graft.operators.Firehose.parseSeriesKey]] inverts.
+    */
+  def seriesKey(labels: MapData): UTF8String = {
+    val n = labels.numElements()
+    val keys = labels.keyArray()
+    val values = labels.valueArray()
+    val ks = new Array[UTF8String](n)
+    val vs = new Array[UTF8String](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!values.isNullAt(i)) {
+        ks(m) = keys.getUTF8String(i)
+        vs(m) = values.getUTF8String(i)
+        m += 1
+      }
+      i += 1
+    }
+    if (m == 0) return UTF8String.EMPTY_UTF8
+    val order = Array.range(0, m)
+    scala.util.Sorting.stableSort(order, (x: Int, y: Int) => {
+      val c = ks(x).compareTo(ks(y))
+      c < 0 || (c == 0 && vs(x).compareTo(vs(y)) < 0)
+    })
+    var len = m * 2 - 1
+    i = 0
+    while (i < m) { len += escapedLen(ks(i)) + escapedLen(vs(i)); i += 1 }
+    val out = new Array[Byte](len)
+    var o = 0
+    i = 0
+    while (i < m) {
+      if (i > 0) { out(o) = ','; o += 1 }
+      o = putEscaped(ks(order(i)), out, o)
+      out(o) = '='
+      o = putEscaped(vs(order(i)), out, o + 1)
+      i += 1
+    }
+    UTF8String.fromBytes(out)
+  }
+}
+
+/** The per-task state of [[Kernels.metricJson]]: the Jackson factory
+  * Spark's `JSONOptions` builds for `from_json` under the session's
+  * defaults, and `from_json`'s parser over a UTF-8 reader for the lines the
+  * one-pass decode hands back. Built lazily where it runs, as Spark builds
+  * `from_json`'s, so the session conf it reads is the task's.
+  */
+final class MetricJsonDecoder(schema: StructType) extends Serializable {
+
+  @transient private lazy val options = new JSONOptions(
+    Map.empty[String, String], SQLConf.get.sessionLocalTimeZone,
+    SQLConf.get.columnNameOfCorruptRecord)
+
+  @transient lazy val factory: JsonFactory = options.buildJsonFactory()
+
+  @transient private lazy val reader: FailureSafeParser[UTF8String] = {
+    val jackson = new JacksonParser(schema, options, false, Nil)
+    val viaReader = (f: JsonFactory, s: UTF8String) =>
+      f.createParser(new InputStreamReader(
+        new ByteArrayInputStream(s.getBytes), StandardCharsets.UTF_8))
+    new FailureSafeParser[UTF8String](
+      s => jackson.parse(s, viaReader, identity[UTF8String]),
+      PermissiveMode, schema, options.columnNameOfCorruptRecord)
+  }
+
+  def viaReader(line: UTF8String): InternalRow = {
+    val rows = reader.parse(line)
+    if (rows.hasNext) rows.next() else null
   }
 }

@@ -39,9 +39,11 @@ object FirehoseMetric {
   /** Tag keys excluded from Prometheus labels (FirehoseMetric.java:14-18). */
   val filteredTags: Set[String] = Set("unit")
 
-  /** Catalyst schema of the metric JSON — used by `from_json` so that
-    * deserialization is a codegen'd expression, not a per-row Jackson call
-    * (reference: AbstractFirehose.java:100-107).
+  /** Catalyst schema of the metric JSON. Its all-nullable form is the
+    * struct the decode kernel
+    * ([[org.apache.spark.sql.graft.MetricJsonDecode]]) writes per line, as
+    * `from_json` with this schema would (reference:
+    * AbstractFirehose.java:100-107).
     */
   val schema: StructType = Encoders.product[FirehoseMetric].schema
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{DropMapKeys, GraftBridge, SeriesKey}
 
 import graft.Tables
 import graft.functions.IeeeLanes
@@ -86,14 +87,19 @@ object Firehose {
       strict = false) // self-generated JSON cannot be malformed
 
   /** Reference FirehoseMetric.java:66-75: drop filtered tag keys ("unit")
-    * from the label map. Pure codegen'd map expression.
+    * from the label map, the other entries in their order. One codegen'd
+    * kernel call per row ([[org.apache.spark.sql.graft.DropMapKeys]]), the
+    * output of `map_filter(tags, (k, _) -> k NOT IN filtered)` without its
+    * interpreted lambda.
     */
-  def tagFilter(metrics: DataFrame, filtered: Set[String] = FirehoseMetric.filteredTags): DataFrame = {
-    val filteredArr = array(filtered.toSeq.map(lit): _*)
-    metrics.withColumn(
-      "labels",
-      map_filter(col("tags"), (k, _) => !array_contains(filteredArr, k)))
-  }
+  def tagFilter(metrics: DataFrame, filtered: Set[String] = FirehoseMetric.filteredTags): DataFrame =
+    metrics.withColumn("labels", dropKeys(col("tags"), filtered))
+
+  /** The label map without the entries whose key is in `keys`, the rest in
+    * their order ([[org.apache.spark.sql.graft.DropMapKeys]]).
+    */
+  def dropKeys(labels: Column, keys: Set[String]): Column =
+    GraftBridge.column(DropMapKeys(GraftBridge.expression(labels), keys.toSeq.sorted))
 
   /** The series-key FORMAT generation this engine writes and reads —
     * bumped whenever the canonical series identity changes spelling
@@ -115,40 +121,25 @@ object Firehose {
     * series key (`{k:"a", b:"c"}` vs `{k:"a,b=c"}` collided under the
     * unescaped render — r15 verdict finding #1). A no-op on label text
     * free of the three metacharacters, so the classic corpus's keys are
-    * unchanged. Pure codegen (literal `replace` chain).
-    */
-  def escapeSeriesPart(c: Column): Column =
-    replace(
-      replace(
-        replace(c, lit("\\"), lit("\\\\")),
-        lit("="), lit("\\=")),
-      lit(","), lit("\\,"))
-
-  /** [[escapeSeriesPart]]'s driver-side twin — literal replacement, the
-    * same semantics as the codegen chain (spec-pinned via the registry
-    * render parity suite).
+    * unchanged. [[seriesKey]]'s kernel applies the same escape to bytes.
     */
   def escapeSeriesPartStr(s: String): String =
     s.replace("\\", "\\\\").replace("=", "\\=").replace(",", "\\,")
 
-  /** Canonical series identity: sorted `k=v` rendering of the label map,
-    * keys and values [[escapeSeriesPart]]-escaped so the rendering is
-    * injective over label maps. Spark cannot group by MapType; this is
-    * the Prometheus label-tuple identity as an orderable string, and
-    * it's a pure codegen expression.
+  /** Canonical series identity: the label map's entries sorted by (key,
+    * value) in UTF-8 byte order, rendered `k=v` with keys and values
+    * [[escapeSeriesPartStr]]-escaped so the rendering is injective over
+    * label maps, joined by `,`; a null-valued entry is left out. Spark
+    * cannot group by MapType; this is the Prometheus label-tuple identity
+    * as an orderable string. One codegen'd kernel call per row
+    * ([[org.apache.spark.sql.graft.SeriesKey]]).
     */
   def seriesKey(labels: Column): Column =
-    array_join(
-      transform(
-        array_sort(map_entries(labels)),
-        e => concat(
-          escapeSeriesPart(e.getField("key")), lit("="),
-          escapeSeriesPart(e.getField("value")))),
-      ",")
+    GraftBridge.column(SeriesKey(GraftBridge.expression(labels)))
 
   /** A series key back to its label PAIRS (in key order — the order
     * [[seriesKey]] rendered them): split on unescaped `,` / `=`, undo
-    * [[escapeSeriesPart]]. Driver/executor-side Scala (a linear scan —
+    * [[escapeSeriesPartStr]]. Driver/executor-side Scala (a linear scan —
     * a regex cannot split on "comma after an even backslash run" with
     * unbounded lookbehind); used by sinks that carry only the key
     * (e.g. the streaming exposition sink's state output).

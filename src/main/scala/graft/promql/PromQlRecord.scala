@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.sources.{Ivm, MaterializedView, Versioned}
 
 /** INCREMENTAL recording rules — a PromQL `record` rule maintained as a
@@ -111,38 +112,23 @@ object PromQlRecord {
   private def labelValSql(label: String): String =
     s"coalesce(try_element_at(labels, ${sqlStr(label)}), '')"
 
-  /** [[graft.operators.Firehose.escapeSeriesPart]] in SQL text: the
-    * same literal `replace` chain (`\`→`\\`, `=`→`\=`, `,`→`\,`) —
-    * Spark SQL string literals process backslash escapes, hence the
-    * doubling. Keeps the recorded key injective over label maps,
-    * in lockstep with the engine-wide identity.
+  /** [[graft.operators.Firehose.seriesKey]] in SQL text: the same
+    * kernel, registered as `series_key`, as a deterministic computed
+    * column.
     */
-  private def escSeriesSql(part: String): String =
-    "replace(replace(replace(" + part +
-      ", '\\\\', '\\\\\\\\'), '=', '\\\\='), ',', '\\\\,')"
-
-  /** [[graft.operators.Firehose.seriesKey]] in SQL text — the identical
-    * sorted, escaped `k=v` rendering, as a deterministic computed column.
-    */
-  private val seriesKeySql: String =
-    "array_join(transform(array_sort(map_entries(labels)), " +
-      s"e -> concat(${escSeriesSql("e.key")}, '=', " +
-      s"${escSeriesSql("e.value")})), ',')"
+  private val seriesKeySql: String = "series_key(labels)"
 
   /** The RECORDED series key under static rule labels, in SQL text: the
-    * batch evaluator's m58 merge (`map_concat(map_filter(labels, rule
-    * keys out), static)` — rule wins, Prometheus's merge) rendered
-    * through the canonical series key. A deterministic per-row function
-    * of `labels`, so it rides the view as a computed column.
+    * batch evaluator's m58 merge (the labels without the rule's keys,
+    * `map_concat` the static labels — rule wins, Prometheus's merge)
+    * rendered through the canonical series key. A deterministic per-row
+    * function of `labels`, so it rides the view as a computed column.
     */
   private def mergedSeriesSql(static: Map[String, String]): String = {
     val keys = static.keys.toSeq.sorted.map(sqlStr).mkString(", ")
     val kvs = static.toSeq.sortBy(_._1)
       .flatMap { case (k, v) => Seq(sqlStr(k), sqlStr(v)) }.mkString(", ")
-    "array_join(transform(array_sort(map_entries(map_concat(" +
-      s"map_filter(labels, (k, v) -> k not in ($keys)), map($kvs)))), " +
-      s"e -> concat(${escSeriesSql("e.key")}, '=', " +
-      s"${escSeriesSql("e.value")})), ',')"
+    s"series_key(map_concat(drop_map_keys(labels, $keys), map($kvs)))"
   }
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -495,9 +481,12 @@ object PromQlRecord {
         p("cr.sourceRoot"), p("cr.sourceVersion").toLong)
     }
 
-    private def staticExtra(c: LoweredCounter): Seq[Column] =
+    private def staticExtra(spark: SparkSession, c: LoweredCounter): Seq[Column] =
       if (c.static.isEmpty) Nil
-      else Seq(expr(mergedSeriesSql(c.static)).as("_rseries"))
+      else {
+        GraftFunctions.register(spark)
+        Seq(expr(mergedSeriesSql(c.static)).as("_rseries"))
+      }
 
     private def winGroup(c: LoweredCounter): Seq[Column] =
       Seq(col("component"), col("name"), col("series")) ++
@@ -613,7 +602,7 @@ object PromQlRecord {
       val srcV = Versioned.latestVersion(sourceRoot)
       require(srcV >= 0, s"no committed versions in $sourceRoot")
       val src = normalized(Versioned.asOf(spark, sourceRoot, srcV), c.where,
-        extra = staticExtra(c))
+        extra = staticExtra(spark, c))
       val incs = src
         .withColumn("_inc", incOf(lag(col("value"), 1).over(lagWin)))
         .withColumn("win_start",
@@ -639,7 +628,7 @@ object PromQlRecord {
       try {
         val span = normalized(
           Versioned.changesBetween(spark, sourceRoot, srcV, vNow), c.where,
-          extra = staticExtra(c) :+
+          extra = staticExtra(spark, c) :+
             when(col("_change_type") === "insert", lit(1))
               .otherwise(lit(-1)).as("_sign"))
         // net multiplicity per sample: a compact's delete+insert of the

@@ -299,10 +299,7 @@ object PromQlRules {
         // Prometheus's merge) and become part of the series identity
         val labelsCol =
           if (static.isEmpty) col("labels")
-          else map_concat(
-            map_filter(col("labels"),
-              (k, _) => !k.isin(static.keys.toSeq: _*)),
-            typedLit(static))
+          else map_concat(Firehose.dropKeys(col("labels"), static.keys.toSet), typedLit(static))
         val recorded = compileOne(expr).select(
           col("component"), lit(name).as("name"), labelsCol.as("labels"),
           col("win_start").as("timestamp"), lit("").as("id"), col("value"))

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** Incrementally-maintained GROUP BY aggregates over a [[Versioned]]
   * table — the materialized-view shape (Delta Live Tables / Materialize /
   * the IVM literature): the view holds `cnt` + exact decimal `sum_<c>`
@@ -100,6 +102,9 @@ object MaterializedView {
     * apply before WHERE, so the predicate may reference them.
     */
   private def filtered(df: DataFrame, d: Def): DataFrame = {
+    // computed columns may call graft's SQL functions (a recording rule's
+    // series key is `series_key(labels)`), on a session graft did not build
+    if (d.exprCols.nonEmpty) GraftFunctions.register(df.sparkSession)
     val derived = d.exprCols.foldLeft(df) {
       case (acc, (n, sql)) => acc.withColumn(n, expr(sql))
     }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{GraftBridge, MetricJsonDecode}
 
 import graft.model.FirehoseMetric
 
@@ -9,9 +10,12 @@ import graft.model.FirehoseMetric
   *
   * Reference parity: AbstractFirehose.java:100-107 parses each Kafka record
   * with Jackson and silently skips malformed records
-  * (AbstractFirehose.java:118-126 catches and logs). Here the whole batch is
-  * parsed by one `from_json` decode per line; malformed rows null-out and
-  * are dropped, giving the same skip semantics without a per-record
+  * (AbstractFirehose.java:118-126 catches and logs). Here each line is
+  * decoded once by a codegen'd kernel
+  * ([[org.apache.spark.sql.graft.MetricJsonDecode]], one pass of Jackson's
+  * byte parser) that writes the struct `from_json(line,
+  * FirehoseMetric.schema)` would write; malformed rows null-out and are
+  * dropped, giving the same skip semantics without a per-record
   * interpreter loop.
   */
 object MetricJson {
@@ -21,18 +25,19 @@ object MetricJson {
     *
     * `strict = true` (default for external input) drops malformed rows:
     * lines that do not parse, or parse without an `id` or a `name`. Each
-    * line is decoded once. The parsed struct leaves through a generator,
+    * line is decoded once. The decoded struct leaves through a generator,
     * `inline` of a one-element array for a well-formed row and of null
     * (no row) otherwise: the optimizer pushes no filter below a generator,
     * so the check reads the one decoded struct. A plain `filter` on the
-    * parsed columns is pushed below the parse with `from_json` inlined
+    * parsed columns is pushed below the decode with the decode inlined
     * into it, decoding every line again for each field it reads; on Spark
     * 4.1 a nondeterministic disjunct such as `uuid() = ''` does not hold
     * it above. Set `strict = false` for trusted in-engine input where
     * malformed rows are impossible.
     */
   def parse(lines: DataFrame, jsonCol: String = "value", strict: Boolean = true): DataFrame = {
-    val decoded = lines.select(from_json(col(jsonCol), FirehoseMetric.schema).as("_metric"))
+    val decoded = lines.select(
+      GraftBridge.column(MetricJsonDecode(GraftBridge.expression(col(jsonCol)))).as("_metric"))
     val m = col("_metric")
     if (strict)
       decoded.select(inline(when(m("id").isNotNull && m("name").isNotNull, array(m))))

@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryException}
 
@@ -29,8 +28,9 @@ case class GaugeOut(
   * re-expressed as an incremental query.
   *
   *  - Kafka poll loop → `readStream` (Kafka or file/memory source)
-  *  - per-record Jackson parse → the same `MetricJson.parse` expression the
-  *    batch path uses
+  *  - per-record Jackson parse → the same `MetricJson.parse` decode kernel
+  *    the batch path uses (one Jackson pass per line, codegen'd), then the
+  *    codegen'd tag-filter and series-key kernels
   *  - `Gauge.set` per series → `flatMapGroupsWithState` latest-value state
   *  - Guava cache 10-min idle eviction (AbstractPrometheusFirehose.java:19-29)
   *    → `EventTimeTimeout` on the group state. The gauge query runs one
@@ -152,7 +152,7 @@ object FirehoseStream {
 
   private val NoDataBatchesKey = "spark.sql.streaming.noDataMicroBatches.enabled"
   private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-  private val FileSystemCheckpointManager = classOf[FileSystemBasedCheckpointFileManager].getName
+  private val LocalCheckpointManager = classOf[LocalCheckpointFileManager].getName
   private val gaugeStartLock = new Object
   private val InitWaitMs = 60000L
 
@@ -164,17 +164,18 @@ object FirehoseStream {
     *    emits nothing, yet it pays a whole epoch (offset log, state-store
     *    commits, commit log, an empty sink call). Without it each input
     *    costs one batch.
-    *  - On a local (`file:`) checkpoint, Spark's
-    *    `FileSystemBasedCheckpointFileManager` for the offset and commit
-    *    logs, the file source's log and the state store. Spark ships no
-    *    native Hadoop library, so its default `FileContext` manager shells
-    *    out on the local filesystem: every `rename` forks `readlink` for
-    *    the file and again for its `.crc`, about 90 forks per input and
-    *    most of the state commit. The `FileSystem` manager renames with the
-    *    same one `rename(2)` and keeps both checksum layers (Spark's
-    *    `N.delta.crc`, Hadoop's `.N.delta.crc`), so a checkpoint written
-    *    under either manager restarts under the other. A checkpoint on any
-    *    other filesystem keeps Spark's default manager.
+    *  - On a local (`file:`) checkpoint, [[LocalCheckpointFileManager]]
+    *    (Spark's `FileSystemBasedCheckpointFileManager` with files and
+    *    directories created without a `chmod` fork) for the offset and
+    *    commit logs, the file source's log and the state store. Spark ships
+    *    no native Hadoop library, so its default `FileContext` manager
+    *    shells out on the local filesystem: every `rename` forks `readlink`
+    *    for the file and again for its `.crc`, about 90 forks per input and
+    *    most of the state commit. The `FileSystem` manager renames with the same one
+    *    `rename(2)` and keeps both checksum layers (Spark's `N.delta.crc`,
+    *    Hadoop's `.N.delta.crc`), so a checkpoint written under either
+    *    manager restarts under the other. A checkpoint on any other
+    *    filesystem keeps Spark's default manager.
     *
     * `start()` clones the session's SQL conf, so the settings reach this
     * query only: the caller's values (or their absence) are restored once
@@ -194,7 +195,7 @@ object FirehoseStream {
     val fs = new org.apache.hadoop.fs.Path(checkpointDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val scoped = Map(NoDataBatchesKey -> "false") ++
-      (if (fs.getUri.getScheme == "file") Map(CheckpointManagerKey -> FileSystemCheckpointManager)
+      (if (fs.getUri.getScheme == "file") Map(CheckpointManagerKey -> LocalCheckpointManager)
        else Map.empty)
     gaugeStartLock.synchronized {
       val conf = spark.conf

@@ -5,12 +5,14 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.Kernels
+import graft.functions.{Kernels, MetricJsonDecoder}
+import graft.model.FirehoseMetric
 
 /** graft's custom Catalyst expressions. They live under
   * `org.apache.spark.sql` because the expression-authoring surface
@@ -337,6 +339,94 @@ case class PromLineParse(child: Expression)
 
   override protected def withNewChildInternal(
       newChild: Expression): PromLineParse = copy(child = newChild)
+}
+
+/** Codegen'd decode of one firehose JSON line into the metric struct
+  * ([[graft.functions.Kernels.metricJson]]): the struct, nulls and raw
+  * text `from_json(line, FirehoseMetric.schema)` writes, from one pass of
+  * Jackson's byte parser per line instead of a reader per row. The
+  * decoder (Jackson factory and the reader path for odd lines) rides into
+  * the generated code as a reference object, built once per task.
+  */
+case class MetricJsonDecode(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = MetricJsonDecode.schema
+  override def nullable: Boolean = true
+  override def prettyName: String = "decode_metric_json"
+
+  @transient private lazy val decoder = new MetricJsonDecoder(MetricJsonDecode.schema)
+
+  override protected def nullSafeEval(line: Any): Any =
+    Kernels.metricJson(line.asInstanceOf[UTF8String], decoder)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val d = ctx.addReferenceObj("decoder", new MetricJsonDecoder(MetricJsonDecode.schema))
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.Kernels.metricJson($c, $d);
+      ${ev.isNull} = ${ev.value} == null;
+    """)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): MetricJsonDecode = copy(child = newChild)
+}
+
+object MetricJsonDecode {
+  /** `from_json`'s output type: the metric schema with every field nullable. */
+  val schema: StructType = FirehoseMetric.schema.asNullable
+}
+
+/** Input check of the label-map kernels: a `map<string,string>`. */
+private[graft] trait StringMapInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case MapType(StringType, StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs a map<string,string>, got ${other.catalogString}")
+  }
+}
+
+/** Codegen'd `map_filter(labels, (k, _) -> k NOT IN keys)`
+  * ([[graft.functions.Kernels.dropKeys]]): the tag filter without a
+  * lambda, which Spark evaluates outside whole-stage codegen.
+  */
+case class DropMapKeys(child: Expression, keys: Seq[String]) extends StringMapInput {
+
+  override def dataType: DataType = child.dataType
+  override def prettyName: String = "drop_map_keys"
+
+  @transient private lazy val dropped: Array[UTF8String] =
+    keys.map(UTF8String.fromString).toArray
+
+  override protected def nullSafeEval(labels: Any): Any =
+    Kernels.dropKeys(labels.asInstanceOf[MapData], dropped)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dropped", dropped, "org.apache.spark.unsafe.types.UTF8String[]")
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.dropKeys($c, $ref)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): DropMapKeys =
+    copy(child = newChild)
+}
+
+/** Codegen'd canonical series key of a label map
+  * ([[graft.functions.Kernels.seriesKey]]); null for a null map.
+  */
+case class SeriesKey(child: Expression) extends StringMapInput {
+
+  override def dataType: DataType = StringType
+  override def prettyName: String = "series_key"
+
+  override protected def nullSafeEval(labels: Any): Any =
+    Kernels.seriesKey(labels.asInstanceOf[MapData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.seriesKey($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): SeriesKey =
+    copy(child = newChild)
 }
 
 /** A PromQL evaluation time (unix seconds), bound into the generated

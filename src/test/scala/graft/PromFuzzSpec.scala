@@ -254,7 +254,8 @@ object PromFuzzSpec {
     * kernel, the DSv2 scanner).
     */
   def promParseRegex(lines: DataFrame): DataFrame = {
-    import Firehose.{PromGrammar, escapeSeriesPart}
+    import Firehose.PromGrammar
+    import SeriesKeySpec.escapeSeriesPart
     // one anchored match: optional metric (absent for the Prometheus 3.x
     // quoted-name form `{"my.metric",k="v"} 5`), optional {label block}
     // (greedy `.*` so the block extends to the LAST '}' — quoted values
